@@ -14,11 +14,19 @@ Every COLLECT_ALLOW entry either collects through this helper or is
 the helper itself; the lint treats direct ``bounded_collect(...)``
 call sites exactly like raw ``.collect()`` sites, so the allowlist
 stays a faithful audit of who materialises what.
+
+The opposite direction — driver rows back into a DataFrame — goes
+through :func:`local_frame`, the package's only ``createDataFrame``
+site (the static lint enforces it).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from collections.abc import Iterable, Sequence
+from datetime import datetime, timezone
+
+from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.types import StructType, TimestampType
 
 
 class CollectBoundExceeded(RuntimeError):
@@ -65,3 +73,37 @@ def bounded_collect(df: DataFrame, max_rows: int, site: str) -> list[Row]:
             "bound or re-audit the site"
         )
     return rows
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str | StructType
+) -> DataFrame:
+    """Driver-held control-plane rows as a DataFrame whose schema is
+    exactly ``ddl``. The rows reach the JVM as one Arrow table, so the
+    plan is a ``LocalTableScan``: collecting it runs no job, and no read
+    starts a Python worker — unlike ``createDataFrame(list, ddl)``'s
+    Python RDD (SCALING.md, per-job floor table). Naive datetimes keep
+    ``createDataFrame``'s meaning (process-local time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    width = len(schema.fields)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(
+            f"local_frame: row {bad!r} has {len(bad)} fields, schema has {width}"
+        )
+    cols = list(zip(*rows)) if rows else [()] * width
+    arrays = []
+    for field, col, atype in zip(schema.fields, cols, arrow_schema.types):
+        if isinstance(field.dataType, TimestampType):
+            col = [
+                v.astimezone(timezone.utc) if isinstance(v, datetime) else v
+                for v in col
+            ]
+        arrays.append(pa.array(col, type=atype))
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -21,13 +21,6 @@ def to_double_or_null(c: Column) -> Column:
     )
 
 
-def content_sha256(c: Column) -> Column:
-    """Distributed content hash (reference computes sha256 driver-side,
-    ``11_ingest_fpl_bootstrap.py:68-72``; the engine's form is
-    ``sha2(col, 256)`` executed JVM-side per row)."""
-    return F.sha2(c, 256)
-
-
 def micros(c: Column) -> Column:
     """Per-row quantisation to integer micro-units that is BIT-IDENTICAL
     across engines: ``floor(x·10⁶ + 0.5)`` uses only IEEE multiply/add/

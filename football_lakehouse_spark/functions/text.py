@@ -65,10 +65,6 @@ def re_tokens(text: Column) -> Column:
     return F.regexp_extract_all(F.lower(text), F.lit(TOKEN_RE), 0)
 
 
-def token_count(text: Column) -> Column:
-    return F.size(ws_tokens(text)).cast("bigint")
-
-
 def stopword_count(tokens: Column) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*STOPWORDS))).cast("bigint")
 
@@ -112,12 +108,6 @@ def portable_hash(c: Column, seed: str = "") -> Column:
     murmur3 for LSH banding / minhash)."""
     inp = F.concat(F.lit(seed), F.lit("§"), c) if seed else c
     return F.conv(F.substring(F.sha2(inp, 256), 1, 8), 16, 10).cast("bigint")
-
-
-def sql_portable_hash(expr: str, seed: str = "") -> str:
-    """DuckDB twin of :func:`portable_hash`."""
-    inp = f"'{seed}' || '§' || {expr}" if seed else expr
-    return f"CAST(('0x' || substr(sha256({inp}), 1, 8)) AS BIGINT)"
 
 
 def lang_scores(tokens: Column) -> dict[str, Column]:

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from football_lakehouse_spark.functions.guards import local_frame
+
 #: separator for multiplexing logical catalogs onto the session catalog
 _CAT_SEP = "__"
 
@@ -125,7 +127,7 @@ def smoke_roundtrip(spark: SparkSession, schema: str, location: str) -> DataFram
     out = bounded_collect(spark.sql(f"SELECT id, note FROM {t}"), 1,
                           "ddl.smoke_roundtrip")
     spark.sql(f"DROP TABLE {t}")
-    return spark.createDataFrame(out, "id int, note string")
+    return local_frame(spark, out, "id int, note string")
 
 
 def catalog_report(spark: SparkSession, schema: str) -> DataFrame:

@@ -68,6 +68,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.operators.merge import merge_upsert
 
 LOG_DIR = "_log"
@@ -1785,8 +1786,8 @@ class LakehouseTable:
                 if sj is not None:
                     from pyspark.sql.types import StructType
 
-                    return self.spark.createDataFrame(
-                        [], StructType.fromJson(json.loads(sj))
+                    return local_frame(
+                        self.spark, [], StructType.fromJson(json.loads(sj))
                     )
         paths = [os.path.join(self.data_root, f) for f in files]
         if not paths:

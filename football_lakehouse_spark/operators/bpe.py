@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.functions.text import ws_tokens
 
 
@@ -138,7 +139,8 @@ def bpe_merges(
     # winners are control-plane tuples — ONE local frame for all rounds
     # (r14; the per-round checkpoint + union form paid two extra jobs
     # per round)
-    return docs.sparkSession.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         out,
         "round int, left_sym string, right_sym string, "
         "merged string, pair_weight bigint",

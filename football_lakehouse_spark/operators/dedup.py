@@ -1,7 +1,9 @@
 """Deduplication operators for LLM training-data pipelines (north-star
 surface, BASELINE.json): exact, MinHash+LSH near-dup, SimHash, n-gram
 Jaccard. All pure DataFrame compositions — shuffles only on
-hash-distributed keys, no UDFs, no driver-side loops.
+hash-distributed keys, no UDFs. The one driver-side step is the
+union-find over the verified pair graph in :func:`neardup_clusters`,
+bounded by ``CONTROL_PLANE_BOUND`` edges.
 
 Portability: hash functions are sha256-prefix integers
 (functions.text.portable_hash) so every stage — minhash signatures,
@@ -35,7 +37,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
-from football_lakehouse_spark.functions.guards import bounded_collect
+from football_lakehouse_spark.functions.guards import (
+    CONTROL_PLANE_BOUND,
+    CollectBoundExceeded,
+    bounded_collect,
+    local_frame,
+)
 from football_lakehouse_spark.functions.text import portable_hash, ws_tokens
 
 N_MINHASH = 6  # 3 bands × 2 rows
@@ -337,49 +344,64 @@ def minhash_lsh_neardups(
     return verified_jaccard_profiles(cands, profiles, threshold, id_col)
 
 
-def neardup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+def neardup_clusters(
+    pairs: DataFrame, max_edges: int = CONTROL_PLANE_BOUND, lp_rounds: int = 3
+) -> DataFrame:
     """Connected components over near-dup pairs → cluster assignment
     (doc_id, cluster_id, is_canonical), cluster_id = min doc_id in the
     component, canonical = the kept representative. This completes the
     dedup contract: LSH gives PAIRS, but near-duplication is transitive
     (A~B, B~C ⇒ one group even when A≁C), so retention decisions need
-    the component, not the pair.
+    the component, not the pair. Isolated documents never appear.
 
-    Iterative min-label propagation: each round every node adopts
-    ``min(own label, min(neighbour labels))``. The driver only controls
-    the loop; all data stays distributed (edges/labels DataFrames), and
-    rounds needed = component diameter — near-dup components are
-    shallow (dozens of docs), so convergence is a handful of rounds and
-    each round is ONE join+agg (cheaper per round than a star round).
-    For adversarial long-chain components use
-    :func:`neardup_clusters_star` (large-star/small-star, Kiveris et
-    al.) — O(log n) rounds regardless of diameter; property-tested
-    equivalent on the fixture corpus.
+    The verified pair graph is LSH-output-sized (256 edges at sf0.1),
+    so the components are a control-plane result: ONE
+    ``bounded_collect`` of the edges under ``max_edges`` (default
+    ``CONTROL_PLANE_BOUND``), a driver union-find with min-id roots,
+    and the assignment returned through ``local_frame`` — one collect
+    where each distributed round costs several jobs. Past ``max_edges``,
+    :func:`_distributed_clusters` computes them on the cluster
+    (``lp_rounds`` is its label-propagation prelude). Both paths are
+    property-tested equal to the plain label-propagation and
+    large-star/small-star test oracles."""
+    try:
+        edges = bounded_collect(
+            pairs.select("doc_a", "doc_b"), max_edges, "neardup_clusters edge list"
+        )
+    except CollectBoundExceeded:
+        return _distributed_clusters(pairs, lp_rounds)
+    parent: dict = {}
 
-    Iteration state is eagerly localCheckpoint-ed (same as the star
-    variant and the Lloyd/PageRank loops): a mere persist leaves the
-    full LSH lineage in every round's plan, and the multi-MiB task
-    binaries + re-optimisation made each round cost seconds regardless
-    of data size (measured: 7–12 s/round persisted vs 0.4 s
-    checkpointed at sf0.1). Non-replayable on executor loss — the
-    standard iterative-algorithm trade-off, worth it."""
-    _edges, labels, converged = _lp_rounds(pairs, max_iters)
-    if not converged:
-        raise RuntimeError(f"neardup_clusters did not converge in {max_iters} rounds")
-    return _cluster_output(labels)
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # the smaller root wins, so every root is its set's minimum
+            parent[max(ra, rb)] = min(ra, rb)
+    roots = {n: find(n) for n in sorted(parent)}
+    id_type = pairs.schema["doc_a"].dataType.simpleString()
+    return local_frame(
+        pairs.sparkSession,
+        [(n, r, n == r) for n, r in roots.items()],
+        f"doc_id {id_type}, cluster_id {id_type}, is_canonical boolean",
+    )
 
 
 def _lp_rounds(
     pairs: DataFrame, rounds: int
 ) -> tuple[DataFrame, DataFrame, bool]:
-    """The min-label-propagation core shared by :func:`neardup_clusters`
-    (runs to convergence) and :func:`neardup_clusters_hybrid` (bounded
-    prelude): symmetric-closure edges, identity labels, then up to
-    ``rounds`` passes of every node adopting min(own, neighbour
-    labels), each round's state eagerly localCheckpoint-ed. Returns
-    ``(edges, labels, converged)``. ONE implementation — the two
-    verbatim copies before r11 could drift apart while being
-    property-tested "equal"."""
+    """Min-label propagation — the prelude of :func:`_distributed_clusters`
+    and, run to convergence, the tests' oracle: symmetric-closure edges, identity labels, then up to ``rounds``
+    passes of every node adopting min(own, neighbour labels), each
+    round's state eagerly localCheckpoint-ed (a mere persist leaves the
+    full LSH lineage in every round's plan: 7–12 s/round vs 0.4 s
+    checkpointed at sf0.1). Returns ``(edges, labels, converged)``."""
     half = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     edges = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -516,43 +538,15 @@ def _star_components(pairs: DataFrame, max_iters: int = 30) -> tuple[DataFrame, 
     raise RuntimeError(f"star components did not converge in {max_iters} rounds")
 
 
-def neardup_clusters_star(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
-    """Connected components via alternating large-star/small-star —
-    the at-scale upgrade of :func:`neardup_clusters`: rounds are
-    O(log n) in component size instead of O(diameter), so adversarial
-    near-dup chains (A~B~C~…) cannot stretch the job tail. Same output
-    contract: (doc_id, cluster_id, is_canonical), cluster_id = min doc
-    id in the component. Property-tested equivalent to label
-    propagation on the fixture corpus."""
-    star, _rounds = _star_components(pairs, max_iters)
-    nodes = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .union(pairs.select(F.col("doc_b").alias("node")))
-        .distinct()
-    )
-    return (
-        nodes.join(star.withColumnRenamed("src", "node"), "node", "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce(F.col("dst"), F.col("node")).alias("cluster_id"),
-            F.col("dst").isNull().alias("is_canonical"),
-        )
-    )
-
-
-def neardup_clusters_hybrid(
-    pairs: DataFrame, lp_rounds: int = 3, max_iters: int = 30
-) -> DataFrame:
-    """Best-of-both connected components: a BOUNDED min-label-propagation
-    prelude — the measured winner on shallow pair graphs, the structure
-    benign near-dup corpora produce (SCALING.md star-vs-LP crossover:
-    LP 0.83 s vs star 1.54 s on real LSH pairs; star 54× ahead on a
-    1000-chain) — escaping to large-star/small-star on the
-    label-CONTRACTED graph when the prelude does not reach a fixed
-    point. Shallow components pay LP's price; adversarial chains pay
-    ``lp_rounds`` cheap extra shuffles and keep star's O(log n)
-    ceiling. Output contract identical to :func:`neardup_clusters` /
-    :func:`neardup_clusters_star` (property-tested equal).
+def _distributed_clusters(pairs: DataFrame, lp_rounds: int) -> DataFrame:
+    """:func:`neardup_clusters` past its edge bound: a BOUNDED
+    min-label-propagation prelude — the measured winner on shallow pair
+    graphs (SCALING.md star-vs-LP crossover: LP 0.83 s vs star 1.54 s
+    on real LSH pairs; star 54× ahead on a 1000-chain) — escaping to
+    large-star/small-star on the label-CONTRACTED graph when the
+    prelude does not reach a fixed point. Shallow components pay LP's
+    price; adversarial chains pay ``lp_rounds`` cheap extra shuffles
+    and keep star's O(log n) ceiling.
 
     Handoff correctness: after k LP rounds, ``label(n)`` is the minimum
     doc id within graph distance k of n — always a node id inside n's
@@ -580,7 +574,7 @@ def neardup_clusters_hybrid(
         .where(F.col("a") != F.col("b"))
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
     )
-    star, _rounds = _star_components(contracted, max_iters)
+    star, _rounds = _star_components(contracted)
     root = star.select(F.col("src").alias("label"), F.col("dst").alias("root"))
     return (
         labels.join(root, "label", "left")

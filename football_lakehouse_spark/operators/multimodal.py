@@ -63,11 +63,6 @@ def decode_image(payload: bytes) -> dict:
     return _codecs.decode_png(payload)
 
 
-def decode_audio(payload: bytes) -> dict:
-    """Real RIFF/WAVE PCM-16 decode — see :func:`codecs.decode_wav`."""
-    return _codecs.decode_wav(payload)
-
-
 def fake_features(payload: bytes, dim: int = FEATURE_DIM) -> list[float]:
     """Deterministic stand-in for a decoder+encoder: a byte-histogram
     projection. Same signature and batch shape as a real extractor.

@@ -41,20 +41,6 @@ def _quantised_mean(value: str, w: WindowSpec, scale: int = 4) -> Column:
     return _trunc_div(total, denom).cast("double") / 10 ** scale
 
 
-def rolling_mean(
-    df: DataFrame,
-    key: str,
-    order: list[str],
-    value: str,
-    window_rows: int,
-    alias: str,
-) -> DataFrame:
-    """Rolling mean over the trailing ``window_rows`` rows per entity —
-    the 'form score' primitive (reference A7)."""
-    w = entity_timeline(key, order).rowsBetween(-(window_rows - 1), 0)
-    return df.withColumn(alias, _quantised_mean(value, w))
-
-
 def rolling_form_features(
     df: DataFrame,
     key: str,

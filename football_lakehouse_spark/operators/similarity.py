@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from football_lakehouse_spark.functions.guards import (
     CONTROL_PLANE_BOUND,
     bounded_collect,
+    local_frame,
 )
 
 DIM = 64
@@ -160,33 +161,15 @@ def brute_force_topk(
     )
 
 
-def quantize_int8(vec: F.Column) -> F.Column:
+def quantize_int8_hoisted(vec: F.Column) -> F.Column:
     """Symmetric per-vector int8 quantisation: scale = max|x|, each
     component rounds half-up to ``floor(x·127/scale + 0.5)`` ∈ [-127,
-    127]. This is the 100 TB embedding STORAGE path — 4-8× smaller than
-    float32/64 arrays, and because quantised components are small
-    integers, dot products are exactly representable in doubles, so
-    scoring is order-independent and bit-identical cross-engine (unlike
-    raw float cosines, which are only oracle-exact under matched
-    summation order). Cosine is scale-invariant, so the per-vector
-    scale never needs to be applied back for ranking.
-
-    COST NOTE (r14): the scale ``s`` is inlined inside the per-element
-    lambda, so this single expression re-evaluates the O(dim) max fold
-    per component — O(dim²) per row. Fine for one-off columns; hot
-    paths hoist the scale per row first (:func:`_quantized_side`)."""
-    d = F.transform(vec, lambda x: x.cast("double"))
-    s = F.array_max(F.transform(d, lambda x: F.abs(x)))
-    return F.transform(
-        d, lambda x: F.floor(x * F.lit(127.0) / s + F.lit(0.5)).cast("bigint")
-    )
-
-
-def quantize_int8_hoisted(vec: F.Column) -> F.Column:
-    """:func:`quantize_int8` with the per-vector scale evaluated once
-    per ROW (:func:`per_row_scalar` — the inline form re-runs the
-    max-abs fold per component). Bit-identical: same cast, same
-    max-abs scale, same ``floor(x·127/s + 0.5)`` per element."""
+    127] — the embedding STORAGE path, 4-8× smaller than float arrays.
+    Quantised components are small integers, so dot products are exact
+    in doubles: scoring is order-independent and bit-identical
+    cross-engine. Cosine is scale-invariant, so the scale is never
+    applied back for ranking. The scale is evaluated once per ROW
+    (:func:`per_row_scalar`), not re-folded per component."""
     d = F.transform(vec, lambda x: x.cast("double"))
     s = F.array_max(F.transform(d, lambda x: F.abs(x)))
     return per_row_scalar(
@@ -681,7 +664,7 @@ def kmeans_cells(
             )
         return assign_cells(
             vectors,
-            spark.createDataFrame(rows, "cell int, pos int, cq bigint"),
+            local_frame(spark, rows, "cell int, pos int, cq bigint"),
             impl="sql",
             id_col=id_col, vec_col=vec_col, id_out=id_out, normalize=normalize,
             keep_qvec=keep_qvec,
@@ -727,9 +710,7 @@ def kmeans_cells(
     # and every consumer that WRITES it (q294's index persist) emits
     # one near-empty file per slice — it is n_cells×dim rows, one task
     # is the right shape at any scale.
-    cent = spark.createDataFrame(
-        crows, "cell int, pos int, cq bigint"
-    ).coalesce(1)
+    cent = local_frame(spark, crows, "cell int, pos int, cq bigint").coalesce(1)
     return assign(corpus, crows), cent
 
 
@@ -800,8 +781,10 @@ def refine_hot_cells(
         centroids.agg(F.max("cell")), 1, "refine_hot_cells cell-count probe"
     )[0][0] + 1
     hot = F.broadcast(
-        corpus.sparkSession.createDataFrame(
-            [(r["cell"], i) for i, r in enumerate(hot_rows)], "cell int, hix int"
+        local_frame(
+            corpus.sparkSession,
+            [(r["cell"], i) for i, r in enumerate(hot_rows)],
+            "cell int, hix int",
         )
     )
 

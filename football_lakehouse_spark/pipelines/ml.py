@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
+
 
 def customer_features(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> DataFrame:
     """M1: assemble the modelling-grain feature table — per customer:
@@ -165,4 +167,4 @@ def training_run_log(
         for feat, imp in zip(FEATURE_COLS, importances)
     ]
     spark = features.sparkSession
-    return spark.createDataFrame(rows, "kind string, key string, value string")
+    return local_frame(spark, rows, "kind string, key string, value string")

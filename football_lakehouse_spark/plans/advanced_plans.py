@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from football_lakehouse_spark.catalog import load_table
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.operators.asof import asof_join
 from football_lakehouse_spark.plans.registry import query
 
@@ -785,7 +786,7 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     seeds = F.broadcast(
-        ev.sparkSession.createDataFrame([(0,), (1,), (2,)], "r int")
+        local_frame(ev.sparkSession, [(0,), (1,), (2,)], "r int")
     )
     hashed = ev.select("user_id").crossJoin(seeds).select(
         "r",
@@ -1886,7 +1887,7 @@ def bloom_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # windows of the same digest (3x fewer hash evaluations than
     # seed-per-position, same independence for bloom purposes)
     seeds = F.broadcast(
-        spark.createDataFrame([(0,), (1,), (2,)], "r int")
+        local_frame(spark, [(0,), (1,), (2,)], "r int")
     )
     digest = F.sha2(F.col("o_orderkey").cast("string"), 256)
     pos = keys.withColumn("dg", digest).crossJoin(seeds).select(
@@ -2060,7 +2061,8 @@ def chi_square_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = (a + b + c + d) * (a * d - b * c) ** 2 * 1000000
     den = max((a + b) * (c + d) * (a + c) * (b + d), 1)
     chisq = num // den  # non-negative num: // == DuckDB truncating //
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(a + b, c + d, a, c, chisq, chisq >= 3841459)],
         "n_ctrl bigint, n_treat bigint, conv_ctrl bigint, "
         "conv_treat bigint, chisq_ppm bigint, significant boolean",
@@ -2207,7 +2209,8 @@ def observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     observed.write.format("noop").mode("overwrite").save()  # the ONE action
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 m["n_purchases"],

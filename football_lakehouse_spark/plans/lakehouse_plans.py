@@ -11,6 +11,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.functions.scalars import (
     _sum_micros_exact,
     _trunc_div,
@@ -422,7 +423,8 @@ def idempotent_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         second = t.append_if_new(batch, "payload_sha256")  # must skip
         n_rows = t.read().count()
         n_versions = len(t.describe_history())
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(n_rows, n_versions, 1 if (second is None and first is not None) else 0)],
             "n_rows bigint, n_versions bigint, second_run_skipped bigint",
         )

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from football_lakehouse_spark.catalog import load_table
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.functions.text import (
     LANG_PROFILES,
     STOPWORDS,
@@ -30,8 +31,6 @@ from football_lakehouse_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_neardups,
     neardup_clusters,
-    neardup_clusters_hybrid,
-    neardup_clusters_star,
     shingles_from_tokens,
     simhash64,
     verified_jaccard_profiles,
@@ -1173,13 +1172,13 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Near-duplicate CLUSTERS: connected components over the verified "
     "MinHash+LSH pair graph (near-duplication is transitive — retention "
-    "needs the component, not the pair). Spark side: the r7 HYBRID — a "
-    "bounded min-label-propagation prelude (the measured winner on "
-    "shallow graphs, SCALING.md crossover table) that escapes to "
-    "O(log n) large-star/small-star (Kiveris et al.) on the "
-    "label-contracted graph if the prelude misses its fixed point, so "
-    "benign corpora pay LP's price and adversarial chains keep star's "
-    "ceiling; all three variants are property-tested equal. Oracle: "
+    "needs the component, not the pair). Spark side: the verified pair "
+    "graph is LSH-output-sized, so ONE bounded collect of the edges "
+    "(CONTROL_PLANE_BOUND, 2^20) feeds a driver union-find with min-id "
+    "roots, returned as an Arrow local frame; past the bound it falls "
+    "back to distributed label propagation escaping to large-star/"
+    "small-star (Kiveris et al.). Both paths are property-tested equal "
+    "to the label-propagation and star oracles. Oracle: "
     "DuckDB recursive-CTE reachability. cluster_id = min doc_id; "
     "is_canonical marks the kept representative (north star: near-dup "
     "dedup).",
@@ -1189,7 +1188,7 @@ def corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_clusters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_neardups(docs, threshold=0.5)
-    return neardup_clusters_hybrid(pairs)
+    return neardup_clusters(pairs)
 
 
 @query(
@@ -1239,7 +1238,7 @@ def cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_neardups(docs, threshold=0.5)
-    cl = neardup_clusters_hybrid(pairs).select("doc_id", "cluster_id")
+    cl = neardup_clusters(pairs).select("doc_id", "cluster_id")
     everydoc = (
         docs.select("doc_id", "n_chars")
         .join(cl, ["doc_id"], "left")
@@ -3692,7 +3691,7 @@ def term_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_neardups(docs, threshold=0.5)
-    cl = neardup_clusters_hybrid(pairs).select(
+    cl = neardup_clusters(pairs).select(
         "doc_id", F.col("cluster_id").alias("group_id")
     )
     g = (
@@ -4132,7 +4131,7 @@ def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_neardups(docs, threshold=0.5).select("doc_a", "doc_b")
-    cl = neardup_clusters_hybrid(pairs).select(
+    cl = neardup_clusters(pairs).select(
         "doc_id", F.col("cluster_id").alias("group_id")
     )
     g = (
@@ -4654,7 +4653,7 @@ def negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n = docs.agg(F.count(F.lit(1)).alias("n"))
     ks = F.broadcast(
-        docs.sparkSession.createDataFrame([(1,), (2,), (3,), (4,)], "k int")
+        local_frame(docs.sparkSession, [(1,), (2,), (3,), (4,)], "k int")
     )
     cand = (
         docs.select(F.col("doc_id").alias("anchor_id"))
@@ -4715,7 +4714,7 @@ def bloom_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     ids = ev.select("user_id").distinct()
     seeds = F.broadcast(
-        ev.sparkSession.createDataFrame([(0,), (1,), (2,)], "r int")
+        local_frame(ev.sparkSession, [(0,), (1,), (2,)], "r int")
     )
     pos = ids.crossJoin(seeds).select(
         (
@@ -6010,9 +6009,9 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor = min(range(_PCA_D), key=lambda i: (-abs(v[i]), i))
     if v[anchor] < 0:
         v = [-x for x in v]
-    return spark.createDataFrame(
-        [(i, v[i]) for i in range(_PCA_D)], ["pos", "loading_ppm"]
-    ).select(F.col("pos").cast("int"), F.col("loading_ppm").cast("bigint"))
+    return local_frame(
+        spark, [(i, v[i]) for i in range(_PCA_D)], "pos int, loading_ppm bigint"
+    )
 
 
 @query(
@@ -6081,9 +6080,9 @@ def bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # control-plane scalar
     src = bounded_collect(edges.agg(F.min("pa")), 1, "bfs_distance seed")[0][0]
-    dist = spark.createDataFrame([(int(src), 0)], ["node", "d"]).localCheckpoint(
-        eager=True
-    )
+    dist = local_frame(
+        spark, [(int(src), 0)], "node bigint, d bigint"
+    ).localCheckpoint(eager=True)
     for k in range(1, 7):
         frontier = dist.where(F.col("d") == k - 1)
         nxt = frontier.join(edges, frontier.node == edges.pa).select(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from football_lakehouse_spark.catalog import load_table
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.functions.text import WS_CLASS
 from football_lakehouse_spark.functions.scalars import (
     money_avg,
@@ -3205,7 +3206,8 @@ def benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     obs = d.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     tot = obs.agg(F.sum("n").cast("bigint").alias("t"))
-    benford = orders.sparkSession.createDataFrame(
+    benford = local_frame(
+        orders.sparkSession,
         [(1, 301030), (2, 176091), (3, 124939), (4, 96910), (5, 79181),
          (6, 66947), (7, 57992), (8, 51153), (9, 45757)],
         "digit bigint, benford_ppm bigint",

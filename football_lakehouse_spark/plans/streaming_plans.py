@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.functions.scalars import money_sum
 
 from football_lakehouse_spark.catalog import load_table
@@ -639,8 +640,8 @@ def rate_limited_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not f.startswith(".")
     ]
     n_rows = spark.read.parquet(out).count()
-    return spark.createDataFrame(
-        [(len(commits), n_rows)], "n_batches bigint, n_rows bigint"
+    return local_frame(
+        spark, [(len(commits), n_rows)], "n_batches bigint, n_rows bigint"
     )
 
 

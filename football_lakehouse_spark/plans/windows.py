@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.functions.scalars import money_sum
 
 from football_lakehouse_spark.catalog import load_table
@@ -923,7 +924,7 @@ def exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         v0.select("event_type", "n").distinct()
         .crossJoin(
             F.broadcast(
-                ev.sparkSession.createDataFrame([(50,), (90,), (99,)], "p int")
+                local_frame(ev.sparkSession, [(50,), (90,), (99,)], "p int")
             )
         )
         .withColumn("pos", (F.col("n") - 1) * F.col("p") / 100)

@@ -19,6 +19,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from football_lakehouse_spark.functions.guards import local_frame
+
 SNAPSHOT_SCHEMA = (
     "source_url STRING, http_status INT, snapshot_ts TIMESTAMP, "
     "snapshot_date DATE, payload_json STRING, payload_sha256 STRING, "
@@ -65,6 +67,5 @@ def snapshot_dataframe(spark: SparkSession, row: dict) -> DataFrame:
     """S2: single-Row batch with the explicit ingestion schema — the
     payload re-enters Spark as a 1-row relation, parsed IN-PLAN by the
     Silver build (never collect()-and-reparse, SURVEY.md §4)."""
-    return spark.createDataFrame([tuple(row[f.split()[0]] for f in
-                                        [c.strip() for c in SNAPSHOT_SCHEMA.split(",")])],
-                                 SNAPSHOT_SCHEMA)
+    cols = [c.strip().split()[0] for c in SNAPSHOT_SCHEMA.split(",")]
+    return local_frame(spark, [tuple(row[c] for c in cols)], SNAPSHOT_SCHEMA)

@@ -30,6 +30,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from football_lakehouse_spark.functions.guards import local_frame
 from football_lakehouse_spark.lakehouse.tables import LakehouseTable
 from football_lakehouse_spark.operators.merge import dedupe_updates
 
@@ -457,12 +458,12 @@ def span_dedup_stream(
                 stored = (
                     index_table.read()
                     if index_table.exists()
-                    else s.createDataFrame([], "k BIGINT")
+                    else local_frame(s, [], "k BIGINT")
                 )
             elif os.path.isdir(index_dir):
                 stored = s.read.parquet(index_dir)
             else:
-                stored = s.createDataFrame([], "k BIGINT")
+                stored = local_frame(s, [], "k BIGINT")
             spans, new_keys, release = span_probe_and_new_keys(
                 batch, stored, n=n, flag_corpus_overlap=keep_canonical
             )

@@ -21,6 +21,10 @@ and greps the EXECUTED plan for the anti-patterns this engine bans:
   materialisation is a scale cliff unless its size is bounded by
   construction. Statically scanned (AST, whole package, Spark-free);
   every site must be an audited COLLECT_ALLOW entry naming its bound.
+- ``createDataFrame(...)`` in package source outside
+  ``functions/guards.local_frame`` — a list-backed frame is a Python
+  RDD whose every read pays a job and Python-worker unpickling;
+  ``local_frame`` ships the rows as one Arrow table (LocalTableScan).
 
 Builders that themselves execute jobs (lakehouse writers, iterative
 algorithms) run for real here, so the full sweep costs minutes — it is
@@ -101,6 +105,9 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
         "1-row candidate-count aggregate",
     ("operators/bpe.py", "bpe_rounds"):
         "1-row per-round merge winner (limit(1), n_merges-bounded)",
+    ("operators/dedup.py", "neardup_clusters"):
+        "verified pair-graph edge list for the driver union-find "
+        "(CONTROL_PLANE_BOUND edges; past it, the distributed fallback)",
     ("operators/dedup.py", "_star_components"):
         "1-row per-round convergence fingerprint (count + hash sum)",
     ("operators/quality.py", "append_with_expectations"):
@@ -137,12 +144,16 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
         "LakehouseTable.current_files)",
 }
 
+#: the one place the package may call ``createDataFrame``
+LOCAL_FRAME_SITE = ("functions/guards.py", "local_frame")
+
 
 def scan_collect_sites(pkg_root: str | None = None) -> list[str]:
     """Static source lint: every ``.collect()``/``.toPandas()`` call in
-    the package must be an audited entry in COLLECT_ALLOW. Returns
-    violation strings (empty = clean). Also flags STALE allowlist
-    entries so a refactor can't leave a silent hole open.
+    the package must be an audited entry in COLLECT_ALLOW, and every
+    ``createDataFrame`` call must be the one inside LOCAL_FRAME_SITE.
+    Returns violation strings (empty = clean). Also flags STALE
+    allowlist entries so a refactor can't leave a silent hole open.
 
     AST-based (not grep) so comments/strings can't false-positive and
     the enclosing function is named exactly; keyed on qualname, not
@@ -192,12 +203,24 @@ def scan_collect_sites(pkg_root: str | None = None) -> list[str]:
                                 and child.func.attr == "bounded_collect")
                         )
                     )
+                    key = (rel, ".".join(stack) or "<module>")
+                    if (
+                        isinstance(child, ast.Call)
+                        and isinstance(child.func, ast.Attribute)
+                        and child.func.attr == "createDataFrame"
+                        and key != LOCAL_FRAME_SITE
+                    ):
+                        errs.append(
+                            f"{rel}:{child.lineno} createDataFrame in "
+                            f"{key[1]} — build driver rows through "
+                            "functions/guards.local_frame (Arrow "
+                            "LocalTableScan, no Python RDD)"
+                        )
                     if is_raw or is_bounded:
                         kind = (
                             f".{child.func.attr}()" if is_raw
                             else "bounded_collect(...)"
                         )
-                        key = (rel, ".".join(stack) or "<module>")
                         seen.add(key)
                         if key not in COLLECT_ALLOW:
                             errs.append(

@@ -79,7 +79,7 @@ from football_lakehouse_spark.operators.dedup import (  # noqa: E402
     duplicate_spans,
     exact_dedup,
     minhash_lsh_neardups,
-    neardup_clusters_star,
+    neardup_clusters,
     trim_duplicate_spans,
 )
 from football_lakehouse_spark.operators.selection import token_budget_select  # noqa: E402
@@ -281,7 +281,7 @@ def run_pipeline(
     def s3_lsh():
         d = spark.read.parquet(p("s2"))
         pairs = minhash_lsh_neardups(d, threshold=0.5)
-        clusters = neardup_clusters_star(pairs.select("doc_a", "doc_b"))
+        clusters = neardup_clusters(pairs.select("doc_a", "doc_b"))
         losers = clusters.where(~F.col("is_canonical")).select(
             F.col("doc_id").alias("loser_id")
         )

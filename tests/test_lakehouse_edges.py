@@ -130,3 +130,62 @@ def test_bounded_collect_enforces_audited_bound(spark):
     with _pytest.raises(ValueError, match="max_rows"):
         bounded_collect(df, -1, "test site")
     assert bounded_collect(spark.range(0), 0, "empty ok") == []
+
+
+#: every column type a local_frame site uses, the snapshot source's
+#: timestamp/date included
+_LOCAL_FRAME_DDL = (
+    "i int, b bigint, d double, s string, f boolean, ts timestamp, dt date"
+)
+
+
+def test_local_frame_round_trips_types_and_nulls(spark):
+    """local_frame returns exactly the rows createDataFrame would —
+    NULL cells and an empty row list included — with the DDL's schema,
+    as a JVM LocalTableScan; a row of the wrong width is a named error."""
+    from datetime import date, datetime
+
+    from pyspark.sql.types import StructType
+
+    from football_lakehouse_spark.functions.guards import local_frame
+
+    rows = [
+        (1, 2**40, 1.5, "x", True, datetime(2024, 1, 2, 3, 4, 5), date(2024, 1, 2)),
+        (-7, -(2**62), -0.25, "", False, datetime(1999, 12, 31, 23, 59, 59, 7), date(1970, 1, 1)),
+        (None,) * 7,
+    ]
+    want = StructType.fromDDL(_LOCAL_FRAME_DDL)
+    df = local_frame(spark, rows, _LOCAL_FRAME_DDL)
+    assert df.schema == want
+    assert df.collect() == spark.createDataFrame(rows, _LOCAL_FRAME_DDL).collect()
+    assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+    empty = local_frame(spark, [], _LOCAL_FRAME_DDL)
+    assert empty.schema == want and empty.collect() == []
+    # a StructType schema (the lakehouse empty-read site) keeps nested
+    # types and nullability exactly
+    nested = StructType.fromDDL("k bigint not null, tags array<string>, m map<string,int>")
+    assert local_frame(spark, [], nested).schema == nested
+
+    with pytest.raises(ValueError, match="2 fields"):
+        local_frame(spark, [(1, 2)], "a int")
+
+
+def test_local_frame_collect_starts_no_job(spark):
+    """Collecting a local frame reads the LocalTableScan on the driver:
+    zero Spark jobs, where a list-backed createDataFrame runs one."""
+    from football_lakehouse_spark.functions.guards import local_frame
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    rows = [(i, f"r{i}") for i in range(50)]
+    try:
+        sc.setJobGroup("local-frame-probe", "local_frame collect")
+        local_frame(spark, rows, "k int, v string").collect()
+        sc.setJobGroup("python-rdd-probe", "createDataFrame collect")
+        spark.createDataFrame(rows, "k int, v string").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(tracker.getJobIdsForGroup("local-frame-probe")) == []
+    # the probe is live: the Python-RDD frame's read does start a job
+    assert list(tracker.getJobIdsForGroup("python-rdd-probe")) != []

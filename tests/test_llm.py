@@ -348,76 +348,78 @@ def test_minhash_hash_impl_equivalent_topology(spark, docs):
 
 
 def test_star_components_equiv_label_propagation(spark, docs):
-    """large-star/small-star must produce exactly the same clustering
-    as iterative min-label propagation on the fixture near-dup pairs."""
+    """The two distributed oracles — large-star/small-star and plain
+    label propagation — and the union-find entry point produce exactly
+    the same clustering on the fixture near-dup pairs."""
     from football_lakehouse_spark.operators.dedup import (
         minhash_lsh_neardups,
         neardup_clusters,
-        neardup_clusters_star,
     )
+    from tests.cc_oracles import label_propagation, star_clusters
 
     pairs = minhash_lsh_neardups(docs, 0.5).select("doc_a", "doc_b")
-    lp = sorted(tuple(r) for r in neardup_clusters(pairs).collect())
-    star = sorted(tuple(r) for r in neardup_clusters_star(pairs).collect())
+    lp = sorted(tuple(r) for r in label_propagation(pairs).collect())
+    star = sorted(tuple(r) for r in star_clusters(pairs).collect())
     assert lp == star
+    assert lp == sorted(tuple(r) for r in neardup_clusters(pairs).collect())
     assert lp
 
 
 def test_hybrid_components_equiv_both_variants(spark, docs):
-    """The LP-prelude/star-escape hybrid must produce exactly the same
-    clustering as both pure variants — on the shallow fixture graph it
-    converges inside the prelude (pure-LP path), and with a prelude too
-    short to converge it must take the contraction/star path and STILL
-    match."""
+    """Past its edge bound neardup_clusters falls back to the
+    LP-prelude/star-escape hybrid. On the shallow fixture graph the
+    fallback converges inside the prelude; with a one-round prelude it
+    must take the contraction/star path. Both must equal the driver
+    union-find and the label-propagation oracle."""
     from football_lakehouse_spark.operators.dedup import (
         minhash_lsh_neardups,
         neardup_clusters,
-        neardup_clusters_hybrid,
     )
+    from tests.cc_oracles import label_propagation
 
     pairs = minhash_lsh_neardups(docs, 0.5).select("doc_a", "doc_b")
-    lp = sorted(tuple(r) for r in neardup_clusters(pairs).collect())
-    hybrid = sorted(
-        tuple(r) for r in neardup_clusters_hybrid(pairs).collect()
+    lp = sorted(tuple(r) for r in label_propagation(pairs).collect())
+    driver = sorted(tuple(r) for r in neardup_clusters(pairs).collect())
+    fallback = sorted(
+        tuple(r) for r in neardup_clusters(pairs, max_edges=1).collect()
     )
-    assert lp == hybrid
-    # force the escape path: 1 prelude round cannot converge a graph
-    # that needs >1 (the fixture has multi-hop clone clusters); the
-    # contracted-star finish must reproduce the same assignment
+    # 1 prelude round cannot converge a graph that needs >1 (the fixture
+    # has multi-hop clone clusters); the contracted-star finish must
+    # reproduce the same assignment
     forced = sorted(
         tuple(r)
-        for r in neardup_clusters_hybrid(pairs, lp_rounds=1).collect()
+        for r in neardup_clusters(pairs, max_edges=1, lp_rounds=1).collect()
     )
-    assert lp == forced
+    assert lp == driver == fallback == forced
     assert lp
 
 
 def test_hybrid_components_chain_escapes_to_star(spark):
-    """An adversarial 256-node chain must come out exact through the
-    hybrid's contraction handoff: 3 LP rounds shrink labels by ≤3 hops,
-    the star finish resolves the rest — total rounds stay O(log n),
-    never O(diameter)."""
-    from football_lakehouse_spark.operators.dedup import (
-        neardup_clusters_hybrid,
-    )
+    """An adversarial 256-node chain must come out exact both on the
+    driver and through the fallback's contraction handoff: 3 LP rounds
+    shrink labels by ≤3 hops, the star finish resolves the rest — total
+    rounds stay O(log n), never O(diameter)."""
+    from football_lakehouse_spark.operators.dedup import neardup_clusters
 
     n = 256
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a bigint, doc_b bigint"
     )
-    out = neardup_clusters_hybrid(chain).collect()
-    assert len(out) == n
-    assert all(r["cluster_id"] == 0 for r in out)
-    assert sum(r["is_canonical"] for r in out) == 1
+    for out in (
+        neardup_clusters(chain).collect(),
+        neardup_clusters(chain, max_edges=1).collect(),
+    ):
+        assert len(out) == n
+        assert all(r["cluster_id"] == 0 for r in out)
+        assert sum(r["is_canonical"] for r in out) == 1
 
 
 def test_hybrid_components_disjoint_shapes(spark):
-    """Mixed shapes through the hybrid with a forced escape: component
-    minima and canonical flags must match the star variant exactly."""
-    from football_lakehouse_spark.operators.dedup import (
-        neardup_clusters_hybrid,
-        neardup_clusters_star,
-    )
+    """Mixed shapes through the driver path and the forced fallback:
+    component minima and canonical flags must match the star oracle
+    exactly."""
+    from football_lakehouse_spark.operators.dedup import neardup_clusters
+    from tests.cc_oracles import star_clusters
 
     edges = (
         [(10, 11), (11, 12), (10, 12)]
@@ -427,20 +429,20 @@ def test_hybrid_components_disjoint_shapes(spark):
         + [(50, 51), (51, 52), (52, 53), (53, 54), (54, 55)]  # chain
     )
     df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    star = sorted(tuple(r) for r in neardup_clusters_star(df).collect())
-    hybrid = sorted(
-        tuple(r) for r in neardup_clusters_hybrid(df, lp_rounds=1).collect()
+    star = sorted(tuple(r) for r in star_clusters(df).collect())
+    driver = sorted(tuple(r) for r in neardup_clusters(df).collect())
+    fallback = sorted(
+        tuple(r)
+        for r in neardup_clusters(df, max_edges=1, lp_rounds=1).collect()
     )
-    assert star == hybrid
+    assert star == driver == fallback
 
 
 def test_star_components_log_rounds_on_chain(spark):
     """An adversarial 256-node chain (diameter 255) must converge in
     O(log n) star rounds — label propagation would need ~255."""
-    from football_lakehouse_spark.operators.dedup import (
-        _star_components,
-        neardup_clusters_star,
-    )
+    from football_lakehouse_spark.operators.dedup import _star_components
+    from tests.cc_oracles import star_clusters
 
     n = 256
     chain = spark.createDataFrame(
@@ -448,7 +450,7 @@ def test_star_components_log_rounds_on_chain(spark):
     )
     _, rounds = _star_components(chain)
     assert rounds <= 12, f"chain took {rounds} rounds (expected O(log n))"
-    out = neardup_clusters_star(chain).collect()
+    out = star_clusters(chain).collect()
     assert len(out) == n
     assert all(r["cluster_id"] == 0 for r in out)
     assert sum(r["is_canonical"] for r in out) == 1
@@ -457,7 +459,7 @@ def test_star_components_log_rounds_on_chain(spark):
 def test_star_components_disjoint_shapes(spark):
     """Mixed shapes: two triangles, a star, an isolated pair — every
     component gets its own min-id cluster with one canonical doc."""
-    from football_lakehouse_spark.operators.dedup import neardup_clusters_star
+    from tests.cc_oracles import star_clusters
 
     edges = (
         [(10, 11), (11, 12), (10, 12)]          # triangle
@@ -467,7 +469,7 @@ def test_star_components_disjoint_shapes(spark):
     )
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
     got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-           for r in neardup_clusters_star(pairs).collect()}
+           for r in star_clusters(pairs).collect()}
     expect = {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 22: 20,
               30: 30, 31: 30, 32: 30, 33: 30, 40: 40, 41: 40}
     assert {k: v[0] for k, v in got.items()} == expect

@@ -63,6 +63,27 @@ def test_static_collect_lint_flags_new_site(tmp_path):
     assert any("stale COLLECT_ALLOW" in e for e in errs)
 
 
+def test_static_lint_flags_create_dataframe(tmp_path):
+    """A list-backed ``createDataFrame`` anywhere but inside
+    ``functions/guards.local_frame`` is an error, with the enclosing
+    qualname in the message; the one sanctioned site is accepted."""
+    pkg = tmp_path / "pkg"
+    (pkg / "functions").mkdir(parents=True)
+    (pkg / "mod.py").write_text(
+        "class Seeds:\n"
+        "    def frame(self, spark):\n"
+        "        return spark.createDataFrame([(0,), (1,)], 'r int')\n"
+    )
+    (pkg / "functions" / "guards.py").write_text(
+        "def local_frame(spark, rows, ddl):\n"
+        "    return spark.createDataFrame(rows, ddl)\n"
+    )
+    errs = [e for e in plan_lint.scan_collect_sites(str(pkg)) if "stale" not in e]
+    assert len(errs) == 1
+    assert "mod.py:3" in errs[0] and "Seeds.frame" in errs[0]
+    assert "local_frame" in errs[0]
+
+
 def test_allowlists_reference_live_queries():
     """Allowlist hygiene: every pinned exception must still name a
     registered query — a renamed/deleted query must not leave a stale

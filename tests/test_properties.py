@@ -529,44 +529,49 @@ edge_lists = st.lists(
     ],
 )
 def test_components_variants_agree_on_random_graphs(spark, edges, lp_rounds):
-    """LP, star, and the hybrid (at ANY prelude budget, forcing both
+    """The label-propagation and star oracles, the driver union-find,
+    and the distributed fallback (at ANY prelude budget, forcing both
     its converged and escape paths) must produce identical cluster
-    assignments on arbitrary graphs — the law that makes the bench's
-    variant choice a pure performance decision."""
-    from football_lakehouse_spark.operators.dedup import (
-        neardup_clusters,
-        neardup_clusters_hybrid,
-        neardup_clusters_star,
-    )
+    assignments on arbitrary graphs — the law that makes the path
+    choice a pure performance decision."""
+    from football_lakehouse_spark.operators.dedup import neardup_clusters
+    from tests.cc_oracles import label_propagation, star_clusters, union_find
 
     if not edges:
         return
     df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    lp = sorted(tuple(r) for r in neardup_clusters(df, max_iters=200).collect())
-    star = sorted(tuple(r) for r in neardup_clusters_star(df).collect())
-    hyb = sorted(
+    lp = sorted(tuple(r) for r in label_propagation(df, max_iters=200).collect())
+    star = sorted(tuple(r) for r in star_clusters(df).collect())
+    driver = sorted(tuple(r) for r in neardup_clusters(df).collect())
+    fallback = sorted(
         tuple(r)
-        for r in neardup_clusters_hybrid(df, lp_rounds=lp_rounds).collect()
+        for r in neardup_clusters(df, max_edges=1, lp_rounds=lp_rounds).collect()
     )
-    assert lp == star == hyb
-    # reference check: min-id per component via plain python union-find
-    parent: dict[int, int] = {}
+    assert lp == star == driver == fallback == union_find(edges)
 
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    expect = sorted(
-        (n, find(n), n == find(n)) for n in {x for e in edges for x in e}
-    )
-    assert [tuple(r) for r in lp] == expect
+@given(edges=edge_lists, max_edges=st.integers(0, 60))
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+    ],
+)
+def test_components_edge_bound_either_side(spark, edges, max_edges):
+    """With the edge bound drawn on either side of the graph's size,
+    neardup_clusters takes the driver path or the distributed fallback
+    — the answer and the output schema must not depend on which."""
+    from football_lakehouse_spark.operators.dedup import neardup_clusters
+    from tests.cc_oracles import union_find
+
+    df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
+    out = neardup_clusters(df, max_edges=max_edges)
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("doc_id", "bigint"), ("cluster_id", "bigint"), ("is_canonical", "boolean")
+    ]
+    assert sorted(tuple(r) for r in out.collect()) == union_find(edges)
 
 
 def _ref_duplicate_spans(docs: list[tuple[int, str]], n: int, min_docs: int):
