@@ -1591,7 +1591,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     par = spark.sparkContext.defaultParallelism
     # norms materialised once per ROW (vec_side): the O(pairs) stage
-    # pays one zip_with fold per pair instead of cosine()'s ~5 (r15 —
+    # pays one zip_with fold per pair instead of ~5 inline (r15 —
     # the r14 hoist sweep applied to this exact-pairs path; measured
     # 22.3 s -> 4.0 s noop-exec on the sf0.1 embeddings)
     a = vec_side(emb.repartition(par), "vec_id", "embedding", "vec_a", "ea", "na")
@@ -3986,7 +3986,7 @@ def ivf_rebalance_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the IVF index): the deterministic Lloyd quantiser trains on the "
     "existing corpus (four of five vec_id residue classes), then a NEW batch of "
     "vectors is assigned to the FROZEN centroids — one narrow pass over "
-    "the batch with the n_cells-row centroid table broadcast, O(batch) "
+    "the batch against the n_cells-row centroid table, O(batch) "
     "not O(corpus), no retrain, no corpus re-shuffle. Returns (vec_id, "
     "cell, d2-to-centroid) for the appended batch; the oracle unrolls "
     "the identical filtered Lloyd rounds in SQL, full value-level match "
@@ -4003,9 +4003,7 @@ def ivf_append_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     train = emb.where(F.col("vec_id") % 5 != 0)
     batch = emb.where(F.col("vec_id") % 5 == 0)
     _, cent = kmeans_cells(train, n_cells=16, iters=2)
-    # n_cells hint keeps plan-building lazy (no kernel-selection count
-    # job — assign_cells documents that eager fallback)
-    return assign_cells(batch, cent, with_d2=True, n_cells=16)
+    return assign_cells(batch, cent, with_d2=True)
 
 
 @query(
@@ -7395,7 +7393,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     # norms hoisted per SIDE (vec_side, r15): the scoring stage pays
-    # one fold per (anchor, candidate) pair instead of cosine()'s ~5
+    # one fold per (anchor, candidate) pair instead of ~5 inline
     q = vec_side(
         emb.where(F.col("vec_id") < 10), "vec_id", "embedding",
         "query_id", "query_vec", "q_nrm", extra=[("label", "q_label")],
@@ -8568,27 +8566,23 @@ def ivf_index_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_t = LakehouseTable(spark, root, "gold", "ann_vectors")
     asg_t = LakehouseTable(spark, root, "gold", "ann_assignments")
     cen_t = LakehouseTable(spark, root, "gold", "ann_centroids")
-    # the three artifact writes are INDEPENDENT (separate tables, no
-    # cross-reads) — submit them from a small thread pool so each
-    # write's stragglers/commit latency back-fills the others'
-    # executors instead of serialising three job tails (guide §2.6;
-    # job submission is thread-safe, one commit per table)
-    from concurrent.futures import ThreadPoolExecutor
+    # three sequential appends in a fixed order (vectors, assignments,
+    # centroids): a failure stops at a deterministic prefix, and the
+    # centroid table — the artifact that makes the index searchable —
+    # commits last
+    v_vec = vec_t.append(emb.select("vec_id", "embedding"))
+    v_asg = asg_t.append(assigned)
+    v_cen = cen_t.append(centroids)
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for f in [
-            pool.submit(vec_t.append, emb.select("vec_id", "embedding")),
-            pool.submit(asg_t.append, assigned),
-            pool.submit(cen_t.append, centroids),
-        ]:
-            f.result()
-
-    # SERVE: every input below reads a persisted table — queries and
-    # match vectors both come from the stored vector table (float
-    # arrays round-trip parquet bit-exactly, so cos_sim matches the
-    # oracle's doubles)
-    vecs = vec_t.read()
+    # SERVE: every input below reads a persisted table, PINNED at the
+    # version this build committed (q249's snapshot pattern), so the
+    # serve never reads a later or partial index. Queries and match
+    # vectors both come from the stored vector table (float arrays
+    # round-trip parquet bit-exactly, so cos_sim matches the oracle's
+    # doubles)
+    vecs = vec_t.read(version=v_vec)
     queries = vecs.where(F.col("vec_id") < 5)
     return ivf_search(
-        queries, vecs, asg_t.read(), cen_t.read(), k=3, n_probe=4
+        queries, vecs, asg_t.read(version=v_asg), cen_t.read(version=v_cen),
+        k=3, n_probe=4,
     )

@@ -65,11 +65,11 @@ def query(
 #: after r11 nothing older than r6). Each round's 50-row prefix is the
 #: 50 registered queries whose latest driver-green row is OLDEST, ties
 #: broken by registration order — freshness is self-maintaining and no
-#: query's attestation ever ages more than ceil(n/50) rounds. This r13
-#: cohort is `python scripts/replay_attestation.py`'s printed oldest-50:
-#: the 43 queries last attested in r7 lead (q269, q232, q233, ...),
-#: then the first 7 of the r8 cohort (q01, q02, q04, q05, q06, q07,
-#: q08 ... by registration order). To rotate for r14, run the
+#: query's attestation ever ages more than ceil(n/50) rounds. This
+#: cohort is `python scripts/replay_attestation.py`'s printed oldest-50
+#: after r15: the 43 queries last attested in r8 lead (q09, q10, q11,
+#: ...), then the first 7 of the r9 cohort (q13 ... q19 by
+#: registration order). To rotate, run the
 #: replay script and replace this tuple with its printed oldest-50
 #: (the script also flags any registered query whose LATEST driver
 #: row is red — fix those, don't rotate them; it also exits 1 when
@@ -79,56 +79,56 @@ def query(
 #: suite at sf0.001 AND sf0.01 (tests/test_oracle.py with
 #: SPARK_GRAFT_TEST_FULL=1, ledger in SCALING.md).
 DRIVER_ORDER_FIRST: tuple[str, ...] = (
-    "q269_recursive_purchase_chains",
-    "q232_value_window_family",
-    "q233_max_drawdown",
-    "q236_python_datasource_roundtrip",
-    "q247_anti_entropy_repair",
-    "q248_subject_erasure",
-    "q249_consistent_snapshot_join",
-    "q250_incremental_view_maintenance",
-    "q252_compaction_plan",
-    "q257_logged_cdf_ivm",
-    "q260_zonemap_skip_audit",
-    "q275_shuffle_sizing_advisor",
-    "q276_broadcast_advisor",
-    "q246_rate_limited_drain",
-    "q262_disorder_lateness_audit",
-    "q229_source_length_drift",
-    "q238_udtf_chunk_expand",
-    "q245_centroid_separation",
-    "q251_pca_power_iteration",
-    "q255_bfs_distance",
-    "q258_exact_heavy_hitters",
-    "q259_systematic_weighted_sample",
-    "q261_hybrid_rrf_fusion",
-    "q265_dim_truncation_recall",
-    "q266_sample_estimate_audit",
-    "q268_lsh_funnel_audit",
-    "q270_dataset_card",
-    "q271_pq_adc_recall",
-    "q272_incremental_curation",
-    "q273_ivfpq_recall",
-    "q274_minhash_estimator_audit",
-    "q277_frame_sample",
-    "q278_hard_negative_mining",
-    "q230_sequence_transition_audit",
-    "q231_repeat_purchase_curve",
-    "q241_interarrival_burstiness",
-    "q242_top_user_paths",
-    "q253_k_anonymity",
-    "q254_bloom_pruned_join",
-    "q256_chi_square_ab",
-    "q263_encoding_advisor",
-    "q264_observed_metrics",
-    "q267_time_weighted_value",
-    "q01_fixture_horizons",
-    "q02_horizon_assembly_joins",
-    "q04_conditional_agg",
-    "q05_bounded_multi_agg",
-    "q06_duplicate_key_detection",
-    "q07_topk_customers",
-    "q08_union_all_counts",
+    "q09_null_safe_cast",
+    "q10_json_extract",
+    "q11_explode_tokens",
+    "q12_string_funcs",
+    "q60_continuous_rollup",
+    "q54_format_roundtrip",
+    "q32_streaming_ingest",
+    "q91_stateful_state",
+    "q69_ml_pinned_eval",
+    "q42_simhash",
+    "q43_ngram_jaccard",
+    "q58_repetition_ratio",
+    "q59_decontamination",
+    "q61_vocab_df",
+    "q62_mixture_weights",
+    "q65_stratified_sample",
+    "q56_corpus_split",
+    "q44_ann_bruteforce",
+    "q52_embedding_neardup",
+    "q48_embedding_stats",
+    "q46_multimodal_meta",
+    "q73_boilerplate_ngrams",
+    "q74_text_normalize",
+    "q75_pii_redaction",
+    "q76_gopher_quality",
+    "q77_source_top_terms",
+    "q78_sequence_packing",
+    "q81_doc_chunking",
+    "q82_source_overlap",
+    "q83_source_upsample",
+    "q84_curation_pipeline",
+    "q87_embedding_outliers",
+    "q88_length_quantiles",
+    "q279_knn_label_noise",
+    "q280_source_quality_funnel",
+    "q281_hard_negative_mining_ann",
+    "q282_knn_label_noise_ann",
+    "q49_asof_join",
+    "q79_salted_hot_key_agg",
+    "q80_bucketed_join",
+    "q86_table_profile",
+    "q89_full_outer_reconcile",
+    "q90_props_map",
+    "q13_date_funcs",
+    "q14_content_hash_groups",
+    "q15_dedup_keep_first",
+    "q16_exists_probe",
+    "q17_multiway_join",
+    "q18_anti_semi_join",
+    "q19_anchor_fallback",
 )
 
 

@@ -239,7 +239,7 @@ def fuzz_table(name: str, tbl: pa.Table, seed: int) -> pa.Table:
         # True zero vectors are deliberately NOT injected: DuckDB's
         # x/0 → NULL vs Spark ANSI semantics make them out-of-contract
         # for the oracle twins (the ENGINE still guards them; see
-        # operators/similarity.py assign_cells/cosine).
+        # operators/similarity.py assign_cells/cosine_hoisted).
         tiny = rng.random(n) < 0.01
         vecs[tiny] = (vecs[tiny] * np.float32(1e-8)).astype(np.float32)
         out["embedding"] = list(vecs)

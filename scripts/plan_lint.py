@@ -113,13 +113,15 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
     ("operators/quality.py", "append_with_expectations"):
         "Observation metrics row (1 row per write)",
     ("operators/similarity.py", "assign_cells"):
-        "centroid table (n_cells rows, config-bounded)",
+        "centroid table for the one assignment kernel (n_cells×dim "
+        "rows, config-bounded)",
     ("operators/similarity.py", "kmeans_cells"):
         "centroid table (n_cells rows, config-bounded)",
     ("operators/similarity.py", "refine_hot_cells"):
         "hot-cell list + split centroids (bounded by n_cells)",
     ("operators/similarity.py", "semantic_dedup"):
-        "1-row max-cell-size probe (oversized-cell guard, r15)",
+        "1-row probe: biggest cell's rows and the centroid dim "
+        "(oversized-cell byte guard)",
     ("pipelines/ml.py", "training_run_log"):
         "pinned run-log rows (fixed metric/param domain)",
     ("plans/advanced_plans.py", "chi_square_ab"):

@@ -45,8 +45,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from football_lakehouse_spark.operators.similarity import (  # noqa: E402
     ann_mining_candidates,
     ann_mining_topk,
-    cosine,
+    cosine_hoisted,
     kmeans_cells,
+    vec_side,
 )
 from football_lakehouse_spark.plans.registry import REGISTRY  # noqa: E402
 from football_lakehouse_spark.session import get_spark  # noqa: E402
@@ -116,15 +117,14 @@ def mining_decomposition(spark, passes: int) -> None:
     for sf, path, n_cells in SCALES:
         emb = spark.read.parquet(os.path.join(path, "embeddings.parquet"))
         anchors = emb.where(F.col("vec_id") < 10)
-        a = anchors.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("label").alias("q_label"),
-            F.col("embedding").alias("query_vec"),
+        # double arrays + norms hoisted per SIDE: one fold per pair
+        a = vec_side(
+            anchors, "vec_id", "embedding", "query_id", "query_vec", "q_nrm",
+            extra=[("label", "q_label")],
         )
-        c = emb.select(
-            F.col("vec_id").alias("match_id"),
-            F.col("label").alias("m_label"),
-            F.col("embedding").alias("match_vec"),
+        c = vec_side(
+            emb, "vec_id", "embedding", "match_id", "match_vec", "m_nrm",
+            extra=[("label", "m_label")],
         )
         w = Window.partitionBy("query_id").orderBy(
             F.col("cos_sim").desc(), F.col("match_id").asc()
@@ -141,8 +141,9 @@ def mining_decomposition(spark, passes: int) -> None:
                 .select(
                     "query_id",
                     "match_id",
-                    cosine(
-                        F.col("query_vec"), F.col("match_vec")
+                    cosine_hoisted(
+                        F.col("query_vec"), F.col("match_vec"),
+                        F.col("q_nrm"), F.col("m_nrm"),
                     ).alias("cos_sim"),
                 )
                 .withColumn("rank", F.row_number().over(w))

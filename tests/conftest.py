@@ -17,6 +17,19 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
+def _half_host_memory() -> str:
+    """Half of MemTotal, in whole GB, for the test JVM's heap. Under the
+    engine's 90g default G1 grows the heap instead of collecting, and
+    one full suite run on a 4-core, 15 GB host had its JVM OOM-killed
+    at 14.9 GB resident (another run of the same tree peaked at 9.6 GB)."""
+    with open("/proc/meminfo") as f:
+        kb = int(next(line for line in f if line.startswith("MemTotal:")).split()[1])
+    return f"{max(2, kb // (2 << 20))}g"
+
+
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _half_host_memory())
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("fls-tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))

@@ -864,23 +864,29 @@ def test_ivf_append_kernel_matches_training_assignment(spark, emb):
 
 
 def test_assign_cells_arrow_equals_sql(spark, emb):
-    """The Arrow (numpy int64 matmul) and SQL (codegen fold) kernels of
-    assign_cells are BIT-IDENTICAL — including the lower-cell tie-break
-    on exactly equidistant centroids and the with_d2 payload."""
+    """The package's one assignment kernel (Arrow numpy int64 matmul)
+    is BIT-IDENTICAL to the pure-SQL fold kept as the test oracle —
+    including the lower-cell tie-break on exactly equidistant centroids
+    and the with_d2 payload — at 2, 4 and 8 cells as well as 16 (the
+    small-cell regime a kernel switch once sent to the SQL fold)."""
     from football_lakehouse_spark.operators.similarity import (
         assign_cells,
         kmeans_cells,
     )
+    from tests.ivf_oracles import assign_cells_sql
 
     corpus = emb.where(F.col("vec_id") < 300)
-    _, cent = kmeans_cells(corpus, n_cells=8, iters=2)
-    for with_d2 in (False, True):
-        a = assign_cells(corpus, cent, impl="arrow", with_d2=with_d2)
-        s = assign_cells(corpus, cent, impl="sql", with_d2=with_d2)
-        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, s.collect()))
+    for n_cells in (2, 4, 8, 16):
+        _, cent = kmeans_cells(corpus, n_cells=n_cells, iters=2)
+        for with_d2 in (False, True):
+            a = assign_cells(corpus, cent, with_d2=with_d2)
+            s = assign_cells_sql(corpus, cent, with_d2=with_d2)
+            assert sorted(map(tuple, a.collect())) == sorted(
+                map(tuple, s.collect())
+            ), (n_cells, with_d2)
 
     # adversarial tie: two identical centroids (cells 0 and 1) are
-    # equidistant from every vector — both kernels must pick cell 0
+    # equidistant from every vector — both forms must pick cell 0
     vecs = spark.createDataFrame(
         [(1, [0.5, 0.25]), (2, [-0.125, 1.0])], "vec_id long, embedding array<double>"
     )
@@ -888,76 +894,76 @@ def test_assign_cells_arrow_equals_sql(spark, emb):
         [(0, 0, 100), (0, 1, 200), (1, 0, 100), (1, 1, 200)],
         "cell int, pos int, cq long",
     )
-    for impl in ("arrow", "sql"):
-        got = {
-            r.vec_id: r.cell
-            for r in assign_cells(vecs, tie_cent, impl=impl).collect()
-        }
-        assert got == {1: 0, 2: 0}, impl
+    for form in (assign_cells, assign_cells_sql):
+        got = {r.vec_id: r.cell for r in form(vecs, tie_cent).collect()}
+        assert got == {1: 0, 2: 0}, form.__name__
 
 
-def test_assign_cells_auto_kernel(spark, emb):
-    """impl='auto' picks the SQL fold below ARROW_MIN_CELLS (broadcast
-    NLJ in the plan) and the Arrow matmul at/above it (MapInPandas) —
-    the measured crossover, pinned as plan shapes."""
-    from football_lakehouse_spark.operators.similarity import (
-        ARROW_MIN_CELLS,
-        assign_cells,
-        kmeans_cells,
-    )
-
-    corpus = emb.where(F.col("vec_id") < 300)
-    _, small_cent = kmeans_cells(corpus, n_cells=4, iters=1)
-    small_plan = (
-        assign_cells(corpus, small_cent)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" in small_plan
-    assert "MapInPandas" not in small_plan
-
-    _, big_cent = kmeans_cells(corpus, n_cells=ARROW_MIN_CELLS, iters=1)
-    big_plan = (
-        assign_cells(corpus, big_cent)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" in big_plan
-    assert "BroadcastNestedLoopJoin" not in big_plan
+def _jobs_in_group(spark, group: str, build):
+    """Run ``build()`` under a fresh job group; return its result and
+    the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_assign_cells_lazy_with_hint_and_validation(spark, emb, monkeypatch):
-    """r9 (verdict #4 + ADVICE): with an n_cells hint, impl='auto'
-    builds the plan with ZERO Spark jobs (no kernel-selection count, no
-    centroid collect on the SQL branch) — asserted by poisoning the
-    action surface during the build. Bad impl strings raise instead of
-    silently falling through to the SQL path."""
-    import pytest as _pytest
-    from pyspark.sql import DataFrame
-
+def test_assign_cells_build_runs_one_job(spark, emb):
+    """Building assign_cells starts exactly ONE Spark job — the
+    control-plane collect of the centroid table — and no kernel
+    selection probe. The plan it returns is the one kernel (MapInPandas)
+    and assigns the same cells as the test oracle."""
     from football_lakehouse_spark.operators.similarity import (
         assign_cells,
         kmeans_cells,
     )
+    from tests.ivf_oracles import assign_cells_sql
 
     corpus = emb.where(F.col("vec_id") < 200)
     _, cent = kmeans_cells(corpus, n_cells=8, iters=1)
-    expect = sorted(map(tuple, assign_cells(corpus, cent).collect()))
+    lazy_df, jobs = _jobs_in_group(
+        spark, "assign-cells-build", lambda: assign_cells(corpus, cent)
+    )
+    assert len(jobs) == 1, jobs
+    plan = lazy_df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan
+    assert sorted(map(tuple, lazy_df.collect())) == sorted(
+        map(tuple, assign_cells_sql(corpus, cent).collect())
+    )
 
-    def boom(self, *a, **k):
-        raise AssertionError("plan-build ran a Spark action")
 
-    monkeypatch.setattr(DataFrame, "collect", boom)
-    lazy_df = assign_cells(corpus, cent, n_cells=8)  # must not touch collect
-    monkeypatch.undo()
-    assert sorted(map(tuple, lazy_df.collect())) == expect
+def test_refine_hot_cells_runs_no_kernel_probe(spark, emb, monkeypatch):
+    """q160's operator: the assign_cells call inside refine_hot_cells
+    starts only the centroid collect — one job, no kernel-selection
+    countDistinct job ahead of it."""
+    from football_lakehouse_spark.operators import similarity
 
-    with _pytest.raises(ValueError, match="impl must be one of"):
-        assign_cells(corpus, cent, impl="Arrow")
+    _, cent = similarity.kmeans_cells(
+        emb.where(F.col("vec_id") % 5 == 0), n_cells=16, iters=2
+    )
+    counted = []
+    real = similarity.assign_cells
+
+    def counting(*a, **k):
+        out, jobs = _jobs_in_group(
+            spark, f"refine-assign-{len(counted)}", lambda: real(*a, **k)
+        )
+        counted.append(len(jobs))
+        return out
+
+    monkeypatch.setattr(similarity, "assign_cells", counting)
+    similarity.refine_hot_cells(emb, cent, max_cell_frac=0.1, n_split=4)
+    assert counted == [1], counted
 
 
 def test_assign_cells_arrow_edge_errors(spark, emb):
-    """r9 ADVICE: the Arrow kernel fails with NAMED errors on an empty
+    """r9 ADVICE: the kernel fails with NAMED errors on an empty
     centroid table (caller skipped training) and on null / ragged
-    embeddings (instead of an opaque numpy crash in the executor)."""
+    embeddings (instead of an opaque numpy crash in the executor) — at
+    any cell count, the small ones included."""
     import pytest as _pytest
 
     from football_lakehouse_spark.operators.similarity import assign_cells
@@ -967,7 +973,7 @@ def test_assign_cells_arrow_edge_errors(spark, emb):
     )
     empty_cent = spark.createDataFrame([], "cell int, pos int, cq long")
     with _pytest.raises(ValueError, match="empty centroid table"):
-        assign_cells(vecs, empty_cent, impl="arrow")
+        assign_cells(vecs, empty_cent)
 
     cent = spark.createDataFrame(
         [(0, 0, 100), (0, 1, 200)], "cell int, pos int, cq long"
@@ -979,7 +985,7 @@ def test_assign_cells_arrow_edge_errors(spark, emb):
     for bad_id in (2, 3):
         bad = ragged.where(F.col("vec_id").isin(1, bad_id))
         with _pytest.raises(Exception, match="non-null fixed-width arrays"):
-            assign_cells(bad, cent, impl="arrow").collect()
+            assign_cells(bad, cent).collect()
 
 
 def test_kmeans_sampled_training_contract(spark, emb):
@@ -1976,29 +1982,34 @@ def test_exact_dedup_null_content_not_collapsed(spark):
     assert kept == [1, 2, 3, 5]  # both NULLs kept; real dup collapsed
 
 
-def test_semantic_dedup_arrow_equals_sql(spark, emb):
-    """r14: the vectorized per-cell pair kernel (impl='arrow', the auto
-    default) must be BIT-IDENTICAL to the cell-blocked self-join spec
-    (impl='sql') — including the raw max_sim_earlier doubles, whose
-    dot/norm accumulation order is what the kernel painstakingly
-    preserves (component-at-a-time adds, never BLAS summation)."""
+def _force_pair_fallback(monkeypatch):
+    """Trip semantic_dedup's oversized-cell guard on any corpus: the
+    probe always runs (no min-bytes floor) and a 1-byte cell budget
+    routes every cell to the spillable SQL self-join."""
+    from football_lakehouse_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_PAIR_GUARD_MIN_BYTES", 0)
+    monkeypatch.setattr(similarity, "_PAIR_MAX_CELL_BYTES", 1)
+
+
+def test_semantic_dedup_arrow_equals_sql(spark, emb, monkeypatch):
+    """r14: the vectorized per-cell pair kernel must be BIT-IDENTICAL
+    to the cell-blocked SQL self-join it falls back to past the memory
+    guard — including the raw max_sim_earlier doubles, whose dot/norm
+    accumulation order is what the kernel painstakingly preserves
+    (component-at-a-time adds, never BLAS summation)."""
     from football_lakehouse_spark.operators.similarity import semantic_dedup
 
     corpus = emb.where(F.col("vec_id") < 400)
-    a = sorted(
-        map(tuple, semantic_dedup(corpus, impl="arrow").collect())
-    )
-    s = sorted(map(tuple, semantic_dedup(corpus, impl="sql").collect()))
+    a = sorted(map(tuple, semantic_dedup(corpus).collect()))
+    _force_pair_fallback(monkeypatch)
+    s = sorted(map(tuple, semantic_dedup(corpus).collect()))
     assert a == s
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="impl must be"):
-        semantic_dedup(corpus, impl="numpy")
 
 
-def test_semantic_dedup_zero_norm_fails_loud_both_impls(spark):
+def test_semantic_dedup_zero_norm_fails_loud_both_impls(spark, monkeypatch):
     """r15 (ADVICE r14, medium): a zero-norm vector sharing a cell with
-    another vector must fail LOUD in both pair kernels — the SQL form
+    another vector must fail LOUD in both pair forms — the SQL fallback
     raises ANSI DIVIDE_BY_ZERO, and the Arrow kernel raises the same
     named contract instead of silently dropping the row with a NaN
     max (the r14 behaviour)."""
@@ -2010,9 +2021,10 @@ def test_semantic_dedup_zero_norm_fails_loud_both_impls(spark):
         rows, "vec_id bigint, embedding array<double>"
     )
     with pytest.raises(Exception, match="zero L2 norm"):
-        semantic_dedup(corpus, n_cells=2, iters=1, impl="arrow").collect()
+        semantic_dedup(corpus, n_cells=2, iters=1).collect()
+    _force_pair_fallback(monkeypatch)
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        semantic_dedup(corpus, n_cells=2, iters=1, impl="sql").collect()
+        semantic_dedup(corpus, n_cells=2, iters=1).collect()
 
 
 def test_semantic_dedup_null_embedding_named_error(spark):
@@ -2025,25 +2037,24 @@ def test_semantic_dedup_null_embedding_named_error(spark):
         rows + [(100, None)], "vec_id bigint, embedding array<double>"
     )
     with pytest.raises(Exception, match="non-null fixed-width"):
-        semantic_dedup(corpus, n_cells=2, iters=1, impl="arrow").collect()
+        semantic_dedup(corpus, n_cells=2, iters=1).collect()
 
 
 def test_semantic_dedup_oversized_cell_falls_back_to_sql(spark, emb, monkeypatch):
-    """r15 (VERDICT r14 #5): impl='auto' must route a corpus whose
-    biggest cell exceeds the kernel's row bound to the spillable SQL
+    """r15 (VERDICT r14 #5): semantic_dedup must route a corpus whose
+    biggest cell exceeds the kernel's memory bound to the spillable SQL
     join (bit-identical), never materialise it as one pandas group."""
     from football_lakehouse_spark.operators import similarity
 
     corpus = emb.where(F.col("vec_id") < 200)
-    # untouched auto: Arrow kernel in the plan
+    # untouched guard: Arrow kernel in the plan
     plan_auto = (
         semantic_plan := similarity.semantic_dedup(corpus)
     )._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan_auto
     # guard tripped: probe runs (min-bytes floor removed) and the
-    # 1-row cell bound forces the SQL fallback
-    monkeypatch.setattr(similarity, "_PAIR_GUARD_MIN_BYTES", 0)
-    monkeypatch.setattr(similarity, "_PAIR_MAX_CELL_ROWS", 1)
+    # 1-byte cell budget forces the SQL fallback
+    _force_pair_fallback(monkeypatch)
     fb = similarity.semantic_dedup(corpus)
     assert "FlatMapGroupsInPandas" not in (
         fb._jdf.queryExecution().executedPlan().toString()
@@ -2051,3 +2062,33 @@ def test_semantic_dedup_oversized_cell_falls_back_to_sql(spark, emb, monkeypatch
     assert sorted(map(tuple, fb.collect())) == sorted(
         map(tuple, semantic_plan.collect())
     )
+
+
+def test_semantic_dedup_guard_bounds_bytes_not_rows(spark, monkeypatch):
+    """The oversized-cell guard budgets a cell's vector payload in BYTES
+    (rows × dim × 8). A wide-embedding corpus whose cells hold fewer
+    rows than a row bound set at the same budget for 64-dim vectors
+    still trips it and takes the SQL join, with the kernel's answer."""
+    from football_lakehouse_spark.operators import similarity
+    from football_lakehouse_spark.operators.similarity import hyperplane
+
+    dim, n_rows = 512, 12
+    corpus = spark.createDataFrame(
+        [(i, hyperplane(i % 3, dim)) for i in range(n_rows)],
+        "vec_id bigint, embedding array<double>",
+    )
+    kernel = sorted(
+        map(tuple, similarity.semantic_dedup(corpus, n_cells=2).collect())
+    )
+    # budget = a 16-row cell at 64 dims: no cell here holds more than
+    # 12 rows, so a rows-only bound at that budget (16) would pass,
+    # while the bigger of the 2 cells holds ≥ 6 rows × 512 dims
+    budget = 16 * 64 * 8
+    assert n_rows < budget // (64 * 8) and (n_rows // 2) * dim * 8 > budget
+    monkeypatch.setattr(similarity, "_PAIR_GUARD_MIN_BYTES", 0)
+    monkeypatch.setattr(similarity, "_PAIR_MAX_CELL_BYTES", budget)
+    fb = similarity.semantic_dedup(corpus, n_cells=2)
+    assert "FlatMapGroupsInPandas" not in (
+        fb._jdf.queryExecution().executedPlan().toString()
+    )
+    assert sorted(map(tuple, fb.collect())) == kernel

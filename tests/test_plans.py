@@ -284,12 +284,9 @@ def test_oov_vocab_topk_broadcast(spark):
 def test_ivf_append_broadcasts_centroids(spark):
     """q128: appending never re-shuffles a corpus — the batch is
     assigned in ONE narrow pass against the frozen n_cells-row centroid
-    table. At 16 cells the r14 auto kernel picks the Arrow matmul
-    (MapInPandas; the control-plane centroid collect replaces the
-    broadcast — crossover re-measured in similarity.ARROW_MIN_CELLS);
-    below the crossover the same call plans the SQL fold's broadcast
-    nested-loop instead (pinned by test_assign_cells_auto_kernel).
-    Either way: no shuffled join anywhere in the append plan."""
+    table: the assignment kernel's Arrow matmul (MapInPandas) over the
+    control-plane centroid collect, at every cell count. No shuffled
+    join anywhere in the append plan."""
     plan = plan_of(spark, "q128_ivf_append")
     assert "MapInPandas" in plan
     assert "SortMergeJoin" not in plan
@@ -382,12 +379,11 @@ def test_funnel_reuses_user_partitioning(spark):
 
 
 def test_ivf_rebalance_no_cartesian_assign_broadcast(spark):
-    """q160: every centroid-side join is broadcast (the assign kernel's
-    BroadcastNestedLoopJoin over the packed n_cells-row table — 16
-    cells, below the Arrow crossover — and the sub-Lloyd's broadcast
-    hash joins); the only shuffled joins key on the uniform vec_id —
-    no CartesianProduct anywhere, so no stage's cost scales with
-    corpus × cells."""
+    """q160: the assign kernel joins nothing (a MapInPandas matmul over
+    the driver-held centroids) and the sub-Lloyd's centroid joins are
+    broadcast hash joins; the only shuffled joins key on the uniform
+    vec_id — no CartesianProduct anywhere, so no stage's cost scales
+    with corpus × cells."""
     plan = plan_of(spark, "q160_ivf_rebalance")
     assert "CartesianProduct" not in plan
     # the assignment is now materialised ONCE (localCheckpoint — it
@@ -403,10 +399,11 @@ def test_ivf_rebalance_no_cartesian_assign_broadcast(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     _, cent = kmeans_cells(emb, n_cells=4, iters=1)
     kplan = (
-        assign_cells(emb, cent, n_cells=4)
+        assign_cells(emb, cent)
         ._jdf.queryExecution().executedPlan().toString()
     )
-    assert "BroadcastNestedLoopJoin" in kplan
+    assert "MapInPandas" in kplan
+    assert "Join" not in kplan
     assert "CartesianProduct" not in kplan
 
 
