@@ -10,18 +10,27 @@ a Delta-shaped transaction log:
         _log/<20-digit version>.json         # ONE commit = ONE file:
                                              #   {version, operation, ts,
                                              #    add: [files], remove: [files]}
-        _log/<version>.checkpoint.json       # every CHECKPOINT_EVERY commits:
-                                             #   {version, live: [files],
-                                             #    history: [compact entries]}
+        _log/<version>.checkpoint.json       # every CHECKPOINT_EVERY commits,
+                                             #   the WHOLE snapshot at that
+                                             #   version: {version, live:
+                                             #   [files], stats, dv, schema,
+                                             #   props, txn, history}
         data/<partition dirs>/<txid>-<n>.parquet
 
 Commits are copy-on-write at file granularity and INCREMENTAL: a commit
 records only the files it adds/removes (Delta's add/remove actions), so
 commit cost is O(changed files), not O(table files × versions) — the
 round-1 design rewrote the full manifest (every version's full file
-list) per commit, a documented cliff at ~10⁵ files. Readers resolve a
-version from the newest checkpoint ≤ it plus the commit tail, exactly
-like Delta's checkpoint + _delta_log replay.
+list) per commit, a documented cliff at ~10⁵ files. Every piece of
+state at a version — live files with their data-skipping stats, active
+deletion vectors, logged schema, properties, per-app txn versions and
+history — comes from ONE fold (:meth:`LakehouseTable._snapshot`): the
+newest full checkpoint ≤ the version plus the commit tail, exactly like
+Delta's checkpoint + _delta_log replay, so any read costs O(tail)
+commits, never the full log. A checkpoint lacking any snapshot key
+(written before checkpoints held the whole snapshot) is skipped; commit
+files are never deleted, so folding from an older checkpoint or from
+version 0 is exact.
 
 Semantics matched to the reference:
 - ``append``      → S4 Delta append sink (with optional content-hash
@@ -63,7 +72,7 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -203,11 +212,32 @@ class Version:
     rows: int | None = None
 
 
+#: what a full checkpoint holds besides its version (see _snapshot)
+_SNAPSHOT_KEYS = ("live", "stats", "dv", "schema", "props", "txn", "history")
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """Table state AT one version — what :meth:`LakehouseTable._snapshot`
+    folds from the log. Shared with the instance cache: read, never
+    mutate."""
+
+    version: int
+    live: dict[str, dict]  # live file -> its logged min/max stats ({} = none)
+    dv: frozenset[str]  # active deletion-vector sidecar names
+    schema: str | None  # logged schema JSON (None: never logged)
+    props: dict | None  # newest committed properties (None: none yet)
+    txn: dict[str, int]  # highest txn version per app id
+    history: tuple[Version, ...]
+
+
+_EMPTY = _Snapshot(-1, {}, frozenset(), None, None, {}, ())
+
+
 class LakehouseTable:
     def __init__(self, spark: SparkSession, root: str, schema: str, name: str,
                  partition_by: Sequence[str] = (),
-                 stats_columns: Sequence[str] = (),
-                 optimized_write: bool | None = None):
+                 stats_columns: Sequence[str] = ()):
         self.spark = spark
         self.base = os.path.join(root, schema, name)
         self.data_root = os.path.join(self.base, "data")
@@ -216,33 +246,14 @@ class LakehouseTable:
         #: columns whose per-file min/max are recorded in each commit
         #: for data skipping (Delta `dataSkippingNumIndexedCols`
         #: analogue). Numeric / string / timestamp columns only.
+        #: Setting them also keeps the CALLER's file layout on write
+        #: (see _stage): skipping relies on caller-arranged clustering
+        #: (e.g. a repartitionByRange before append), which a rebalance
+        #: or coalesce would merge back together.
         self.stats_columns = list(stats_columns)
-        #: OPTIMIZED WRITE (r14; Delta optimizedWrite / Iceberg
-        #: write.distribution-mode analogue): route every staged write
-        #: through one AQE-coalescible REBALANCE exchange so output
-        #: files land at the advisory partition size instead of one
-        #: file per upstream task (a 32-task plan writing a few
-        #: thousand rows otherwise commits 32 KB-sized files, and every
-        #: later read of that version pays per-file open + listing —
-        #: the guide-§6 small-files tax; at 100 TB the pre-write
-        #: rebalance is the standard write-distribution pattern).
-        #: Gated on staged size (r15, ``_rebalance_worthwhile``): a
-        #: commit whose plan-estimated bytes fit inside ONE advisory
-        #: partition skips the hint — the exchange would buy nothing
-        #: (its output coalesces to a single task anyway) and tiny
-        #: multi-commit lifecycles paid one no-op shuffle per commit.
-        #: Default: ON, except when ``stats_columns`` is set — data
-        #: skipping relies on CALLER-ARRANGED file clustering (e.g. a
-        #: repartitionByRange before append) and a rebalance would
-        #: merge those carefully-split files back together, gutting
-        #: min/max pruning. Pass True/False to override either way.
-        self.optimized_write = (
-            optimized_write
-            if optimized_write is not None
-            else not self.stats_columns
-        )
-        #: immutable-commit JSON cache (see _read_commit)
-        self._commit_cache: dict[int, dict] = {}
+        #: the last snapshot folded (commits are immutable, so it stays
+        #: valid; the next fold at or past it starts from it)
+        self._snap: _Snapshot | None = None
         os.makedirs(self.data_root, exist_ok=True)
         os.makedirs(self.log_root, exist_ok=True)
 
@@ -266,36 +277,62 @@ class LakehouseTable:
         return sorted(commits), sorted(checkpoints)
 
     def _read_commit(self, v: int) -> dict:
-        # committed files are immutable, so cache parsed JSON per
-        # instance: without this, last_txn_version() (called once per
-        # streaming micro-batch by append_txn) re-reads and re-parses
-        # the ENTIRE log each time — O(n²) commit-file I/O over a
-        # backlog of n batches. First read of a version still hits
-        # disk; concurrent writers only ever ADD new versions.
-        cached = self._commit_cache.get(v)
-        if cached is not None:
-            return cached
         with open(self._commit_path(v)) as f:
-            c = json.load(f)
-        self._commit_cache[v] = c
-        return c
+            return json.load(f)
 
-    def _live_at(self, v: int) -> list[str]:
-        """Live file set at version ``v``: newest checkpoint ≤ v, then
-        replay the commit tail — O(tail) commits, never the full log."""
-        _, checkpoints = self._log_entries()
-        base_v, live = -1, set()
+    def _snapshot(self, v: int | None = None) -> _Snapshot:
+        """THE fold: table state at version ``v`` (default: the head).
+        Starts from the newest base ≤ v — the instance's last folded
+        snapshot or a full checkpoint, whichever is newer — and folds
+        the commit tail (add/remove with stats, dv_add/dv_remove,
+        schema, props, txn, history), so a fresh instance opens at most
+        one checkpoint plus CHECKPOINT_EVERY - 1 commits. Every reader
+        of log state goes through here."""
+        commits, checkpoints = self._log_entries()
+        if v is None:
+            v = commits[-1] if commits else -1
+        base = self._snap
+        if base is None or base.version > v:
+            base = _EMPTY
         for cv in reversed(checkpoints):
-            if cv <= v:
-                with open(self._checkpoint_path(cv)) as f:
-                    live = set(json.load(f)["live"])
-                base_v = cv
+            if cv <= base.version:
                 break
-        for cv in range(base_v + 1, v + 1):
-            c = self._read_commit(cv)
-            live -= set(c["remove"])
-            live |= set(c["add"])
-        return sorted(live)
+            if cv > v:
+                continue
+            with open(self._checkpoint_path(cv)) as f:
+                cp = json.load(f)
+            if all(k in cp for k in _SNAPSHOT_KEYS):
+                base = _Snapshot(
+                    cv, {f: cp["stats"].get(f, {}) for f in cp["live"]},
+                    frozenset(cp["dv"]), cp["schema"], cp["props"],
+                    dict(cp["txn"]), tuple(Version(**h) for h in cp["history"]),
+                )
+                break
+        if base.version < v:
+            live, dv, txn = dict(base.live), set(base.dv), dict(base.txn)
+            schema, props, history = base.schema, base.props, list(base.history)
+            for cv in range(base.version + 1, v + 1):
+                c = self._read_commit(cv)
+                for f in c["remove"]:
+                    live.pop(f, None)
+                stats = c.get("stats", {})
+                live.update((f, stats.get(f, {})) for f in c["add"])
+                dv = (dv - set(c.get("dv_remove", ()))) | set(c.get("dv_add", ()))
+                schema = c.get("schema", schema)
+                props = c.get("props", props)
+                if c.get("txn"):
+                    # MAX, not last: txn versions need not be commit-order
+                    # monotone
+                    app, tv = c["txn"]["app_id"], int(c["txn"]["version"])
+                    txn[app] = max(tv, txn.get(app, tv))
+                history.append(
+                    Version(c["version"], c["operation"], c["ts"], c.get("rows"))
+                )
+            base = _Snapshot(
+                v, live, frozenset(dv), schema, props, txn, tuple(history)
+            )
+        self._snap = base
+        return base
 
     def _head(self) -> int:
         """Current head version, -1 for a table with no commits — the
@@ -372,10 +409,16 @@ class LakehouseTable:
             ) from None
         os.unlink(tmp)
         if v % CHECKPOINT_EVERY == 0 and v > 0:
+            s = self._snapshot(v)
             cp = {
                 "version": v,
-                "live": self._live_at(v),
-                "history": [vars(h) for h in self.describe_history_versions()],
+                "live": sorted(s.live),
+                "stats": {f: st for f, st in s.live.items() if st},
+                "dv": sorted(s.dv),
+                "schema": s.schema,
+                "props": s.props,
+                "txn": s.txn,
+                "history": [vars(h) for h in s.history],
             }
             tmp = self._checkpoint_path(v) + f".tmp-{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
@@ -383,44 +426,14 @@ class LakehouseTable:
             os.replace(tmp, self._checkpoint_path(v))
         return v
 
-    # ------------------------------------------------------- deletion vectors
-    def _dv_names_at(self, v: int) -> list[str]:
-        """Active deletion-vector sidecars at version ``v`` (commit
-        replay of dv_add/dv_remove, mirroring the file actions)."""
-        commits, _ = self._log_entries()
-        active: set[str] = set()
-        for cv in (c for c in commits if c <= v):
-            c = self._read_commit(cv)
-            active -= set(c.get("dv_remove", ()))
-            active |= set(c.get("dv_add", ()))
-        return sorted(active)
-
-    def _dv_paths_at(self, v: int) -> list[str]:
-        return [os.path.join(self.base, "_dv", n) for n in self._dv_names_at(v)]
-
     # ----------------------------------------------------------------- schema
-    def _schema_at(self, v: int) -> str | None:
-        """The table schema AT version ``v``: the newest commit ≤ v that
-        recorded one (every data-writing commit does; tables written
-        before schema tracking return None and fall back to footer
-        inference). Log files are tiny, so the backward scan is cheap;
-        it usually stops at the commit itself."""
-        commits, _ = self._log_entries()
-        for cv in reversed([c for c in commits if c <= v]):
-            c = self._read_commit(cv)
-            if "schema" in c:
-                return c["schema"]
-        return None
-
     def schema(self) -> "StructType | None":
         """Current logged table schema (Delta: schema lives in the log,
-        not in data-file footers)."""
+        not in data-file footers). Tables written before schema tracking
+        return None and fall back to footer inference."""
         from pyspark.sql.types import StructType
 
-        commits, _ = self._log_entries()
-        if not commits:
-            return None
-        sj = self._schema_at(commits[-1])
+        sj = self._snapshot().schema
         return StructType.fromJson(json.loads(sj)) if sj else None
 
     def _align_schema(self, df: DataFrame, merge_schema: bool) -> DataFrame:
@@ -467,56 +480,27 @@ class LakehouseTable:
         except FileNotFoundError:
             return {}
 
-    def _props(self) -> dict:
-        """Current table properties — LOG-authoritative (r12): the
-        newest props-bearing commit wins; ``_properties.json`` is only
-        the fallback for tables whose properties were never committed
-        (pre-first-commit bootstrap, or pre-versioning logs). The file
-        is a write-behind cache kept by :meth:`_set_props`; a writer
-        crashing between its commit (os.link, visible) and the file
-        write must not leave every reader silently enforcing stale
-        constraints or missing the change-feed flag. The reverse scan
-        stops at the newest props commit and rides the immutable
-        per-commit cache."""
-        commits, _ = self._log_entries()
-        for cv in reversed(commits):
-            c = self._read_commit(cv)
-            if "props" in c:
-                # DEEP copy: callers mutate the returned dict (nested
-                # constraint/tombstone edits); a reference into the
-                # immutable per-commit cache would silently rewrite
-                # the cached commit
-                return json.loads(json.dumps(c["props"]))
-        return self._file_props()
+    def _props(self, v: int | None = None) -> dict:
+        """Table properties AS OF version ``v`` (default: current) —
+        LOG-authoritative (r12): the newest props-bearing commit ≤ v
+        wins, and versions before the first one resolve to ``{}``.
+        ``_properties.json`` is only the fallback for tables whose
+        properties were never committed (pre-first-commit bootstrap, or
+        pre-versioning logs); it is a write-behind cache kept by
+        :meth:`_set_props`, so a writer crashing between its commit and
+        the file write cannot leave readers enforcing stale constraints."""
+        props = self._snapshot(v).props
+        if props is None:
+            props = {} if self._snapshot().props is not None else self._file_props()
+        # DEEP copy: callers mutate the returned dict (nested
+        # constraint/tombstone edits); the snapshot is shared
+        return json.loads(json.dumps(props))
 
     def _write_props(self, props: dict) -> None:
         tmp = self._properties_path() + f".tmp-{uuid.uuid4().hex}"
         with open(tmp, "w") as f:
             json.dump(props, f)
         os.replace(tmp, self._properties_path())
-
-    def _props_at(self, v: int) -> dict:
-        """Properties (constraints, column-mapping tombstones) AS OF
-        version ``v``: the newest commit ≤ v carrying a ``props``
-        snapshot. Property changes on an existing table go through the
-        CAS'd commit log (see :meth:`_set_props`), so this is exact for
-        them. Versions predating the first props-bearing commit had no
-        versioned properties — they resolve to ``{}``. Tables whose
-        properties were ONLY ever file-written (pre-first-commit
-        bootstrap, or logs from before props were versioned) fall back
-        to the live file — for those, history is unknowable and the
-        current state is the best answer."""
-        commits, _ = self._log_entries()
-        later_props = False
-        for cv in reversed(commits):
-            c = self._read_commit(cv)
-            if "props" not in c:
-                continue
-            if cv <= v:
-                # deep copy — see _props(): callers mutate the result
-                return json.loads(json.dumps(c["props"]))
-            later_props = True
-        return {} if later_props else self._file_props()
 
     def _set_props(self, props: dict, expect_head: int | None = None) -> None:
         """Durably update table properties. On an existing table this is
@@ -662,9 +646,7 @@ class LakehouseTable:
         ``version`` to see the constraint set AS OF that version
         (changes made through add/drop_constraint on an existing table
         are versioned in the commit log)."""
-        if version is not None:
-            return self._props_at(version).get("constraints", {})
-        return self._props().get("constraints", {})
+        return self._props(version).get("constraints", {})
 
     def _write_constraints(
         self, cons: dict[str, str], expect_head: int | None = None
@@ -788,24 +770,22 @@ class LakehouseTable:
             df = df.select(*[F.col(c).alias(phys[c]) for c in df.columns])
         txid = uuid.uuid4().hex[:12]
         staging = os.path.join(self.base, f"_staging-{txid}")
-        if (
-            self.optimized_write
-            and not preserve_layout
-            and self._rebalance_worthwhile(df)
-        ):
-            # one AQE-coalescible exchange sizes the output files (see
-            # __init__); hash-distributing by the partition columns
-            # additionally co-locates each partition dir's rows so a
-            # partitioned write emits one well-sized file per dir per
-            # coalesced task instead of every task writing every dir.
-            # ``preserve_layout`` exempts writers that ARE the layout
-            # (compact/ZORDER: their partition count and within-file
-            # sort are the product being committed).
-            df = (
-                df.hint("rebalance", *self.partition_by)
-                if self.partition_by
-                else df.hint("rebalance")
-            )
+        if not preserve_layout and not self.stats_columns:
+            # OPTIMIZED WRITE (Delta optimizedWrite / Iceberg
+            # write.distribution-mode analogue): never commit one file
+            # per upstream task — every later read of the version pays
+            # per-file open + listing (the small-files tax). Above one
+            # advisory partition, one AQE-coalescible REBALANCE exchange
+            # (hash-distributed by the partition columns, so each dir's
+            # rows land together) sizes the files; below it the
+            # exchange would buy nothing, so coalesce(1) — no shuffle —
+            # writes one file per partition dir. ``preserve_layout``
+            # (compact/ZORDER) and ``stats_columns`` tables keep the
+            # layout they were handed: it IS the product being committed.
+            if self._rebalance_worthwhile(df):
+                df = df.hint("rebalance", *self.partition_by)
+            else:
+                df = df.coalesce(1)
         writer = df.write.mode("overwrite")
         if self.partition_by:
             writer = writer.partitionBy(*self.partition_by)
@@ -840,24 +820,26 @@ class LakehouseTable:
                 )
                 self._enforce(cons, logical_staged, context="write")
             except ConstraintViolationError:
-                for f in moved:
-                    try:
-                        os.remove(os.path.join(self.data_root, f))
-                    except FileNotFoundError:
-                        pass
+                self._unstage(moved)
                 raise
         return moved
 
-    def _removed_in_partitions(
-        self, parts: DataFrame, at_version: int | None = None
-    ) -> list[str]:
+    def _unstage(self, files: list[str]) -> None:
+        """Delete staged data files that will never be committed."""
+        for f in files:
+            try:
+                os.remove(os.path.join(self.data_root, f))
+            except FileNotFoundError:
+                pass
+
+    def _removed_in_partitions(self, parts: DataFrame, head: int) -> list[str]:
         """Live files under the partition dirs named by ``parts`` —
-        the single implementation of the rewrite "removed" list for
-        merge/delete/update (three verbatim copies before r11: a fix
-        to the dir-name rendering must hit every writer at once).
-        ``at_version`` pins the file listing to the snapshot the caller
-        read (r12: a fresh listing here could include files a racing
-        writer just committed — removing files the rewrite never read)."""
+        the rewrite "removed" list of :meth:`_rewrite` (three verbatim
+        copies before r11: a fix to the dir-name rendering must hit
+        every writer at once). ``head`` pins the file listing to the
+        snapshot the caller read (r12: a fresh listing here could
+        include files a racing writer just committed — removing files
+        the rewrite never read)."""
         from football_lakehouse_spark.functions.guards import (
             PER_WRITE_PARTITION_BOUND,
             bounded_collect,
@@ -871,12 +853,8 @@ class LakehouseTable:
                 parts, PER_WRITE_PARTITION_BOUND, "_removed_in_partitions"
             )
         ]
-        live = (
-            self.current_files() if at_version is None
-            else self._live_at(at_version)
-        )
         return [
-            f for f in live
+            f for f in sorted(self._snapshot(head).live)
             if any(f.startswith(d + "/") for d in touched_dirs)
         ]
 
@@ -961,18 +939,6 @@ class LakehouseTable:
                 out[rel] = fstats
         return out
 
-    def _stats_at(self, v: int) -> dict:
-        """File→stats map at version ``v`` (same add/remove replay as
-        the live-file set)."""
-        commits, _ = self._log_entries()
-        stats: dict[str, dict] = {}
-        for cv in (c for c in commits if c <= v):
-            c = self._read_commit(cv)
-            for f in c.get("remove", ()):
-                stats.pop(f, None)
-            stats.update(c.get("stats", {}))
-        return stats
-
     def pruned_files(
         self, skipping: dict, version: int | None = None
     ) -> list[str]:
@@ -984,12 +950,10 @@ class LakehouseTable:
         O(files) driver-side metadata, zero data I/O — the point at
         100 TB: a time-range query over a date-clustered table opens
         only the handful of files whose footer range overlaps."""
-        commits, _ = self._log_entries()
-        v = commits[-1] if version is None else version
-        stats = self._stats_at(v)
+        live = self._snapshot(version).live
         keep = []
-        for f in self._live_at(v):
-            fstats = stats.get(f, {})
+        for f in sorted(live):
+            fstats = live[f]
             drop = False
             for col, (lo, hi) in skipping.items():
                 rng = fstats.get(col)
@@ -1053,6 +1017,16 @@ class LakehouseTable:
         Operations that READ the table (overwrite/delete/update/merge)
         still surface ConcurrentWriteError immediately: their result
         may depend on state the winner changed."""
+        return self._append(df, merge_schema)
+
+    def _append(
+        self, df: DataFrame, merge_schema: bool, txn: dict | None = None
+    ) -> int | None:
+        """The staged-once rebase loop of :meth:`append` and
+        :meth:`append_txn`. With a ``txn``, a lost CAS first re-probes
+        whether a concurrent REPLICA committed this very txn: if so the
+        staged files are dropped (the duplicate data can never be
+        referenced) and None is returned."""
         df = self._align_schema(df, merge_schema)
         props_before = self._props()
         files = self._stage(df)
@@ -1060,28 +1034,27 @@ class LakehouseTable:
         for attempt in range(APPEND_REBASE_RETRIES + 1):
             try:
                 return self._commit(
-                    "append", files, [], rows=None, schema_json=schema_json
+                    "append", files, [], rows=None, schema_json=schema_json,
+                    txn=txn,
                 )
             except ConcurrentWriteError:
+                if txn is not None and self._txn_committed(txn):
+                    self._unstage(files)
+                    return None
                 if attempt == APPEND_REBASE_RETRIES:
                     raise
                 schema_json = self._rebase_append_schema(schema_json, props_before)
 
     def last_txn_version(self, app_id: str) -> int | None:
         """Highest transaction version committed for ``app_id`` (Delta
-        ``txnAppId``/``txnVersion`` parity). MAX semantics requires
-        inspecting every commit (txn versions are not required to be
-        commit-order monotone), but the immutable-commit cache in
-        :meth:`_read_commit` makes the per-micro-batch cost O(new
-        commits) I/O after the first call — not a full-log re-read."""
-        commits, _ = self._log_entries()
-        best: int | None = None
-        for cv in commits:
-            txn = self._read_commit(cv).get("txn")
-            if txn and txn.get("app_id") == app_id:
-                v = int(txn["version"])
-                best = v if best is None or v > best else best
-        return best
+        ``txnAppId``/``txnVersion`` parity; MAX, since txn versions need
+        not be commit-order monotone) — read from the snapshot, so a
+        per-micro-batch probe costs O(new commits), not a log re-read."""
+        return self._snapshot().txn.get(app_id)
+
+    def _txn_committed(self, txn: dict) -> bool:
+        last = self.last_txn_version(txn["app_id"])
+        return last is not None and txn["version"] <= last
 
     def append_txn(
         self, df: DataFrame, app_id: str, txn_version: int,
@@ -1096,34 +1069,10 @@ class LakehouseTable:
         and a failed-then-replayed micro-batch can never double-append,
         even though the data write itself is not atomic with the
         checkpoint."""
-        last = self.last_txn_version(app_id)
-        if last is not None and txn_version <= last:
+        txn = {"app_id": app_id, "version": int(txn_version)}
+        if self._txn_committed(txn):
             return None
-        df = self._align_schema(df, merge_schema)
-        props_before = self._props()
-        files = self._stage(df)
-        schema_json = self._staged_schema
-        for attempt in range(APPEND_REBASE_RETRIES + 1):
-            try:
-                return self._commit(
-                    "append", files, [], rows=None, schema_json=schema_json,
-                    txn={"app_id": app_id, "version": int(txn_version)},
-                )
-            except ConcurrentWriteError:
-                # a concurrent REPLICA may have committed this very txn:
-                # re-probe before rebasing, and drop our staged files so
-                # the duplicate data can never be referenced
-                last = self.last_txn_version(app_id)
-                if last is not None and txn_version <= last:
-                    for f in files:
-                        try:
-                            os.remove(os.path.join(self.data_root, f))
-                        except FileNotFoundError:
-                            pass
-                    return None
-                if attempt == APPEND_REBASE_RETRIES:
-                    raise
-                schema_json = self._rebase_append_schema(schema_json, props_before)
+        return self._append(df, merge_schema, txn)
 
     def append_if_new(self, df: DataFrame, hash_col: str) -> int | None:
         """Content-hash idempotent append (reference D2: skip the write
@@ -1188,17 +1137,14 @@ class LakehouseTable:
                     schema_json=self._staged_schema, expect_head=head,
                 )
             except ConcurrentWriteError:
-                for f in files:
-                    try:
-                        os.remove(os.path.join(self.data_root, f))
-                    except FileNotFoundError:
-                        pass
+                self._unstage(files)
                 if attempt == APPEND_REBASE_RETRIES:
                     raise
 
     def overwrite(self, df: DataFrame) -> int:
         head = self._head()  # snapshot pin: the whole op reads AT head
-        live = self._live_at(head) if head >= 0 else []
+        snap = self._snapshot(head)
+        live = sorted(snap.live)
         cdf = None
         if live and self.change_feed_enabled():
             old_rows = self.read(version=head)
@@ -1209,10 +1155,42 @@ class LakehouseTable:
         return self._commit(
             "overwrite", self._stage(df), live, rows=None,
             schema_json=self._staged_schema,
-            dv_remove=self._dv_names_at(head) if live else None,
+            dv_remove=sorted(snap.dv) if live else None,
             cdf=cdf,
             expect_head=head,
         )
+
+    def _rewrite(
+        self, operation: str, head: int, base: DataFrame,
+        parts: DataFrame | None,
+        rewrite: Callable[[DataFrame], DataFrame],
+        feed: Callable[[DataFrame, DataFrame], DataFrame],
+    ) -> int:
+        """The one copy-on-write tail of merge/delete/update. The
+        touched slice is ``base``'s rows in the partitions named by
+        ``parts`` (null-safe, so the NULL partition is rewritten too),
+        or the whole ``base`` when ``parts`` is None (unpartitioned).
+        It is restaged as ``rewrite(touched)`` — with
+        ``feed(touched, rewritten)`` logged as change data when the
+        feed is on — and committed at ``head`` replacing exactly the
+        files the slice was read from: the live files under those
+        partition dirs, or every live file."""
+        touched = (
+            base if parts is None
+            else _null_safe_semi(base, parts, self.partition_by)
+        )
+        rewritten = rewrite(touched)
+        cdf = None
+        if self.change_feed_enabled():
+            cdf = self._cdf_write(feed(touched, rewritten), base.columns)
+        new_files = self._stage(rewritten)
+        removed = (
+            sorted(self._snapshot(head).live) if parts is None
+            else self._removed_in_partitions(parts, head)
+        )
+        return self._commit(operation, new_files, removed, rows=None,
+                            schema_json=self._staged_schema, cdf=cdf,
+                            expect_head=head)
 
     def merge(self, updates: DataFrame, keys: Sequence[str]) -> int:
         """Delta-style MERGE: upsert by key, copy-on-write.
@@ -1262,6 +1240,7 @@ class LakehouseTable:
             return self.append(updates)
         head = self._head()  # snapshot pin: read, rewrite, and removal
         base = self.read(version=head)  # sets all derive from ONE version
+        parts = None
         if self.partition_by:
             missing = set(self.partition_by) - set(updates.columns)
             if missing:
@@ -1291,30 +1270,13 @@ class LakehouseTable:
                 .select(*self.partition_by).distinct()
             )
             parts = parts_new.unionByName(parts_old).distinct()
-            touched_base = _null_safe_semi(base, parts, self.partition_by)
-            merged = merge_upsert(touched_base, updates, keys)
-            cdf = None
-            if self.change_feed_enabled():
-                from football_lakehouse_spark.lakehouse.cdc import change_feed
+        from football_lakehouse_spark.lakehouse.cdc import change_feed
 
-                cdf = self._cdf_write(
-                    change_feed(touched_base, merged, keys), base.columns
-                )
-            new_files = self._stage(merged)
-            removed = self._removed_in_partitions(parts, at_version=head)
-            return self._commit("merge", new_files, removed, rows=None,
-                                schema_json=self._staged_schema, cdf=cdf,
-                                expect_head=head)
-        merged = merge_upsert(base, updates, keys)
-        cdf = None
-        if self.change_feed_enabled():
-            from football_lakehouse_spark.lakehouse.cdc import change_feed
-
-            cdf = self._cdf_write(change_feed(base, merged, keys), base.columns)
-        new_files = self._stage(merged)
-        return self._commit("merge", new_files, self._live_at(head), rows=None,
-                            schema_json=self._staged_schema, cdf=cdf,
-                            expect_head=head)
+        return self._rewrite(
+            "merge", head, base, parts,
+            lambda touched: merge_upsert(touched, updates, keys),
+            lambda touched, merged: change_feed(touched, merged, keys),
+        )
 
     def delete(self, predicate: Column, deletion_vectors: bool = False) -> int:
         """Delta-style DELETE: copy-on-write removal of rows matching
@@ -1365,26 +1327,14 @@ class LakehouseTable:
         matches = base.where(predicate)
         if matches.limit(1).isEmpty():
             return -1
-        cdf = None
-        if self.change_feed_enabled():
-            cdf = self._cdf_write(
-                matches.select(F.lit("delete").alias("change_type"), "*"),
-                base.columns,
-            )
-        kept_pred = ~predicate.eqNullSafe(F.lit(True))
-        if self.partition_by:
-            parts = matches.select(*self.partition_by).distinct()
-            touched = _null_safe_semi(base, parts, self.partition_by)
-            kept_rows = touched.where(kept_pred)
-            new_files = self._stage(kept_rows)
-            removed = self._removed_in_partitions(parts, at_version=head)
-            return self._commit("delete", new_files, removed, rows=None,
-                                schema_json=self._staged_schema, cdf=cdf,
-                                expect_head=head)
-        new_files = self._stage(base.where(kept_pred))
-        return self._commit("delete", new_files, self._live_at(head), rows=None,
-                            schema_json=self._staged_schema, cdf=cdf,
-                            expect_head=head)
+        parts = matches.select(*self.partition_by).distinct()
+        return self._rewrite(
+            "delete", head, base, parts if self.partition_by else None,
+            lambda touched: touched.where(~predicate.eqNullSafe(F.lit(True))),
+            lambda _t, _r: matches.select(
+                F.lit("delete").alias("change_type"), "*"
+            ),
+        )
 
     def update(self, predicate: Column, assignments: dict[str, Column]) -> int:
         """Delta-style ``UPDATE … SET`` : copy-on-write rewrite of rows
@@ -1414,15 +1364,16 @@ class LakehouseTable:
         for col in assignments:
             if col not in base.columns:
                 raise ValueError(f"{self.base}: no column {col!r}")
+
+        def set_col(c: str) -> Column:
+            if c not in assignments:
+                return F.col(c)
+            return F.when(hit, assignments[c]).otherwise(F.col(c)).alias(c)
+
         logged = self.schema()
         if logged is not None:
             logged_types = {f.name: f.dataType for f in logged.fields}
-            probe = base.select(
-                *[
-                    F.when(hit, assignments[c]).otherwise(F.col(c)).alias(c)
-                    for c in assignments
-                ]
-            )
+            probe = base.select(*[set_col(c) for c in assignments])
             for f in probe.schema.fields:
                 want = logged_types.get(f.name)
                 if want is not None and want.simpleString() != f.dataType.simpleString():
@@ -1432,48 +1383,26 @@ class LakehouseTable:
                         f"has {want.simpleString()}; cast the expression "
                         f"explicitly"
                     )
-        cdf = None
-        if self.change_feed_enabled():
+
+        def feed(_touched: DataFrame, _updated: DataFrame) -> DataFrame:
             post = matches.select(
                 *[
                     assignments[c].alias(c) if c in assignments else F.col(c)
                     for c in base.columns
                 ]
             )
-            feed = matches.select(
+            return matches.select(
                 F.lit("update_preimage").alias("change_type"), "*"
             ).unionByName(
                 post.select(F.lit("update_postimage").alias("change_type"), "*")
             )
-            cdf = self._cdf_write(feed, base.columns)
-        if self.partition_by:
-            parts = matches.select(*self.partition_by).distinct()
-            touched = _null_safe_semi(base, parts, self.partition_by)
-            updated = touched.select(
-                *[
-                    F.when(hit, assignments[c]).otherwise(F.col(c)).alias(c)
-                    if c in assignments
-                    else F.col(c)
-                    for c in base.columns
-                ]
-            )
-            new_files = self._stage(updated)
-            removed = self._removed_in_partitions(parts, at_version=head)
-            return self._commit("update", new_files, removed, rows=None,
-                                schema_json=self._staged_schema, cdf=cdf,
-                                expect_head=head)
-        updated = base.select(
-            *[
-                F.when(hit, assignments[c]).otherwise(F.col(c)).alias(c)
-                if c in assignments
-                else F.col(c)
-                for c in base.columns
-            ]
+
+        parts = matches.select(*self.partition_by).distinct()
+        return self._rewrite(
+            "update", head, base, parts if self.partition_by else None,
+            lambda touched: touched.select(*[set_col(c) for c in base.columns]),
+            feed,
         )
-        new_files = self._stage(updated)
-        return self._commit("update", new_files, self._live_at(head), rows=None,
-                            schema_json=self._staged_schema, cdf=cdf,
-                            expect_head=head)
 
     # ------------------------------------------------------ change data feed
     def enable_change_feed(self) -> None:
@@ -1502,45 +1431,6 @@ class LakehouseTable:
         )
         return name
 
-    def _read_files(self, files: list[str], v: int) -> DataFrame:
-        """Read an explicit file list under version ``v``'s schema and
-        column mapping (the add-files of an append, served as CDF
-        insert rows)."""
-        paths = [
-            f if os.path.isabs(f) else os.path.join(self.data_root, f)
-            for f in files
-        ]
-        missing = [pp for pp in paths if not os.path.exists(pp)]
-        if missing:
-            raise FileNotFoundError(
-                f"change feed of {self.base} references vacuumed files "
-                f"(e.g. {missing[0]}); CDF beyond the retention horizon "
-                f"is not readable"
-            )
-        reader = self.spark.read
-        sj = self._schema_at(v)
-        logical = None
-        if sj is not None:
-            from pyspark.sql.types import StructField, StructType
-
-            logical = StructType.fromJson(json.loads(sj))
-            reader = reader.schema(
-                StructType(
-                    [
-                        StructField(self._phys(f), f.dataType, True)
-                        for f in logical.fields
-                    ]
-                )
-            )
-        if not any(os.path.isabs(f) for f in files):
-            reader = reader.option("basePath", self.data_root)
-        df = reader.parquet(*paths)
-        if logical is not None:
-            df = df.select(
-                *[F.col(self._phys(f)).alias(f.name) for f in logical.fields]
-            )
-        return df
-
     def table_changes(self, v_from: int, v_to: int | None = None) -> DataFrame:
         """Delta ``table_changes(...)`` parity over LOGGED change data:
         the row-level feed for every version in ``(v_from, v_to]``,
@@ -1563,9 +1453,7 @@ class LakehouseTable:
         commits, _ = self._log_entries()
         v_to = commits[-1] if v_to is None else v_to
         out: DataFrame | None = None
-        for v in commits:
-            if not (v_from < v <= v_to):
-                continue
+        for v in (c for c in commits if v_from < c <= v_to):
             c = self._read_commit(v)
             op = c.get("operation")
             if op == "overwrite" and c.get("remove") and "cdf" not in c:
@@ -1587,8 +1475,10 @@ class LakehouseTable:
                     )
                 )
             if op in ("append", "overwrite") and c.get("add"):
+                # the version's deletion vectors still apply, though
+                # none can name a file this commit just added
                 parts.append(
-                    self._read_files(c["add"], v).select(
+                    self._read(v, files=c["add"]).select(
                         F.lit("insert").alias("change_type"), "*"
                     )
                 )
@@ -1655,9 +1545,8 @@ class LakehouseTable:
                 "shallow_clone of a partitioned table is not supported; "
                 "use compact() into an unpartitioned copy first"
             )
-        commits, _ = self._log_entries()
-        v = commits[-1] if version is None else version
-        if self._dv_names_at(v):
+        snap = self._snapshot(version)
+        if snap.dv:
             raise ValueError(
                 "shallow_clone of a table with active deletion vectors is "
                 "not supported (the sidecars live under the source); run "
@@ -1668,9 +1557,8 @@ class LakehouseTable:
         )
         if clone.exists():
             raise ValueError(f"clone target {clone.base} already exists")
-        files = [os.path.join(self.data_root, f) for f in self._live_at(v)]
-        clone._commit("clone", files, [], rows=None,
-                      schema_json=self._schema_at(v))
+        files = [os.path.join(self.data_root, f) for f in sorted(snap.live)]
+        clone._commit("clone", files, [], rows=None, schema_json=snap.schema)
         carried = {
             k: (dict(val) if isinstance(val, dict) else list(val))
             for k, val in self._props().items()
@@ -1693,19 +1581,17 @@ class LakehouseTable:
         retention trade-off as :meth:`read`, surfaced on the next read.
         """
         head = self._head()  # snapshot pin (see _commit expect_head)
-        target = set(self._live_at(version))
-        current = set(self._live_at(head))
         # deletion vectors are part of a version's logical content:
         # restoring past a DV delete must resurrect the rows (and
         # restoring TO a DV-bearing version must re-apply its vectors)
-        dv_target = set(self._dv_names_at(version))
-        dv_current = set(self._dv_names_at(head))
+        old, cur = self._snapshot(version), self._snapshot(head)
+        target, current = set(old.live), set(cur.live)
         # properties: constraints roll back WITH the data (Delta
         # semantics — RESTORE restores table metadata), but column-
         # mapping tombstones are monotone: a physical name claimed at
         # ANY point must stay claimed forever, or a post-restore re-add
         # could alias stale bytes in still-time-travellable files
-        props = dict(self._props_at(version))
+        props = self._props(version)
         tombs = set(props.get("dropped_physical", [])) | set(
             self._props().get("dropped_physical", [])
         )
@@ -1713,9 +1599,9 @@ class LakehouseTable:
             props["dropped_physical"] = sorted(tombs)
         v_new = self._commit(
             "restore", sorted(target - current), sorted(current - target),
-            rows=None, schema_json=self._schema_at(version),
-            dv_add=sorted(dv_target - dv_current),
-            dv_remove=sorted(dv_current - dv_target),
+            rows=None, schema_json=old.schema,
+            dv_add=sorted(old.dv - cur.dv),
+            dv_remove=sorted(cur.dv - old.dv),
             props=props,
             expect_head=head,
         )
@@ -1732,8 +1618,7 @@ class LakehouseTable:
         return commits[-1]
 
     def current_files(self) -> list[str]:
-        commits, _ = self._log_entries()
-        return self._live_at(commits[-1]) if commits else []
+        return sorted(self._snapshot().live)
 
     def version_at_timestamp(self, ts: float) -> int:
         """``TIMESTAMP AS OF`` resolution (Delta semantics, reference
@@ -1768,27 +1653,30 @@ class LakehouseTable:
         return self._read(version, skipping=skipping)
 
     def _read(self, version: int | None, with_lineage: bool = False,
-              skipping: dict | None = None) -> DataFrame:
-        """Internal read. ``with_lineage`` keeps the per-row provenance
-        columns ``__file``/``__ri`` (``_metadata.file_path`` /
-        ``row_index``) that deletion vectors key on."""
-        commits, _ = self._log_entries()
-        if not commits:
+              skipping: dict | None = None,
+              files: list[str] | None = None) -> DataFrame:
+        """The one read path. ``with_lineage`` keeps the per-row
+        provenance columns ``__file``/``__ri`` (``_metadata.file_path``
+        / ``row_index``) that deletion vectors key on. ``files``
+        narrows the scan to a subset of files under version
+        ``version``'s schema, column mapping and deletion vectors (the
+        add-files of an append, served as change-feed inserts)."""
+        snap = self._snapshot(version)
+        if snap.version < 0:
             raise FileNotFoundError(f"table {self.base} has no committed version")
-        v = commits[-1] if version is None else version
-        files = self._live_at(v)
+        v, sj = snap.version, snap.schema
+        if files is None:
+            files = sorted(snap.live)
         if skipping:
             allowed = set(self.pruned_files(skipping, v))
             files = [f for f in files if f in allowed]
-            if not files:
+            if not files and sj is not None:
                 # every file pruned: an empty frame with the right schema
-                sj = self._schema_at(v)
-                if sj is not None:
-                    from pyspark.sql.types import StructType
+                from pyspark.sql.types import StructType
 
-                    return local_frame(
-                        self.spark, [], StructType.fromJson(json.loads(sj))
-                    )
+                return local_frame(
+                    self.spark, [], StructType.fromJson(json.loads(sj))
+                )
         paths = [os.path.join(self.data_root, f) for f in files]
         if not paths:
             raise FileNotFoundError(f"version {v} of {self.base} is empty")
@@ -1800,7 +1688,6 @@ class LakehouseTable:
                 f"horizon is not possible"
             )
         reader = self.spark.read
-        sj = self._schema_at(v)
         logical = None
         if sj is not None:
             # Delta parity: the schema of record is the LOG's, not the
@@ -1825,7 +1712,7 @@ class LakehouseTable:
             # basePath would be wrong
             reader = reader.option("basePath", self.data_root)
         df = reader.parquet(*paths)
-        dvs = self._dv_paths_at(v)
+        dvs = [os.path.join(self.base, "_dv", n) for n in sorted(snap.dv)]
         need_lineage = with_lineage or bool(dvs)
         if need_lineage:
             df = df.select(
@@ -1851,21 +1738,7 @@ class LakehouseTable:
         return df
 
     def describe_history_versions(self) -> list[Version]:
-        commits, checkpoints = self._log_entries()
-        hist: list[Version] = []
-        base_v = -1
-        for cv in reversed(checkpoints):
-            with open(self._checkpoint_path(cv)) as f:
-                hist = [Version(**h) for h in json.load(f)["history"]]
-            base_v = cv
-            break
-        for cv in commits:
-            if cv > base_v:
-                c = self._read_commit(cv)
-                hist.append(
-                    Version(c["version"], c["operation"], c["ts"], c.get("rows"))
-                )
-        return hist
+        return list(self._snapshot().history)
 
     def describe_detail(self) -> dict:
         """``DESCRIBE DETAIL`` equivalent: current-version file count,
@@ -1873,23 +1746,22 @@ class LakehouseTable:
         deletion vectors, declared constraints, schema column count) —
         the numbers an OPTIMIZE/VACUUM policy decides on. Control-plane
         only: O(files) stat calls, no data read."""
-        files = self.current_files()
+        snap = self._snapshot()
         sizes = []
-        for f in files:
+        for f in snap.live:
             p = f if os.path.isabs(f) else os.path.join(self.data_root, f)
             try:
                 sizes.append(os.path.getsize(p))
             except OSError:
                 sizes.append(0)
-        v = self.current_version()
         sch = self.schema()
         return {
-            "version": v,
-            "num_files": len(files),
+            "version": snap.version,
+            "num_files": len(snap.live),
             "size_bytes": sum(sizes),
             "min_file_bytes": min(sizes) if sizes else 0,
             "max_file_bytes": max(sizes) if sizes else 0,
-            "num_deletion_vectors": len(self._dv_names_at(v)),
+            "num_deletion_vectors": len(snap.dv),
             "num_constraints": len(self.constraints()),
             "num_columns": len(sch.fields) if sch else None,
             "partition_columns": list(self.partition_by),
@@ -1915,8 +1787,9 @@ class LakehouseTable:
         keep: set[str] = set()
         keep_dv: set[str] = set()
         for v in commits[-retain_last:]:
-            keep.update(self._live_at(v))
-            keep_dv.update(self._dv_names_at(v))
+            snap = self._snapshot(v)
+            keep.update(snap.live)
+            keep_dv.update(snap.dv)
         deleted = 0
         for dirpath, _dirs, files in os.walk(self.data_root):
             for fn in files:
@@ -1961,12 +1834,13 @@ class LakehouseTable:
         else:
             df = df.coalesce(target_partitions)
         # preserve_layout: the partition count / within-file sort IS the
-        # compaction product — the optimized-write rebalance must not
-        # re-split or merge it (r14)
+        # compaction product — the optimized write must not re-split or
+        # merge it (r14)
         new_files = self._stage(df, preserve_layout=True)
-        return self._commit("optimize", new_files, self._live_at(head), rows=None,
+        snap = self._snapshot(head)
+        return self._commit("optimize", new_files, sorted(snap.live), rows=None,
                             schema_json=self._staged_schema,
-                            dv_remove=self._dv_names_at(head),
+                            dv_remove=sorted(snap.dv),
                             expect_head=head)
 
     def compact_to_size(self, target_file_bytes: int = 128 << 20,

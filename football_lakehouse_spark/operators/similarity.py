@@ -655,15 +655,19 @@ def refine_hot_cells(
         corpus, centroids, id_col=id_col, vec_col=vec_col,
         id_out=id_col, normalize=normalize,
     ).localCheckpoint(eager=True)
-    total = corpus.count()
-    hot_rows = bounded_collect(
-        assigned.groupBy("cell").count()
-        .where(F.col("count") > max_cell_frac * total)
-        .select("cell").orderBy("cell"),
+    # assign_cells emits exactly one row per corpus row (a NULL or
+    # ragged embedding raises), so the per-cell counts also give the
+    # corpus total: one bounded collect, no separate corpus.count() job
+    cell_counts = bounded_collect(
+        assigned.groupBy("cell").count(),
         CONTROL_PLANE_BOUND,
-        "refine_hot_cells hot-cell list",
+        "refine_hot_cells per-cell counts",
     )
-    if not hot_rows:
+    total = sum(r["count"] for r in cell_counts)
+    hot_cells = sorted(
+        r["cell"] for r in cell_counts if r["count"] > max_cell_frac * total
+    )
+    if not hot_cells:
         return assigned, centroids
     n_base = bounded_collect(
         centroids.agg(F.max("cell")), 1, "refine_hot_cells cell-count probe"
@@ -671,7 +675,7 @@ def refine_hot_cells(
     hot = F.broadcast(
         local_frame(
             corpus.sparkSession,
-            [(r["cell"], i) for i, r in enumerate(hot_rows)],
+            [(c, i) for i, c in enumerate(hot_cells)],
             "cell int, hix int",
         )
     )

@@ -2062,10 +2062,28 @@ def _postings_index(docs: DataFrame) -> DataFrame:
     ``doc_id·10⁶ + pos`` occurrence, so ``tf = size(postings)`` and
     ``df = #distinct(packed div 10⁶)`` (exact integral div — the same
     unpacking q214's serving half uses). Same values, half the
-    shuffles: the build sub-plan is ONE term-keyed exchange."""
+    shuffles: the build sub-plan is ONE term-keyed exchange.
+
+    The packing is exact only for a non-NULL ``doc_id ≥ 0`` and
+    ``pos < 10⁶``; any other row raises ``POSTINGS_PACKING_OUT_OF_RANGE``
+    when the plan runs instead of silently mis-deriving ``df``/``tf``."""
     p = docs.select(
         "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos0", "term")
     ).select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
+    unpackable = (
+        F.col("doc_id").isNull() | (F.col("doc_id") < 0)
+        | (F.col("pos") >= 1000000)
+    )
+    p = p.select(
+        "doc_id", "term",
+        F.when(
+            unpackable,
+            F.raise_error(F.lit(
+                "POSTINGS_PACKING_OUT_OF_RANGE: postings pack doc_id*10^6 + "
+                "pos, which needs a non-NULL doc_id >= 0 and pos < 10^6"
+            )),
+        ).otherwise(F.col("pos")).alias("pos"),
+    )
     return (
         p.groupBy("term")
         .agg(

@@ -118,7 +118,7 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
     ("operators/similarity.py", "kmeans_cells"):
         "centroid table (n_cells rows, config-bounded)",
     ("operators/similarity.py", "refine_hot_cells"):
-        "hot-cell list + split centroids (bounded by n_cells)",
+        "per-cell counts + split centroids (bounded by n_cells)",
     ("operators/similarity.py", "semantic_dedup"):
         "1-row probe: biggest cell's rows and the centroid dim "
         "(oversized-cell byte guard)",

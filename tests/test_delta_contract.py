@@ -588,7 +588,7 @@ def test_c15_vacuum_reclaims_deletion_vector_sidecars(spark, make_table):
     import os
 
     t = make_table("dv_vac")
-    if not hasattr(t, "_dv_names_at"):
+    if not hasattr(t, "_snapshot"):
         pytest.skip("DV sidecar layout is parquet-branch-specific (native "
                     "Delta stores DVs inside its own log)")
     t.append(_df(spark, [(i, f"v{i}") for i in range(10)]))

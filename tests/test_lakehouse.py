@@ -71,13 +71,12 @@ def test_merge_insert_and_update(spark, tmp_path):
 
 
 def test_vacuum_and_compact(spark, events, tmp_path):
-    # optimized_write=False: this test MANUFACTURES an 8-small-file
-    # version to count what vacuum unreferences; the r14 default would
-    # rebalance the append into one well-sized file
-    t = LakehouseTable(
-        spark, str(tmp_path), "silver", "ev", optimized_write=False
-    )
-    t.append(events.limit(100).repartition(8))
+    # eight small appends MANUFACTURE an 8-small-file version to count
+    # what vacuum unreferences (the optimized write stages each small
+    # append as one file)
+    t = LakehouseTable(spark, str(tmp_path), "silver", "ev")
+    for _ in range(8):
+        t.append(events.limit(12))
     t.overwrite(events.limit(10))
     assert len(t.current_files()) >= 1
     deleted = t.vacuum(retain_last=1)
@@ -622,7 +621,7 @@ def test_deletion_vectors_merge_on_read(spark, events, tmp_path):
     # compact materialises the filtered state and purges the vectors
     expect = t.read().count()
     t.compact(target_partitions=1)
-    assert t._dv_names_at(t.current_version()) == []
+    assert not t._snapshot(t.current_version()).dv
     assert t.read().count() == expect
     assert t.read().where(F.col("event_type") == "purchase").count() == 0
 
@@ -922,7 +921,8 @@ def test_data_skipping_stats_lifecycle(spark, tmp_path):
     )
     # DELETE rewrites files; replay must drop the removed files' stats
     t.delete(F.col("o_orderkey") % 7 == 0)
-    stats = t._stats_at(t.current_version())
+    live = t._snapshot(t.current_version()).live
+    stats = {f: st for f, st in live.items() if st}
     assert set(stats) <= set(t.current_files())
     # rewritten files carry fresh stats, so pruning still works
     pf2 = t.pruned_files({"o_orderdate": (lo, hi)})
@@ -945,17 +945,186 @@ def test_data_skipping_stats_lifecycle(spark, tmp_path):
     )
 
 
+def _fold_table(spark, root, name, **kw):
+    return LakehouseTable(spark, root, "s", name, **kw)
+
+
+def _no_checkpoints(t):
+    """Hide every checkpoint from ``t``: its folds start at version 0."""
+    real = t._log_entries
+    t._log_entries = lambda: (real()[0], [])  # type: ignore[method-assign]
+    return t
+
+
+def test_snapshot_fold_equals_checkpointless_replay(spark, tmp_path):
+    """More than 2×CHECKPOINT_EVERY commits mixing partitioned merges
+    (one moving a key across partitions), a DV delete, stats columns,
+    merge_schema evolution, rename/drop column, constraints, the change
+    feed and append_txn: every version read by a fresh instance (fold
+    from the newest checkpoint) equals the same version read with every
+    checkpoint hidden (fold from version 0) — rows, active DVs, per-file
+    stats, constraints(version=), txn versions and history."""
+    import glob
+    import json
+
+    from football_lakehouse_spark.lakehouse.tables import CHECKPOINT_EVERY
+
+    root = str(tmp_path)
+    kw = {"partition_by": ["p"], "stats_columns": ["k"]}
+    t = _fold_table(spark, root, "fold", **kw)
+
+    def frame(rows, ddl="k int, v string, p string"):
+        return spark.createDataFrame(rows, ddl)
+
+    t.append(frame([(i, f"v{i}", "ab"[i % 2]) for i in range(8)]))
+    t.enable_change_feed()
+    t.add_constraint("k_nonneg", "k >= 0")
+    t.merge(frame([(1, "m1", "b"), (10, "m10", "c")]), ["k"])
+    t.append_txn(frame([(20, "t20", "a")]), "s1", 1)
+    t.append_txn(frame([(21, "t21", "b")]), "s2", 5)
+    t.delete(F.col("k") == 2, deletion_vectors=True)
+    t.append(
+        frame([(30, "e30", "a", 7)], "k int, v string, p string, w int"),
+        merge_schema=True,
+    )
+    t.rename_column("v", "val")
+    # key 3 moves from partition b to c
+    t.merge(frame([(3, "moved", "c", None)], "k int, val string, p string, w int"),
+            ["k"])
+    t.update(F.col("k") == 4, {"val": F.lit("upd")})
+    t.drop_column("w")
+    t.delete(F.col("k") == 5)
+    t.drop_constraint("k_nonneg")
+    t.append_txn(frame([(40, "t40", "c")], "k int, val string, p string"), "s1", 3)
+    for i in range(7):
+        t.merge(frame([(50 + i, f"r{i}", "abc"[i % 3]), (0, f"z{i}", "a")],
+                      "k int, val string, p string"), ["k"])
+    head = t.current_version()
+    assert head > 2 * CHECKPOINT_EVERY
+    cps = sorted(glob.glob(os.path.join(t.log_root, "*.checkpoint.json")))
+    assert len(cps) == head // CHECKPOINT_EVERY
+    with open(cps[-1]) as f:
+        assert {"live", "stats", "dv", "schema", "props", "txn", "history"} <= set(
+            json.load(f)
+        )
+
+    def state(tt, v):
+        s = tt._snapshot(v)
+        return (
+            _rows_of(tt.read(version=v)),
+            sorted(s.dv),
+            s.live,
+            tt.constraints(version=v),
+            s.txn,
+            s.history,
+        )
+
+    for v in range(head + 1):
+        got = state(_fold_table(spark, root, "fold", **kw), v)
+        want = state(_no_checkpoints(_fold_table(spark, root, "fold", **kw)), v)
+        assert got == want, f"version {v} diverged"
+    fresh = _fold_table(spark, root, "fold", **kw)
+    replay = _no_checkpoints(_fold_table(spark, root, "fold", **kw))
+    assert fresh.describe_history() == replay.describe_history()
+    assert [h["version"] for h in fresh.describe_history()] == list(range(head + 1))
+    assert fresh.last_txn_version("s1") == replay.last_txn_version("s1") == 3
+    assert fresh.last_txn_version("s2") == 5
+    assert fresh.last_txn_version("nope") is None
+    assert fresh.constraints(version=2) == {"k_nonneg": "k >= 0"}
+    assert fresh.constraints(version=1) == {} == fresh.constraints()
+    assert fresh._snapshot(6).dv and not fresh._snapshot(5).dv
+    assert any(fresh._snapshot().live.values()), "stats survive the fold"
+
+
+def _rows_of(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _metadata_log(spark, root, name, n_commits):
+    """A table of one real data file and ``n_commits`` commits made with
+    ``_commit`` directly (no Spark job per commit)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = _fold_table(spark, root, name)
+    pq.write_table(pa.table({"k": [1, 2, 3]}), os.path.join(t.data_root, "f0.parquet"))
+    schema = spark.createDataFrame([], "k bigint").schema.json()
+    t._commit("append", ["f0.parquet"], [], rows=None, schema_json=schema,
+              props={"constraints": {"pos": "k > 0"}})
+    for i in range(1, n_commits):
+        t._commit("append", [], [], rows=None,
+                  txn={"app_id": "app", "version": i} if i % 7 == 0 else None)
+    return t
+
+
+def test_fresh_read_opens_tail_not_log(spark, tmp_path, monkeypatch):
+    """On a 200-commit log a fresh instance's read path — and its
+    properties, txn and history reads — open at most one checkpoint
+    plus the commit tail (CHECKPOINT_EVERY + 1 log files), never the
+    whole log."""
+    import builtins
+
+    from football_lakehouse_spark.lakehouse import tables
+    from football_lakehouse_spark.lakehouse.tables import CHECKPOINT_EVERY
+
+    t = _metadata_log(spark, str(tmp_path), "long", 200)
+    opened: list[str] = []
+
+    def counting_open(path, *a, **k):
+        if str(path).startswith(t.log_root):
+            opened.append(str(path))
+        return builtins.open(path, *a, **k)
+
+    monkeypatch.setattr(tables, "open", counting_open, raising=False)
+    probes = {
+        "read": lambda x: _rows_of(x.read()),
+        "props": lambda x: x.constraints(),
+        "txn": lambda x: x.last_txn_version("app"),
+        "history": lambda x: len(x.describe_history()),
+        "pruned_files": lambda x: x.pruned_files({"k": (0, 9)}),
+    }
+    want = {"read": [(1,), (2,), (3,)], "props": {"pos": "k > 0"},
+            "txn": 196, "history": 200, "pruned_files": ["f0.parquet"]}
+    for name, probe in probes.items():
+        opened.clear()
+        assert probe(_fold_table(spark, str(tmp_path), "long")) == want[name]
+        assert len(opened) <= CHECKPOINT_EVERY + 1, (name, len(opened))
+
+
+def test_legacy_checkpoint_is_skipped(spark, tmp_path):
+    """A checkpoint holding only ``live`` and ``history`` (the format
+    before checkpoints carried the whole snapshot) is skipped, not
+    merged in: schema, properties, txn versions and DVs still come out
+    exact from the commit replay."""
+    import json
+
+    t = _metadata_log(spark, str(tmp_path), "oldcp", 13)
+    cp_path = t._checkpoint_path(10)
+    with open(cp_path) as f:
+        full = json.load(f)
+    with open(cp_path, "w") as f:
+        json.dump({k: full[k] for k in ("version", "live", "history")}, f)
+    fresh = _fold_table(spark, str(tmp_path), "oldcp")
+    assert _rows_of(fresh.read()) == [(1,), (2,), (3,)]
+    assert fresh.schema() is not None and fresh.schema().names == ["k"]
+    assert fresh.constraints() == {"pos": "k > 0"}
+    assert fresh.last_txn_version("app") == 7
+    assert [h["version"] for h in fresh.describe_history()] == list(range(13))
+    assert fresh._snapshot(11) == _no_checkpoints(
+        _fold_table(spark, str(tmp_path), "oldcp")
+    )._snapshot(11)
+
+
 def test_compact_to_size_targets_file_bytes(spark, events, tmp_path):
     """OPTIMIZE by target file size: output file count tracks
     ceil(live bytes / target), rows unchanged, DVs purged like any
     compaction."""
-    # optimized_write=False: the test MANUFACTURES a 16-small-file
-    # version for compact_to_size to re-bin; the r14 default rebalance
-    # would pre-merge the append into one file
-    t = LakehouseTable(
-        spark, str(tmp_path), "silver", "sized", optimized_write=False
-    )
-    t.append(events.repartition(16))
+    # sixteen small appends MANUFACTURE a 16-small-file version for
+    # compact_to_size to re-bin (the optimized write stages each small
+    # append as one file)
+    t = LakehouseTable(spark, str(tmp_path), "silver", "sized")
+    for i in range(16):
+        t.append(events.where(F.pmod(F.hash("event_id"), F.lit(16)) == i))
     total = sum(
         os.path.getsize(os.path.join(t.data_root, f)) for f in t.current_files()
     )
@@ -1238,8 +1407,8 @@ def test_continuous_rollup_touches_only_batch_partitions(spark, events, tmp_path
 def test_optimized_write_staged_size_gate(spark, tmp_path):
     """r15: the optimized write's REBALANCE is gated on the staged
     plan's size estimate — a commit under one advisory partition skips
-    the exchange (keeps per-task files), a commit estimated above it
-    rebalances into advisory-sized output."""
+    the exchange and coalesces to one file (no shuffle), a commit
+    estimated above it rebalances into advisory-sized output."""
     t = LakehouseTable(spark, str(tmp_path), "silver", "gate")
     df = spark.range(0, 1000, 1, 8).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
@@ -1248,7 +1417,7 @@ def test_optimized_write_staged_size_gate(spark, tmp_path):
     assert not t._rebalance_worthwhile(df)
     t.append(df)
     files_v0 = [f for f in t.current_files()]
-    assert len(files_v0) == 8  # one file per upstream task, no exchange
+    assert len(files_v0) == 1  # coalesced: one file, no exchange
     # same frame with the advisory forced below the estimate -> gate on
     old = spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     try:

@@ -2092,3 +2092,24 @@ def test_semantic_dedup_guard_bounds_bytes_not_rows(spark, monkeypatch):
         fb._jdf.queryExecution().executedPlan().toString()
     )
     assert sorted(map(tuple, fb.collect())) == kernel
+
+
+def test_postings_index_rejects_unpackable_postings(spark):
+    """The doc_id·10⁶ + pos packing is exact only for a non-NULL
+    doc_id ≥ 0 and pos < 10⁶: a negative or NULL doc_id, or a document
+    past 10⁶ tokens, raises the named error instead of silently
+    mis-deriving df/tf."""
+    from football_lakehouse_spark.plans.llm_plans import _postings_index
+
+    ok = spark.createDataFrame([(0, "a b a"), (7, "b")], "doc_id bigint, text string")
+    got = {(r.term, r.df, r.tf) for r in _postings_index(ok).collect()}
+    assert got == {("a", 1, 2), ("b", 2, 2)}
+    bad = [
+        [(-1, "a b")],
+        [(None, "a b")],
+        [(3, "x " * 1000000)],  # the 10⁶-th token has pos == 10⁶
+    ]
+    for rows in bad:
+        docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+        with pytest.raises(Exception, match="POSTINGS_PACKING_OUT_OF_RANGE"):
+            _postings_index(docs).collect()
