@@ -1,19 +1,24 @@
-"""Change data capture over versioned lakehouse tables — the open
-analogue of Delta's Change Data Feed (`table_changes`), derived by
-DIFFING two committed versions instead of reading a persisted feed.
+"""Change data over versioned lakehouse tables — the one owner of the
+row deltas incremental consumers read (the reference keeps Silver
+MERGE-maintained, docs/backlog.md:77) and of the view fold that
+consumes them.
 
-The reference declares its Silver layer as MERGE-maintained
-(docs/backlog.md:77); downstream incremental consumers need the row
-delta between two table versions, which this provides for ANY pair of
-versions of the manifest-log table layer (lakehouse/tables.py) without
-requiring the writer to have logged changes at commit time.
+One feed shape, ``(version, change_type, <keys>, <values>)``, from two
+sources: :meth:`LakehouseTable.table_changes` serves change data the
+writer LOGGED at commit time (Delta's Change Data Feed, O(changed
+rows)); :func:`change_feed` DERIVES it by diffing committed versions of
+any table, with nothing logged (O(both versions)). The diff is one
+null-safe full-outer join per consecutive version pair (single
+shuffle), each joined row emitting its 0-2 change entries through one
+exploded array — no re-scan per change type. Every version is
+validated key-unique once, all in one aggregation.
 
-Plan shape: ONE full-outer join on the key (single shuffle), then each
-joined row emits 0-2 change entries through an exploded literal array —
-insert / delete / update_preimage / update_postimage — so the diff is
-one pass with no re-scan per change type. At 100 TB the join is
-key-partitioned and AQE-handled like any fact-fact join; the alternative
-(four separate anti/semi-joins) would scan both versions four times.
+:func:`maintain_count_sum` materialises a grouped count + exact-micros
+sum at version 0 and brings it forward by either feed alone. Count and
+sum are SELF-MAINTAINABLE: each change row adds its signed
+contribution, so the refreshed view equals a recompute from the final
+state. min/max are not (deleting the extreme needs the base); that
+boundary is the fold's contract.
 """
 
 from __future__ import annotations
@@ -23,76 +28,61 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from football_lakehouse_spark.functions.scalars import _sum_micros_exact
 
-def change_feed(
-    old: DataFrame,
-    new: DataFrame,
-    keys: Sequence[str],
-    validate_unique: bool = True,
-) -> DataFrame:
-    """Row-level changes that turn ``old`` into ``new``, keyed by
-    ``keys``: ``insert`` rows (key only in new), ``delete`` rows (key
-    only in old), and ``update_preimage``/``update_postimage`` pairs
-    (key in both, any non-key column differing null-safely). Payload
-    columns carry the new image for insert/update_postimage and the old
-    image for delete/update_preimage — Delta CDF semantics.
+
+def change_feed(versions: Sequence[DataFrame], keys: Sequence[str]) -> DataFrame:
+    """Row-level changes between CONSECUTIVE ``versions`` (v0→v1,
+    v1→v2, …), keyed by ``keys``, in :meth:`table_changes`' shape
+    ``(version, change_type, keys…, values…)``; ``version`` is the list
+    position of the newer side of each pair.
+
+    ``insert`` rows (key only in the newer side), ``delete`` rows (key
+    only in the older side), and ``update_preimage``/``update_postimage``
+    pairs (key in both, any non-key column differing null-safely).
+    Payload columns carry the new image for insert/update_postimage and
+    the old image for delete/update_preimage — Delta CDF semantics.
 
     The key join is NULL-SAFE (a NULL business key is one key value,
     the same contract merge_upsert keeps): with a plain equi-join a
     NULL-keyed row never matched itself across versions, so every diff
-    fabricated a delete+insert pair for untouched NULL-key rows —
-    phantom churn in every incremental consumer.
+    fabricated a delete+insert pair for untouched NULL-key rows.
 
-    ``validate_unique`` (default True) FAILS CLOSED when either side
-    carries a duplicate key tuple — the full-outer join would multiply
-    such rows into duplicated/mispaired change entries that silently
-    corrupt downstream MERGE consumers (same contract as
-    require_unique_merge_keys on the merge path; appends can create
-    duplicates the merge path never would). Since r14 both sides are
-    validated in ONE eager map-side-combined aggregation (side-tagged
-    union) instead of one job per side — same fail-closed contract and
-    error type, half the plan-build actions and one combined pass over
-    the two versions instead of two separate ones. (An in-plan
-    ``raise_error`` window guard was tried first and rejected: the
-    null-safe join partitions on ``(coalesce(k, 0), isnull(k))`` while
-    a per-key window partitions on ``k``, so the "free" guard actually
-    added a full extra exchange per side — worse than the scan at any
-    scale.) Pass False only when the caller has already validated both
-    versions."""
-    if validate_unique:
-        from football_lakehouse_spark.functions.guards import bounded_collect
-        from football_lakehouse_spark.lakehouse.tables import (
-            MergeSourceDuplicateError,
-        )
+    FAILS CLOSED when any version carries a duplicate key tuple: the
+    full-outer join would multiply such rows into duplicated/mispaired
+    change entries that silently corrupt downstream MERGE consumers
+    (appends can create duplicates the merge path never would). All
+    versions are priced in one eager aggregation. (An in-plan
+    ``raise_error`` window guard was tried and rejected: the null-safe
+    join partitions on ``(coalesce(k, 0), isnull(k))`` while a per-key
+    window partitions on ``k``, so it added a full exchange per side.)
 
-        tagged = old.select(
-            *[F.col(k).alias(f"__k_{k}") for k in keys],
-            F.lit("change_feed(old)").alias("__side"),
-        ).unionByName(
-            new.select(
-                *[F.col(k).alias(f"__k_{k}") for k in keys],
-                F.lit("change_feed(new)").alias("__side"),
-            )
-        )
-        dups = bounded_collect(
-            tagged.groupBy("__side", *[f"__k_{k}" for k in keys])
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > 1)
-            .limit(3),
-            3,
-            "change_feed unique-key check",
-        )
-        if dups:
-            sample = [
-                (r["__side"], tuple(r[f"__k_{k}"] for k in keys)) for r in dups
-            ]
-            raise MergeSourceDuplicateError(
-                f"change_feed: duplicate source key(s) for {list(keys)} — "
-                f"e.g. {sample}; change_feed requires key-unique versions "
-                "(duplicates multiply through the full-outer diff into "
-                "mispaired change entries). Pre-dedupe with an explicit "
-                "ordering, e.g. dedupe_updates(batch, keys, order_desc)."
-            )
+    The pair feeds union with ``allowMissingColumns``: a diff across an
+    additive schema change carries the union of both sides' columns, so
+    consecutive pairs can differ in payload columns; a feed missing a
+    column contributes NULL for it."""
+    from football_lakehouse_spark.lakehouse.tables import require_unique_keys
+
+    if len(versions) < 2:
+        raise ValueError("change_feed needs at least two versions")
+    labels = (
+        ["change_feed(old)", "change_feed(new)"] if len(versions) == 2
+        else [f"version#{i}" for i in range(len(versions))]
+    )
+    require_unique_keys(dict(zip(labels, versions)), keys, "change_feed")
+    feeds = [
+        _diff(old, new, keys, i)
+        for i, (old, new) in enumerate(zip(versions, versions[1:]), 1)
+    ]
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), feeds
+    )
+
+
+def _diff(
+    old: DataFrame, new: DataFrame, keys: Sequence[str], version: int
+) -> DataFrame:
+    """One pair's changes (see :func:`change_feed`), tagged ``version``."""
     # value columns = the UNION of both sides' non-key columns: diffing
     # across an additive schema change (merge_schema append between the
     # two versions) must not crash on the old side's missing column —
@@ -169,70 +159,51 @@ def change_feed(
         F.explode(F.filter(entries, lambda e: e.isNotNull())).alias("__e"),
     )
     return ex.select(
+        F.lit(version).cast("bigint").alias("version"),
         F.col("__e.change_type").alias("change_type"),
         *keys,
         *[F.col(f"__e.payload.{c}").alias(c) for c in val_cols],
     )
 
 
-def change_feed_chain(
-    versions: Sequence[DataFrame], keys: Sequence[str]
+def maintain_count_sum(
+    v0: DataFrame, feed: DataFrame, group: Column, value: str
 ) -> DataFrame:
-    """Concatenated :func:`change_feed` over CONSECUTIVE version pairs
-    (v0→v1, v1→v2, …) — the composed-delta input of incremental view
-    maintenance (q250). Each version is validated key-unique exactly
-    ONCE in one side-tagged aggregation: the naive pairwise loop prices
-    every interior version twice (it is the ``new`` side of one diff
-    and the ``old`` side of the next), so a k-version chain paid
-    2(k-1) validation scans where k suffice (r14)."""
-    if len(versions) < 2:
-        raise ValueError("change_feed_chain needs at least two versions")
-    from football_lakehouse_spark.functions.guards import bounded_collect
-    from football_lakehouse_spark.lakehouse.tables import (
-        MergeSourceDuplicateError,
+    """The grouped view ``(group, n, <value>_micros)`` — row count and
+    exact integer-micros sum of ``value`` per ``group`` — materialised
+    at ``v0`` and brought forward by ``feed`` alone, without re-reading
+    the table: signed per-group partials (+1 insert/update_postimage,
+    −1 delete/update_preimage) composed across every version in the
+    feed, one group-sized full-outer merge, zero-count groups dropped.
+    A key that migrates groups subtracts its pre-image from the old
+    group and adds its post-image to the new."""
+    name = v0.select(group).columns[0]
+    micros_col = f"{value}_micros"
+    mv0 = v0.groupBy(group).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        _sum_micros_exact(F.col(value)).alias(micros_col),
     )
-
-    tagged = reduce(
-        lambda a, b: a.unionByName(b),
-        [
-            v.select(
-                *[F.col(k).alias(f"__k_{k}") for k in keys],
-                F.lit(i).alias("__v"),
-            )
-            for i, v in enumerate(versions)
-        ],
+    sign = F.when(
+        F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
+    ).otherwise(F.lit(-1))
+    # delta batches are O(touched rows) — the decimal form is fine here;
+    # the base-view scan above uses the bigint-limb fast path
+    micros = F.floor(F.col(value) * F.lit(1000000.0) + F.lit(0.5)).cast(
+        "decimal(38,0)"
     )
-    dups = bounded_collect(
-        tagged.groupBy("__v", *[f"__k_{k}" for k in keys])
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .where(F.col("__n") > 1)
-        .limit(3),
-        3,
-        "change_feed_chain unique-key check",
+    delta = feed.groupBy(group).agg(
+        F.sum(sign).cast("bigint").alias("dn"),
+        F.sum(sign.cast("decimal(38,0)") * micros).alias("dv"),
     )
-    if dups:
-        sample = [
-            (f"version#{r['__v']}", tuple(r[f"__k_{k}"] for k in keys))
-            for r in dups
-        ]
-        raise MergeSourceDuplicateError(
-            f"change_feed_chain: duplicate key(s) for {list(keys)} — e.g. "
-            f"{sample}; change feeds require key-unique versions. "
-            "Pre-dedupe with an explicit ordering, e.g. "
-            "dedupe_updates(batch, keys, order_desc)."
-        )
-    feeds = [
-        change_feed(a, b, keys, validate_unique=False)
-        for a, b in zip(versions, versions[1:])
-    ]
-    # allowMissingColumns: change_feed itself supports an additively
-    # evolved schema between two versions (val_cols = union of both
-    # sides), so consecutive pair feeds can legitimately differ in
-    # payload columns — a plain unionByName then raised
-    # AnalysisException on exactly the chains change_feed promises to
-    # handle. A feed missing a column contributes NULL for it, the
-    # same value per-pair change_feed emits for a side that lacks it
-    # (ADVICE r14, r15).
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), feeds
+    merged = mv0.join(delta, name, "full_outer").select(
+        name,
+        (
+            F.coalesce(F.col("n"), F.lit(0))
+            + F.coalesce(F.col("dn"), F.lit(0))
+        ).cast("bigint").alias("n"),
+        (
+            F.coalesce(F.col(micros_col), F.lit(0).cast("decimal(38,0)"))
+            + F.coalesce(F.col("dv"), F.lit(0).cast("decimal(38,0)"))
+        ).cast("bigint").alias(micros_col),
     )
+    return merged.where(F.col("n") > 0)

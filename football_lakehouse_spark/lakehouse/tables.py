@@ -72,12 +72,17 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from football_lakehouse_spark.functions.guards import local_frame
+from football_lakehouse_spark.functions.guards import (
+    PER_WRITE_PARTITION_BOUND,
+    bounded_collect,
+    local_frame,
+)
 from football_lakehouse_spark.operators.merge import merge_upsert
 
 LOG_DIR = "_log"
@@ -113,32 +118,46 @@ class MergeSourceDuplicateError(ValueError):
     pre-dedupe upstream with an explicit ordering (``dedupe_updates``)."""
 
 
-def require_unique_merge_keys(
-    updates: DataFrame, keys: Sequence[str], where: str
+def require_unique_keys(
+    frames: Mapping[str, DataFrame], keys: Sequence[str], where: str
 ) -> None:
     """Raise :class:`MergeSourceDuplicateError` if any key tuple occurs
-    more than once in ``updates``. One batch-sized map-side-combined
-    aggregation; the sample keys in the message make the upstream bug
-    findable. Public: the Delta binding shares this exact contract.
-    The count is aliased (never bare ``.count()``) so a merge key
-    literally named ``count`` cannot collide with the aggregate."""
-    from football_lakehouse_spark.functions.guards import bounded_collect
-
+    more than once within any of the labelled ``frames`` — the one
+    key-uniqueness check of MERGE sources and change-feed versions.
+    One map-side-combined aggregation prices every frame (several are
+    unioned under a label column first), so k versions cost one eager
+    job, not k; the sample keys in the message, label-tagged when there
+    are several frames, make the upstream bug findable. The count is
+    aliased (never bare ``.count()``) so a key literally named
+    ``count`` cannot collide with the aggregate."""
+    tagged = len(frames) > 1
+    if tagged:
+        df = reduce(
+            lambda a, b: a.unionByName(b),
+            [f.select(*keys, F.lit(label).alias("__label"))
+             for label, f in frames.items()],
+        )
+    else:
+        (df,) = frames.values()
     dups = bounded_collect(
-        updates.groupBy(*keys)
+        df.groupBy(*(["__label"] if tagged else []), *keys)
         .agg(F.count(F.lit(1)).alias("__n"))
         .where(F.col("__n") > 1)
         .limit(3),
         3,
-        "require_unique_merge_keys",
+        "require_unique_keys",
     )
     if dups:
         sample = [tuple(r[k] for k in keys) for r in dups]
+        if tagged:
+            sample = [(r["__label"], k) for r, k in zip(dups, sample)]
         raise MergeSourceDuplicateError(
             f"{where}: duplicate source key(s) for {list(keys)} — e.g. "
-            f"{sample}; MERGE requires key-unique sources (Delta raises "
-            "the same at runtime). Pre-dedupe with an explicit ordering, "
-            "e.g. dedupe_updates(batch, keys, order_desc)."
+            f"{sample}; MERGE sources and change-feed versions must be "
+            "key-unique (a duplicate picks a nondeterministic MERGE "
+            "winner, or multiplies through the diff's key join). "
+            "Pre-dedupe with an explicit ordering, e.g. "
+            "dedupe_updates(batch, keys, order_desc)."
         )
 
 #: Spark/Hive's on-disk name for a NULL partition value
@@ -681,8 +700,6 @@ class LakehouseTable:
         self._write_constraints(cons, expect_head=head if head >= 0 else None)
 
     def _enforce(self, cons: dict[str, str], df: DataFrame, context: str) -> None:
-        from football_lakehouse_spark.functions.guards import bounded_collect
-
         for cname, pred in cons.items():
             bad = df.where(~F.expr(pred).eqNullSafe(F.lit(True))).limit(1)
             rows = bounded_collect(bad, 1, f"constraint {cname} witness")
@@ -840,11 +857,6 @@ class LakehouseTable:
         snapshot the caller read (r12: a fresh listing here could
         include files a racing writer just committed — removing files
         the rewrite never read)."""
-        from football_lakehouse_spark.functions.guards import (
-            PER_WRITE_PARTITION_BOUND,
-            bounded_collect,
-        )
-
         touched_dirs = [
             "/".join(
                 f"{c}={_escape_partition_value(r[c])}" for c in self.partition_by
@@ -1235,7 +1247,7 @@ class LakehouseTable:
             updates.unpersist()
 
     def _merge_impl(self, updates: DataFrame, keys: Sequence[str]) -> int:
-        require_unique_merge_keys(updates, keys, f"merge into {self.base}")
+        require_unique_keys({"source": updates}, keys, f"merge into {self.base}")
         if not self.exists():
             return self.append(updates)
         head = self._head()  # snapshot pin: read, rewrite, and removal
@@ -1275,7 +1287,7 @@ class LakehouseTable:
         return self._rewrite(
             "merge", head, base, parts,
             lambda touched: merge_upsert(touched, updates, keys),
-            lambda touched, merged: change_feed(touched, merged, keys),
+            lambda touched, merged: change_feed([touched, merged], keys),
         )
 
     def delete(self, predicate: Column, deletion_vectors: bool = False) -> int:
@@ -1782,7 +1794,12 @@ class LakehouseTable:
         Deletion-vector sidecars under ``base/_dv`` are reclaimed by the
         same rule: a DV dir survives only if some retained version still
         references it. This also sweeps orphans whose commit lost the
-        CAS race (the dir was written but the dv_add never landed)."""
+        CAS race (the dir was written but the dv_add never landed).
+
+        ``retain_last`` must be >= 1: the current version is always
+        retained (``commits[-0:]`` would silently keep every version)."""
+        if retain_last < 1:
+            raise ValueError(f"retain_last must be >= 1, got {retain_last}")
         commits, _ = self._log_entries()
         keep: set[str] = set()
         keep_dv: set[str] = set()

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from football_lakehouse_spark.lakehouse.tables import (
     LakehouseTable,
-    require_unique_merge_keys,
+    require_unique_keys,
 )
 
 
@@ -56,9 +56,9 @@ def scd2_apply(
     # same (key, ts): dropDuplicates([key, ts]) would pick an arbitrary
     # winner — run-to-run nondeterministic dimension versions, the exact
     # flaw the incoming-vs-existing _prio ranking below exists to avoid.
-    # Same contract as MERGE (require_unique_merge_keys).
+    # Same contract as MERGE (require_unique_keys).
     incoming = changes.select(*cols).dropDuplicates()
-    require_unique_merge_keys(incoming, [key, ts_col], where="scd2_apply")
+    require_unique_keys({"changes": incoming}, [key, ts_col], "scd2_apply")
     if table.exists():
         # NULL-SAFE affected-key probe: a NULL business key is one key
         # value here exactly as it is in the window partition and the

@@ -263,15 +263,9 @@ def cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.append(base)
     t.merge(upd, ["event_id"])
     t.delete((F.col("event_type") == "updated") & (F.col("value") < 50))
-    v0, v1, v2 = t.read(version=0), t.read(version=1), t.read(version=2)
-    f01 = change_feed(v0, v1, ["event_id"]).withColumn(
-        "version", F.lit(1).cast("bigint")
-    )
-    f12 = change_feed(v1, v2, ["event_id"]).withColumn(
-        "version", F.lit(2).cast("bigint")
-    )
-    return f01.unionByName(f12).select(
-        "version", "change_type", "event_id", "event_type", "value"
+    return change_feed(
+        [t.read(version=0), t.read(version=1), t.read(version=2)],
+        ["event_id"],
     )
 
 
@@ -1404,7 +1398,10 @@ def consistent_snapshot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "cdc"),
 )
 def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from football_lakehouse_spark.lakehouse.cdc import change_feed_chain
+    from football_lakehouse_spark.lakehouse.cdc import (
+        change_feed,
+        maintain_count_sum,
+    )
 
     base, upd = _base_updates(spark, sf_dir)
     root = scratch_dir("q250_incremental_view_maintenance")
@@ -1413,43 +1410,10 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.merge(upd, ["event_id"])
     t.delete((F.col("event_type") == "updated") & (F.col("value") < 50))
     v0 = t.read(version=0)
-
-    mv0 = v0.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        _sum_micros_exact(F.col("value")).alias("value_micros"),
-    )
-
-    # chained diff: v1 is read once and every version's key-uniqueness
-    # is priced exactly once (the pairwise change_feed calls re-read
-    # and re-validated the interior version — r14)
-    feed = change_feed_chain(
+    feed = change_feed(
         [v0, t.read(version=1), t.read(version=2)], ["event_id"]
     )
-    sign = F.when(
-        F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    # delta batches are O(touched rows) — the decimal form is fine here;
-    # the base-view scan above uses the bigint-limb fast path
-    micros = F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "decimal(38,0)"
-    )
-    delta = feed.groupBy("event_type").agg(
-        F.sum(sign).cast("bigint").alias("dn"),
-        F.sum(sign.cast("decimal(38,0)") * micros).alias("dv"),
-    )
-
-    merged = mv0.join(delta, "event_type", "full_outer").select(
-        "event_type",
-        (
-            F.coalesce(F.col("n"), F.lit(0))
-            + F.coalesce(F.col("dn"), F.lit(0))
-        ).cast("bigint").alias("n"),
-        (
-            F.coalesce(F.col("value_micros"), F.lit(0).cast("decimal(38,0)"))
-            + F.coalesce(F.col("dv"), F.lit(0).cast("decimal(38,0)"))
-        ).cast("bigint").alias("value_micros"),
-    )
-    return merged.where(F.col("n") > 0)
+    return maintain_count_sum(v0, feed, F.col("event_type"), "value")
 
 
 @query(
@@ -1552,6 +1516,8 @@ def compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "cdc"),
 )
 def logged_cdf_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from football_lakehouse_spark.lakehouse.cdc import maintain_count_sum
+
     base, upd = _base_updates(spark, sf_dir)
     root = scratch_dir("q257_logged_cdf_ivm")
     t = LakehouseTable(spark, root, "silver", "event_cdf_ivm")
@@ -1559,40 +1525,11 @@ def logged_cdf_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.append(base)
     t.merge(upd, ["event_id"])
     t.delete((F.col("event_type") == "updated") & (F.col("value") < 50))
-
-    band = F.floor(F.col("value") / 10).cast("bigint").alias("band")
-    mv0 = t.read(version=0).groupBy(band).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        _sum_micros_exact(F.col("value")).alias("value_micros"),
-    )
-
     # refresh input: ONLY the logged feed — no table version is read
-    feed = t.table_changes(0)
-    sign = F.when(
-        F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    # delta batches are O(touched rows) — the decimal form is fine here;
-    # the base-view scan above uses the bigint-limb fast path
-    micros = F.floor(F.col("value") * F.lit(1000000.0) + F.lit(0.5)).cast(
-        "decimal(38,0)"
+    band = F.floor(F.col("value") / 10).cast("bigint").alias("band")
+    return maintain_count_sum(
+        t.read(version=0), t.table_changes(0), band, "value"
     )
-    delta = feed.groupBy(band).agg(
-        F.sum(sign).cast("bigint").alias("dn"),
-        F.sum(sign.cast("decimal(38,0)") * micros).alias("dv"),
-    )
-
-    merged = mv0.join(delta, "band", "full_outer").select(
-        "band",
-        (
-            F.coalesce(F.col("n"), F.lit(0))
-            + F.coalesce(F.col("dn"), F.lit(0))
-        ).cast("bigint").alias("n"),
-        (
-            F.coalesce(F.col("value_micros"), F.lit(0).cast("decimal(38,0)"))
-            + F.coalesce(F.col("dv"), F.lit(0).cast("decimal(38,0)"))
-        ).cast("bigint").alias("value_micros"),
-    )
-    return merged.where(F.col("n") > 0)
 
 
 @query(

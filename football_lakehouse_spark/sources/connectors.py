@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from football_lakehouse_spark.lakehouse.tables import (
     LakehouseTable,
-    require_unique_merge_keys,
+    require_unique_keys,
 )
 
 
@@ -263,7 +263,7 @@ class DeltaBackedTable:
         nondeterministic arbitrary row — silently unstable upserts are
         worse than Delta's loud multiple-source-rows-matched error, so
         both bindings now validate identically and fail findably)."""
-        require_unique_merge_keys(updates, keys, f"delta merge into {self.base}")
+        require_unique_keys({"source": updates}, keys, f"delta merge into {self.base}")
         if not self.exists():
             # first batch bootstraps the table, as the parquet branch does
             return self.append(updates)
@@ -775,7 +775,9 @@ class IcebergBackedTable:
         only the files holding matched rows; scale parity with Delta's
         MERGE). Duplicate source keys rejected up front via the shared
         MergeSourceDuplicateError contract."""
-        require_unique_merge_keys(updates, keys, f"iceberg merge into {self.ident}")
+        require_unique_keys(
+            {"source": updates}, keys, f"iceberg merge into {self.ident}"
+        )
         if not self.exists():
             return self.append(updates)
         # uuid, NOT a hash of (table, keys): two concurrent merges on

@@ -15,25 +15,20 @@ same idea as the file-stream source's commit log, but inspectable).
 Scale design: the BATCH reader builds one InputPartition per landing
 file → Spark schedules file parses across executors exactly like the
 built-in source with no driver-side data movement (the driver only
-lists the directory). The STREAM reader comes in two flavours:
+lists the directory). The STREAM reader is
+:class:`LandingPartitionStreamReader`, a partition-planning
+``DataSourceStreamReader`` — the driver only lists files and plans one
+InputPartition per pending file; every row is parsed ON AN EXECUTOR,
+so a month-long backlog drains with O(listing) driver memory no matter
+how many rows it holds. :class:`LandingStreamReader`
+(``SimpleDataSourceStreamReader``, which by Spark-4 contract prefetches
+each micro-batch's rows on the driver) is not reachable through the
+format: it stays as the reference implementation of the offset
+contract, driven directly by the unit tests, and shares the same
+content-addressed offset format.
 
-- default: :class:`LandingPartitionStreamReader`, a partition-planning
-  ``DataSourceStreamReader`` — the driver only lists files and plans
-  one InputPartition per pending file; every row is parsed ON AN
-  EXECUTOR, so a month-long backlog drains with O(listing) driver
-  memory no matter how many rows it holds.
-- ``.option("driverPrefetch", "true")``: the original
-  :class:`LandingStreamReader` (``SimpleDataSourceStreamReader``),
-  which by Spark-4 contract prefetches each micro-batch's rows on the
-  driver — kept for zero-task-overhead toy drains and as the
-  reference implementation of the offset contract; bound its backlog
-  with ``maxFilesPerBatch``.
-
-Both readers share the same content-addressed offset format, so a
-checkpoint written by one resumes under the other. Listing is
-O(files) on the driver — the same contract as Spark's own file index;
-at 10⁶+ files you compact the landing zone (RUNBOOK §7) regardless of
-which reader is used.
+Listing is O(files) on the driver — the same contract as Spark's own
+file index; at 10⁶+ files you compact the landing zone (RUNBOOK §7).
 
 Offset encoding — PER-DIR watermark-prefix + recent-tail. A naive
 content-addressed offset serializes every consumed file name into
@@ -79,7 +74,6 @@ import logging
 import os
 from datetime import date, datetime, timezone
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -507,8 +501,7 @@ class LandingPartitionStreamReader(DataSourceStreamReader):
     batch regardless of the cap (the Python stream API has no
     ReadLimit admission control; the JVM file source's
     ``maxFilesPerTrigger``-under-availableNow multi-batch behaviour is
-    not expressible — use the simple reader's capped drain if bounded
-    availableNow slices matter more than executor-side reads).
+    not expressible).
     """
 
     def __init__(self, options):
@@ -593,7 +586,11 @@ class LandingPartitionStreamReader(DataSourceStreamReader):
 
 
 class LandingStreamReader(SimpleDataSourceStreamReader):
-    """File-granularity incremental stream with CONTENT-ADDRESSED
+    """Reference implementation of the offset contract — not reachable
+    through ``format("landing_events")``; the unit tests drive it
+    directly against :class:`LandingPartitionStreamReader`.
+
+    File-granularity incremental stream with CONTENT-ADDRESSED
     offsets in the compact watermark+tail encoding (module docstring):
     membership is ``name <= watermark or name in tail``, and the
     full-list ``{"consumed": [...]}`` form is still read and written
@@ -688,18 +685,8 @@ class LandingEventsDataSource(DataSource):
         return LandingReader(self.options)
 
     def streamReader(self, schema):
-        """Partition-planning reader (executor-side parses) by default;
-        ``.option("driverPrefetch", "true")`` falls back to the simple
-        reader via Spark's documented NotImplemented probe."""
-        if str(self.options.get("driverPrefetch", "")).lower() == "true":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
+        """Partition-planning reader: executor-side parses."""
         return LandingPartitionStreamReader(self.options)
-
-    def simpleStreamReader(self, schema):
-        return LandingStreamReader(self.options)
 
 
 def register_landing_source(spark) -> None:

@@ -1,12 +1,16 @@
-"""Dump ``explain("formatted")`` for bench queries to plans/r14/.
+"""Dump ``explain("formatted")`` of registry queries on demand.
 
-Usage: python scripts/r14_explain.py <tag> [query ...]
-  tag    suffix for the output files (``before`` / ``after``)
-  query  registry names; default = every bench=True query
+Usage: SPARK_GRAFT_SF_DIR=<fixture dir> \
+           python scripts/explain_plans.py <out_dir> <tag> [query ...]
+  out_dir  directory for the dumps (created if missing)
+  tag      suffix for the output files (e.g. ``before`` / ``after``)
+  query    registry names; default = every bench=True query
 
-Writes plans/r14/<query>_<tag>.txt. Builders that do eager work (scratch
-tables, Lloyd rounds) run that work; the captured plan is the plan of the
-RETURNED DataFrame — the same object bench.py executes via the noop sink.
+Writes <out_dir>/<query>_<tag>.txt, building each query over the
+fixture at ``$SPARK_GRAFT_SF_DIR`` (as bench.py reads it). Builders that
+do eager work (scratch tables, Lloyd rounds) run that work; the
+captured plan is the plan of the RETURNED DataFrame — the same object
+bench.py executes via the noop sink.
 """
 
 from __future__ import annotations
@@ -22,14 +26,13 @@ from football_lakehouse_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:] or sorted(registry.bench_queries())
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14"
-    )
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if len(sys.argv) < 3 or not sf_dir:
+        sys.exit(__doc__)
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or sorted(registry.bench_queries())
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("fls-r14-explain")
+    spark = get_spark("fls-explain-plans")
     for name in names:
         spec = registry.REGISTRY[name]
         t0 = time.perf_counter()

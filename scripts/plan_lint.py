@@ -93,14 +93,10 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
         "limit(1) constraint-violation witness",
     ("lakehouse/tables.py", "LakehouseTable._removed_in_partitions"):
         "distinct partition values of the TOUCHED batch (per-write bound)",
-    ("lakehouse/cdc.py", "change_feed"):
-        "limit-bounded duplicate-key sample, BOTH versions priced in "
-        "one side-tagged aggregation (r14)",
-    ("lakehouse/cdc.py", "change_feed_chain"):
-        "limit-bounded duplicate-key sample, EVERY chain version priced "
-        "once in one tagged aggregation (r14)",
-    ("lakehouse/tables.py", "require_unique_merge_keys"):
-        "limit-bounded duplicate-key sample for the error message",
+    ("lakehouse/tables.py", "require_unique_keys"):
+        "limit-bounded duplicate-key sample for the error message; every "
+        "labelled frame (MERGE source, change-feed versions) priced in "
+        "one aggregation",
     ("operators/blocking.py", "assert_candidate_volume"):
         "1-row candidate-count aggregate",
     ("operators/bpe.py", "bpe_rounds"):

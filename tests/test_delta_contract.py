@@ -424,6 +424,20 @@ def test_c7_vacuum_retention(spark, make_table):
         t.read(version=0).collect()  # beyond horizon: loud failure
 
 
+def test_c7_vacuum_refuses_nonpositive_retention(spark, make_table):
+    """retain_last < 1 is refused loudly by every binding before any
+    file is touched: on the parquet branch ``commits[-0:]`` is the whole
+    log, so retain_last=0 silently kept every version (and a negative
+    value kept all but v0)."""
+    t = make_table("vac0")
+    t.append(_df(spark, [(1, "a")]))
+    t.overwrite(_df(spark, [(2, "b")]))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="retain_last"):
+            t.vacuum(retain_last=bad)
+    assert _rows(t.read(version=0)) == [(1, "a")]  # nothing was reclaimed
+
+
 def test_c8_optimize_preserves_rows(spark, make_table):
     t = make_table("opt")
     for i in range(4):  # many small commits → many small files
@@ -846,8 +860,10 @@ def test_c18_change_feed_logged_and_served(spark, make_table):
         derived = {
             tuple(map(str, r))
             for r in change_feed(
-                t.read(version=v), t.read(version=v + 1), ["k"]
-            ).collect()
+                [t.read(version=v), t.read(version=v + 1)], ["k"]
+            )
+            .drop("version")
+            .collect()
         }
         logged = {
             tuple(map(str, r))

@@ -232,3 +232,31 @@ def test_schema_cache_invalidated_on_in_place_regeneration(spark, tmp_path):
     shutil.rmtree(p)
     spark.createDataFrame([(1, 7)], "event_id bigint, a bigint").write.parquet(p)
     assert dict(load_table(spark, sf, "events").dtypes)["a"] == "bigint"
+
+
+def test_schema_cache_sees_part_file_overwritten_in_place(spark, tmp_path):
+    """A part file overwritten under its OLD name leaves the dataset
+    dir's mtime alone (no entry added, removed or renamed); the cache
+    key follows the newest part-file mtime, so the new schema is
+    inferred instead of the stale one being forced onto the file."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from football_lakehouse_spark.catalog import load_table
+
+    sf = str(tmp_path)
+    d = os.path.join(sf, "events.parquet")
+    os.makedirs(d)
+    part = os.path.join(d, "part-00000.parquet")
+    pq.write_table(pa.table({"event_id": [1], "a": ["x"]}), part)
+    assert dict(load_table(spark, sf, "events").dtypes)["a"] == "string"
+    dir_mtime = os.stat(d).st_mtime_ns
+    time.sleep(0.05)  # past the filesystem's timestamp granularity
+    pq.write_table(pa.table({"event_id": [1], "a": [7]}), part)
+    assert os.stat(d).st_mtime_ns == dir_mtime  # the dir did not move
+    df = load_table(spark, sf, "events")
+    assert dict(df.dtypes)["a"] == "bigint"
+    assert [tuple(r) for r in df.collect()] == [(1, 7)]

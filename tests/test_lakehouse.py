@@ -214,7 +214,7 @@ def test_change_feed_classifies_all_transitions(spark):
         [(1, "a", 1.0), (2, "b", 2.0), (3, "c", None), (5, "e", 5.0), (4, "d", None)],
         "id bigint, t string, v double",
     )
-    got = {(r.change_type, r.id): (r.t, r.v) for r in change_feed(old, new, ["id"]).collect()}
+    got = {(r.change_type, r.id): (r.t, r.v) for r in change_feed([old, new], ["id"]).collect()}
     assert got == {
         ("update_preimage", 2): ("b", None),
         ("update_postimage", 2): ("b", 2.0),
@@ -228,11 +228,11 @@ def test_change_feed_empty_and_identical(spark):
     from football_lakehouse_spark.lakehouse.cdc import change_feed
 
     df = spark.createDataFrame([(1, "a")], "id bigint, t string")
-    assert change_feed(df, df, ["id"]).count() == 0
+    assert change_feed([df, df], ["id"]).count() == 0
     empty = df.where(F.lit(False))
-    feed = change_feed(empty, df, ["id"]).collect()
+    feed = change_feed([empty, df], ["id"]).collect()
     assert [(r.change_type, r.id) for r in feed] == [("insert", 1)]
-    feed = change_feed(df, empty, ["id"]).collect()
+    feed = change_feed([df, empty], ["id"]).collect()
     assert [(r.change_type, r.id) for r in feed] == [("delete", 1)]
 
 
@@ -1173,7 +1173,7 @@ def test_change_feed_key_only_table(spark):
 
     old = spark.createDataFrame([(1,), (2,)], "k bigint")
     new = spark.createDataFrame([(2,), (3,)], "k bigint")
-    got = {(r.change_type, r.k) for r in change_feed(old, new, ["k"]).collect()}
+    got = {(r.change_type, r.k) for r in change_feed([old, new], ["k"]).collect()}
     assert got == {("delete", 1), ("insert", 3)}
 
 
@@ -1191,14 +1191,14 @@ def test_change_feed_null_key_rows(spark):
     new = spark.createDataFrame(
         [(None, "keep", 1.0), (2, "x", 99.0)], "id bigint, t string, v double"
     )
-    got = [(r.change_type, r.id) for r in change_feed(old, new, ["id"]).collect()]
+    got = [(r.change_type, r.id) for r in change_feed([old, new], ["id"]).collect()]
     assert sorted(got) == [("update_postimage", 2), ("update_preimage", 2)]
 
     # NULL-key row updated: pre/post pair, key preserved as NULL
     new2 = spark.createDataFrame(
         [(None, "keep", 7.0), (2, "x", 2.0)], "id bigint, t string, v double"
     )
-    got2 = {(r.change_type, r.id): r.v for r in change_feed(old, new2, ["id"]).collect()}
+    got2 = {(r.change_type, r.id): r.v for r in change_feed([old, new2], ["id"]).collect()}
     assert got2 == {
         ("update_preimage", None): 1.0,
         ("update_postimage", None): 7.0,
@@ -1218,11 +1218,9 @@ def test_change_feed_rejects_duplicate_keys(spark):
     dup = spark.createDataFrame([(1, "a"), (1, "b")], "id bigint, t string")
     ok = spark.createDataFrame([(1, "a")], "id bigint, t string")
     with pytest.raises(MergeSourceDuplicateError, match=r"change_feed\(old\)"):
-        change_feed(dup, ok, ["id"]).collect()
+        change_feed([dup, ok], ["id"]).collect()
     with pytest.raises(MergeSourceDuplicateError, match=r"change_feed\(new\)"):
-        change_feed(ok, dup, ["id"]).collect()
-    # escape hatch for pre-validated versions
-    assert change_feed(dup, dup, ["id"], validate_unique=False).count() >= 0
+        change_feed([ok, dup], ["id"]).collect()
 
 
 def test_scd2_apply_null_business_key(spark, tmp_path):
@@ -1434,11 +1432,11 @@ def test_optimized_write_staged_size_gate(spark, tmp_path):
 
 
 def test_change_feed_chain_additive_schema_evolution(spark):
-    """r15 (ADVICE r14): a chain whose later versions gained a column
-    must union its pair feeds with NULLs for the missing payload column
-    (the same value per-pair change_feed emits for a side lacking it),
-    not raise AnalysisException."""
-    from football_lakehouse_spark.lakehouse.cdc import change_feed_chain
+    """r15 (ADVICE r14): a multi-version feed whose later versions
+    gained a column must union its pair feeds with NULLs for the missing
+    payload column (the same value a pair diff emits for a side lacking
+    it), not raise AnalysisException."""
+    from football_lakehouse_spark.lakehouse.cdc import change_feed
 
     v0 = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
     v1 = spark.createDataFrame(
@@ -1448,7 +1446,7 @@ def test_change_feed_chain_additive_schema_evolution(spark):
         [(1, "a", 10), (2, "B", 21), (3, "c", 30)],
         "k int, v string, extra int",
     )
-    feed = change_feed_chain([v0, v1, v2], ["k"]).collect()
+    feed = change_feed([v0, v1, v2], ["k"]).collect()
     got = {(r.change_type, r.k, r.v, r.extra) for r in feed}
     assert got == {
         # v0 -> v1: row 2 updated; row 1's extra went NULL -> 10 (update)
@@ -1461,3 +1459,77 @@ def test_change_feed_chain_additive_schema_evolution(spark):
         ("update_postimage", 2, "B", 21),
         ("insert", 3, "c", 30),
     }
+
+
+def test_change_feed_shape_matches_table_changes(spark, tmp_path):
+    """The derived feed has table_changes' shape (version, change_type,
+    <table columns>); over versions 0..k the list position IS the table
+    version, so diffing and the writer-logged feed agree row for row."""
+    from football_lakehouse_spark.lakehouse.cdc import change_feed
+    from football_lakehouse_spark.lakehouse.tables import LakehouseTable
+
+    schema = "k bigint, g string, v double"
+    t = LakehouseTable(spark, str(tmp_path / "cf"), "silver", "cf_shape")
+    t.enable_change_feed()
+    t.append(spark.createDataFrame([(i, "a", float(i)) for i in range(6)], schema))
+    t.merge(spark.createDataFrame([(2, "b", 22.0), (9, "a", 9.0)], schema), ["k"])
+    t.delete(F.col("k") < 2)
+    derived = change_feed([t.read(version=v) for v in range(3)], ["k"])
+    logged = t.table_changes(0)
+    assert derived.dtypes == logged.dtypes
+    assert sorted(map(tuple, derived.collect())) == sorted(
+        map(tuple, logged.collect())
+    )
+
+
+def test_change_feed_prices_every_version_once(spark):
+    """k versions are key-validated in ONE eager aggregation: building
+    a 4-version feed starts as many jobs as a 2-version one (a pairwise
+    loop would validate each interior version twice, in 3 actions), and
+    a duplicate is reported with its list position."""
+    from football_lakehouse_spark.lakehouse.cdc import change_feed
+    from football_lakehouse_spark.lakehouse.tables import MergeSourceDuplicateError
+
+    ok = spark.createDataFrame([(1, "a"), (2, "b")], "id bigint, t string")
+    dup = spark.createDataFrame([(1, "a"), (1, "b")], "id bigint, t string")
+    with pytest.raises(MergeSourceDuplicateError, match=r"version#1"):
+        change_feed([ok, dup, ok], ["id"])
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 4):
+        group = f"change-feed-build-{n}"
+        try:
+            sc.setJobGroup(group, group)
+            change_feed([ok] * n, ["id"])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[2] >= 1 and jobs[4] == jobs[2], jobs
+
+
+def test_maintain_count_sum_equals_recompute(spark):
+    """The one view fold: v0's count + exact-micros view brought forward
+    by the feed equals a recompute from the final version — with a key
+    migrating between groups, a group emptying (dropped) and a group
+    appearing — for a named column and for an aliased expression."""
+    from football_lakehouse_spark.lakehouse.cdc import (
+        change_feed,
+        maintain_count_sum,
+    )
+
+    schema = "k bigint, g string, value double"
+    v0 = spark.createDataFrame([(1, "a", 1.5), (2, "a", 2.25), (3, "b", 0.1)], schema)
+    v1 = spark.createDataFrame([(1, "a", 1.5), (2, "c", 2.25), (3, "b", 0.2)], schema)
+    v2 = spark.createDataFrame([(1, "a", 1.5), (2, "c", 2.25), (4, "d", 7.0)], schema)
+    feed = change_feed([v0, v1, v2], ["k"])
+    by_g = maintain_count_sum(v0, feed, F.col("g"), "value")
+    assert by_g.columns == ["g", "n", "value_micros"]
+    assert sorted(map(tuple, by_g.collect())) == [
+        ("a", 1, 1_500_000), ("c", 1, 2_250_000), ("d", 1, 7_000_000),
+    ]
+    parity = (F.col("k") % 2).alias("parity")
+    by_p = maintain_count_sum(v0, feed, parity, "value")
+    assert by_p.columns == ["parity", "n", "value_micros"]
+    assert sorted(map(tuple, by_p.collect())) == [
+        (0, 2, 9_250_000), (1, 1, 1_500_000),
+    ]

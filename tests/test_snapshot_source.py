@@ -292,10 +292,8 @@ def test_landing_partition_stream_reader_contract(tmp_path):
 
 
 def test_landing_partition_stream_end_to_end(spark, tmp_path):
-    """The default engine stream path now plans executor-side
-    partitions; the driverPrefetch option must still select the simple
-    reader. Both drain the same landing zone to the same rows from the
-    same checkpoint FORMAT (content-addressed offsets interoperate)."""
+    """The engine stream path plans executor-side partitions and
+    drains every landed file's rows."""
     from football_lakehouse_spark.sources.pyds import register_landing_source
 
     land = tmp_path / "landing"
@@ -307,32 +305,19 @@ def test_landing_partition_stream_end_to_end(spark, tmp_path):
         )
     register_landing_source(spark)
 
-    def drain(opts, out, ckpt):
-        r = spark.readStream.format("landing_events").option(
-            "path", str(land)
-        )
-        for k, v in opts.items():
-            r = r.option(k, v)
-        q = (
-            r.load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # partition reader (default)
-    out1, ck1 = str(tmp_path / "o1"), str(tmp_path / "c1")
-    drain({}, out1, ck1)
-    assert {r.event_id for r in spark.read.parquet(out1).collect()} == {
-        0, 1, 2, 3,
-    }
-    # simple reader (opt-in) reads the identical rows
-    out2, ck2 = str(tmp_path / "o2"), str(tmp_path / "c2")
-    drain({"driverPrefetch": "true"}, out2, ck2)
-    assert {r.event_id for r in spark.read.parquet(out2).collect()} == {
+    out, ckpt = str(tmp_path / "o1"), str(tmp_path / "c1")
+    q = (
+        spark.readStream.format("landing_events")
+        .option("path", str(land))
+        .load()
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert {r.event_id for r in spark.read.parquet(out).collect()} == {
         0, 1, 2, 3,
     }
 

@@ -492,82 +492,6 @@ def test_exactly_once_append_survives_batch_replay(spark, tmp_path):
     assert t.read().count() == events.count()
 
 
-def test_transform_with_state_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """API-parity law: the transformWithStateInPandas processor (tws)
-    and the applyInPandasWithState fold (stateful) must reach the SAME
-    final per-user state from the same landing input drained across
-    TWO availableNow runs (state survives the checkpoint restart in
-    both APIs)."""
-    import pytest
-
-    from football_lakehouse_spark.streaming.tws import tws_available
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithState needs google.protobuf (absent in this "
-            "image; RUNBOOK §8 gating policy — the parity assertions "
-            "run the day it is installed)"
-        )
-
-    from football_lakehouse_spark.streaming.ingest import read_landing_stream
-    from football_lakehouse_spark.streaming.stateful import running_user_state
-    from football_lakehouse_spark.streaming.tws import running_user_state_tws
-
-    land = tmp_path / "landing"
-    land.mkdir()
-
-    def write_batch(name, rows):
-        with open(land / name, "w") as f:
-            for eid, uid, val in rows:
-                f.write(
-                    f'{{"event_id":{eid},"ts":"2026-03-01T10:00:0{eid % 10}",'
-                    f'"user_id":{uid},"event_type":"click","value":{val},'
-                    f'"props":null}}\n'
-                )
-
-    write_batch("b1.json", [(1, 7, 1.5), (2, 7, 2.0), (3, 9, 10.0)])
-
-    def drain(op, tag):
-        out = str(tmp_path / f"out_{tag}")
-        ckpt = str(tmp_path / f"ckpt_{tag}")
-
-        def _append(batch, _epoch):
-            batch.write.mode("append").parquet(out)
-
-        q = (
-            op(read_landing_stream(spark, str(land)))
-            .writeStream.trigger(availableNow=True)
-            .outputMode("update")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination(120)
-        return out
-
-    def final_state(out):
-        pdf = spark.read.parquet(out).toPandas()
-        # last emission per user == largest n_events
-        idx = pdf.groupby("user_id")["n_events"].idxmax()
-        return {
-            int(r.user_id): (int(r.n_events), float(r.total_value))
-            for r in pdf.loc[idx].itertuples()
-        }
-
-    out_a = drain(running_user_state, "apply")
-    out_t = drain(running_user_state_tws, "tws")
-    assert final_state(out_a) == final_state(out_t) == {
-        7: (2, 3.5), 9: (1, 10.0)
-    }
-
-    # second batch arrives → both APIs resume from checkpointed state
-    write_batch("b2.json", [(4, 7, 0.5), (5, 11, 4.0)])
-    out_a = drain(running_user_state, "apply")
-    out_t = drain(running_user_state_tws, "tws")
-    expect = {7: (3, 4.0), 9: (1, 10.0), 11: (1, 4.0)}
-    assert final_state(out_a) == final_state(out_t) == expect
-
-
 def test_span_dedup_stream_waves_and_rerun(spark, tmp_path):
     """q291 recipe contract: wave 2 is trimmed against passages first
     seen in waves 0/1 (the index folds each batch's keys in), a
