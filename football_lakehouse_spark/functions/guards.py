@@ -38,15 +38,6 @@ class CollectBoundExceeded(RuntimeError):
 #: n_cells × dim, far below an accidental data-plane materialisation.
 CONTROL_PLANE_BOUND = 1 << 20
 
-#: backstop for ops-surface metadata listings (commit history, snapshot
-#: logs, table properties): version/property counts, not data.
-OPS_METADATA_BOUND = 1_000_000
-
-#: backstop for live-file listings (ops surface): a 100 TB table at
-#: 128 MB files is ~800k files; beyond 10M the caller should work with
-#: the distributed files metadata table instead of a driver list.
-FILE_LISTING_BOUND = 10_000_000
-
 #: partition dirs one write may touch (rewrite "removed" lists): a
 #: single batch touching more partitions than this is a partitioning
 #: bug, not a workload.

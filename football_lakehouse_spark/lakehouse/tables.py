@@ -1231,7 +1231,9 @@ class LakehouseTable:
         Pre-dedupe deterministically upstream — streaming callers use
         ``dedupe_updates`` (latest wins by explicit order columns).
         NOTE eager action: one batch-sized aggregation prices the check
-        (same family as delete()'s predicate count). The update batch
+        (same family as delete()'s predicate count); with the change
+        feed on, the same aggregation also checks the touched target
+        slice the feed diffs. The update batch
         is PERSISTED for the duration of the merge: its lineage can be
         arbitrarily expensive (scd_apply_type2 feeds a multi-window
         plan) and merge evaluates it several times — validation, the
@@ -1247,11 +1249,17 @@ class LakehouseTable:
             updates.unpersist()
 
     def _merge_impl(self, updates: DataFrame, keys: Sequence[str]) -> int:
-        require_unique_keys({"source": updates}, keys, f"merge into {self.base}")
+        where = f"merge into {self.base}"
         if not self.exists():
+            require_unique_keys({"source": updates}, keys, where)
             return self.append(updates)
         head = self._head()  # snapshot pin: read, rewrite, and removal
         base = self.read(version=head)  # sets all derive from ONE version
+        # with the feed on, the source is checked together with the
+        # touched slice the feed diffs (below); a flip of the property
+        # after ``head`` fails the commit, so one of the two checks runs
+        if not self.change_feed_enabled():
+            require_unique_keys({"source": updates}, keys, where)
         parts = None
         if self.partition_by:
             missing = set(self.partition_by) - set(updates.columns)
@@ -1282,12 +1290,20 @@ class LakehouseTable:
                 .select(*self.partition_by).distinct()
             )
             parts = parts_new.unionByName(parts_old).distinct()
-        from football_lakehouse_spark.lakehouse.cdc import change_feed
+        from football_lakehouse_spark.lakehouse.cdc import _diff
+
+        def feed(touched: DataFrame, merged: DataFrame) -> DataFrame:
+            # merged = updates ∪ (touched anti-join updates) is key-unique
+            # whenever both inputs are, so it is not checked again
+            require_unique_keys(
+                {"source": updates, "target": touched}, keys, where
+            )
+            return _diff(touched, merged, keys, 1)
 
         return self._rewrite(
             "merge", head, base, parts,
             lambda touched: merge_upsert(touched, updates, keys),
-            lambda touched, merged: change_feed([touched, merged], keys),
+            feed,
         )
 
     def delete(self, predicate: Column, deletion_vectors: bool = False) -> int:

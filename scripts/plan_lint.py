@@ -130,16 +130,6 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
         "1-row total-weight scalar",
     ("plans/relational.py", "abc_classification"):
         "1-row min/max sizing probe",
-    ("sources/connectors.py", "DeltaBackedTable.describe_history"):
-        "commit-log rows (ops surface, bounded by version count)",
-    ("sources/connectors.py", "IcebergBackedTable._snapshots"):
-        "snapshot-log rows (ops surface, bounded by version count)",
-    ("sources/connectors.py", "IcebergBackedTable._table_props"):
-        "SHOW TBLPROPERTIES rows (property-count bound, "
-        "OPS_METADATA_BOUND-enforced)",
-    ("sources/connectors.py", "IcebergBackedTable.current_files"):
-        "live-snapshot file list (ops surface, parity with "
-        "LakehouseTable.current_files)",
 }
 
 #: the one place the package may call ``createDataFrame``

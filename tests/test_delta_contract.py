@@ -1,12 +1,12 @@
-"""Delta-semantics conformance contract, run against LakehouseTable.
+"""The lakehouse contract: Delta table semantics, asserted on LakehouseTable.
 
-delta-spark is not installable in this image, so equivalence to Delta's
-MERGE / time-travel / VACUUM / OPTIMIZE semantics cannot be asserted by
-differential testing against the real thing. Instead this suite encodes
-the externally documented Delta behaviours (delta.io protocol docs) as a
-TABLE-AGNOSTIC contract over a minimal adapter; pointing `make_table` at
-a real Delta implementation (when a jar is available) runs the identical
-assertions against it.
+The reference declares every table ``USING DELTA``; this engine
+implements that protocol once, as parquet data files plus a manifest
+log (``lakehouse.tables.LakehouseTable``). Each clause below encodes an
+externally documented Delta behaviour (delta.io protocol docs) and
+asserts it on that one implementation, including its log layout,
+sidecar directories and the staging / log-listing / enforcement hooks
+the concurrency clauses inject races through.
 
 Contract clauses covered:
   C1  versions number monotonically from 0, one per commit
@@ -23,6 +23,11 @@ Contract clauses covered:
       the horizon fails loudly, never silently returns partial data
   C8  OPTIMIZE (compaction) rewrites files without changing rows, as
       its own commit
+  C9  DELETE rewrites only the partitions its predicate touches
+  C10 reads resolve from a checkpoint plus the commit tail
+  C11 OPTIMIZE with a sort key clusters rows within each file
+  C12 DELETE keeps rows whose predicate evaluates NULL
+  C13 escaped and NULL partition values round-trip through MERGE/DELETE
   C14 constraint add/drop are versioned commits; RESTORE restores
       constraint state; constraints(version=) sees history
   C15 VACUUM reclaims deletion-vector sidecars (incl. lost-CAS orphans)
@@ -31,6 +36,8 @@ Contract clauses covered:
   C17 the append rebase is refused when table properties changed
       concurrently (staged files were never checked against the new
       constraints)
+  C18 the change data feed is logged per commit once enabled, and a
+      version it cannot serve (pre-enablement, RESTORE) raises
   C19 read-modify-write operations (merge/delete/update/overwrite/
       restore/compact/properties) pin their snapshot head and CONFLICT
       when any commit lands mid-flight — a stale rewrite must never
@@ -45,26 +52,18 @@ import pytest
 from pyspark.sql import functions as F
 
 from football_lakehouse_spark.lakehouse.tables import LakehouseTable
-from football_lakehouse_spark.sources import connectors
 
 
-@pytest.fixture(params=["parquet", "delta", "iceberg"])
-def make_table(request, spark, tmp_path):
-    """Every contract clause runs against the FACTORY surface
-    (connectors.open_table), parameterised over formats: the parquet
-    branch is the always-available LakehouseTable; the delta and
-    iceberg branches skip cleanly while no jar is on the classpath,
-    and the day one is, the identical assertions run against the
-    native binding — no semantic drift can slip in unnoticed."""
-    fmt = request.param
-    if fmt == "delta" and not connectors.delta_available():
-        pytest.skip("delta-spark not on classpath; parquet branch covers the contract")
-    if fmt == "iceberg" and not connectors.iceberg_available(spark):
-        pytest.skip("no Iceberg runtime on classpath; parquet branch covers the contract")
+@pytest.fixture(params=["parquet"])
+def make_table(spark, tmp_path):
+    """Factory for the LakehouseTable handles a clause opens: tables
+    made in one test share one warehouse root, so a second call with
+    the same name is a second writer on the same table. The one
+    ``parquet`` id keeps the clause test ids stable."""
 
     def make(name: str, partition_by=()):
-        return connectors.open_table(spark, str(tmp_path), "contract", name,
-                                     partition_by=partition_by, prefer=fmt)
+        return LakehouseTable(spark, str(tmp_path), "contract", name,
+                              partition_by=partition_by)
 
     return make
 
@@ -77,224 +76,11 @@ def _df(spark, data):
     return spark.createDataFrame(data, "k int, v string")
 
 
-def test_delta_branch_dryrun(spark, tmp_path, monkeypatch):
-    """The native-binding branch is exercised end-to-end in the factory
-    the moment `import delta` resolves: inject a fake `delta` module and
-    assert open_table(prefer='delta') returns DeltaBackedTable wired to
-    the injected DeltaTable API (no jar needed — this pins the branch
-    code so scripts/run_delta_branch.sh needs zero edits on jar
-    drop-in)."""
-    import sys
-    import types
-
-    calls = []
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(s, path):
-            calls.append(("isDeltaTable", path))
-            return False
-
-        @staticmethod
-        def forPath(s, path):
-            calls.append(("forPath", path))
-            raise RuntimeError("fake binding: no real table")
-
-    fake_delta = types.ModuleType("delta")
-    fake_tables = types.ModuleType("delta.tables")
-    fake_tables.DeltaTable = FakeDeltaTable
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-
-    assert connectors.delta_available()
-    t = connectors.open_table(spark, str(tmp_path), "contract", "dry",
-                              partition_by=["p"], prefer="delta")
-    assert isinstance(t, connectors.DeltaBackedTable)
-    assert t.base.endswith("contract/dry")
-    assert t.partition_by == ("p",)
-    # the surface delegates to the public DeltaTable API
-    assert t.exists() is False
-    assert calls == [("isDeltaTable", t.base)]
-    with pytest.raises(RuntimeError, match="fake binding"):
-        t.current_version()
-    assert calls[-1] == ("forPath", t.base)
-    # the full LakehouseTable verbs exist on the adapter (contract suite
-    # runs unmodified the day a real jar lands)
-    for verb in ("append", "overwrite", "merge", "delete", "update", "read",
-                 "compact", "vacuum", "restore", "describe_history",
-                 "current_files", "add_constraint", "drop_constraint",
-                 "constraints", "enable_change_feed", "table_changes"):
-        assert callable(getattr(t, verb)), verb
-
-
-def test_iceberg_branch_dryrun(spark, tmp_path, monkeypatch):
-    """The Iceberg-binding branch is exercised end-to-end in the factory
-    the moment a runtime is on the classpath: force the availability
-    probe true and assert open_table(prefer='iceberg') returns
-    IcebergBackedTable with the hadoop catalog configured for the
-    table's root, the engine verbs present, and every pre-JVM guard
-    firing before any Iceberg call (no jar needed — this pins the
-    branch so a jar drop-in runs the contract suite with zero edits)."""
-    from football_lakehouse_spark.lakehouse.tables import (
-        MergeSourceDuplicateError,
-    )
-
-    monkeypatch.setattr(connectors, "iceberg_available", lambda s: True)
-    t = connectors.open_table(spark, str(tmp_path), "contract", "ibdry",
-                              partition_by=["p"], prefer="iceberg")
-    assert isinstance(t, connectors.IcebergBackedTable)
-    assert t.base.endswith("contract/ibdry")
-    assert t.partition_by == ("p",)
-    # hadoop catalog wired to the table root (lazily instantiated)
-    cat_key = f"spark.sql.catalog.{t.catalog}"
-    assert spark.conf.get(cat_key) == "org.apache.iceberg.spark.SparkCatalog"
-    assert spark.conf.get(f"{cat_key}.type") == "hadoop"
-    assert spark.conf.get(f"{cat_key}.warehouse") == t.root
-    assert t.ident == f"{t.catalog}.`contract`.`ibdry`"
-    # same root → same catalog; different root → different catalog
-    t2 = connectors.open_table(spark, str(tmp_path), "contract", "other",
-                               prefer="iceberg")
-    assert t2.catalog == t.catalog
-    t3 = connectors.open_table(spark, str(tmp_path / "elsewhere"), "c", "x",
-                               prefer="iceberg")
-    assert t3.catalog != t.catalog
-    # full verb surface exists (contract suite runs unmodified on jar
-    # drop-in) and the divergence flags the suite keys off are declared
-    for verb in ("append", "overwrite", "merge", "delete", "update", "read",
-                 "compact", "vacuum", "restore", "describe_history",
-                 "current_files", "add_constraint", "drop_constraint",
-                 "constraints", "enable_change_feed", "table_changes"):
-        assert callable(getattr(t, verb)), verb
-    assert t.supports_constraints is False
-    assert t.history_labels_exact is False
-    assert t.cdf_requires_enablement is False
-    # pre-JVM guards fire before any Iceberg call
-    dup = _df(spark, [(1, "a"), (1, "b"), (2, "c")])
-    with pytest.raises(MergeSourceDuplicateError, match="duplicate source key"):
-        t.merge(dup, ["k"])
-    with pytest.raises(ValueError, match="retain_last must be >= 1"):
-        t.vacuum(retain_last=0)
-    with pytest.raises(NotImplementedError, match="CHECK-constraint"):
-        t.add_constraint("pos_k", "k > 0")
-    with pytest.raises(NotImplementedError, match="CHECK-constraint"):
-        t.constraints()
-    # changelog needs no enablement switch
-    t.enable_change_feed()
-    assert t.change_feed_enabled() is True
-    # the partition-hint warning fires before the (jar-less) CALL fails
-    with pytest.warns(UserWarning, match="target_partitions=2 is ignored"):
-        with pytest.raises(Exception):
-            t.compact(target_partitions=2)
-
-
-def test_delta_vacuum_refuses_unfaithful_retention(spark, tmp_path, monkeypatch):
-    """ADVICE r9: vacuum(retain_last=5) must NOT silently run vacuum(0h)
-    (which would delete every non-live file and destroy time travel);
-    only the retain_last=1 case maps faithfully onto Delta's time-based
-    retention. The guard fires before any DeltaTable call, so the fake
-    module never even sees forPath."""
-    import sys
-    import types
-
-    fake_delta = types.ModuleType("delta")
-    fake_tables = types.ModuleType("delta.tables")
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(s, path):
-            return True
-
-        @staticmethod
-        def forPath(s, path):
-            raise AssertionError("guard must fire before any DeltaTable call")
-
-    fake_tables.DeltaTable = FakeDeltaTable
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-    t = connectors.open_table(spark, str(tmp_path), "contract", "vac",
-                              prefer="delta")
-    with pytest.raises(ValueError, match="retain_last=1 maps faithfully"):
-        t.vacuum(retain_last=5)
-    with pytest.raises(ValueError, match="retain_last"):
-        t.vacuum(retain_last=0)
-
-
-def test_delta_compact_warns_on_ignored_partition_hint(spark, tmp_path, monkeypatch):
-    """ADVICE r9 sibling: Delta OPTIMIZE bin-packs by file size, so
-    target_partitions != 1 cannot be honoured — warn (non-destructive
-    layout hint) rather than silently ignore."""
-    import sys
-    import types
-
-    fake_delta = types.ModuleType("delta")
-    fake_tables = types.ModuleType("delta.tables")
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(s, path):
-            return True
-
-        @staticmethod
-        def forPath(s, path):
-            raise RuntimeError("fake binding: no real table")
-
-    fake_tables.DeltaTable = FakeDeltaTable
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-    t = connectors.open_table(spark, str(tmp_path), "contract", "cmp",
-                              prefer="delta")
-    with pytest.warns(UserWarning, match="target_partitions=2 is ignored"):
-        with pytest.raises(RuntimeError, match="fake binding"):
-            t.compact(target_partitions=2)
-
-
-def test_delta_merge_rejects_duplicate_source_keys(spark, tmp_path, monkeypatch):
-    """ADVICE r9, sharpened by the r10 review: duplicate source keys
-    must be REJECTED before Delta MERGE, not dropDuplicates'd — a
-    silent arbitrary-winner dedup makes the upsert nondeterministic
-    across runs, strictly worse than Delta's loud
-    multiple-source-rows-matched error. Both bindings share the
-    MergeSourceDuplicateError contract; the guard fires before any
-    DeltaTable call."""
-    import sys
-    import types
-
-    from football_lakehouse_spark.lakehouse.tables import (
-        MergeSourceDuplicateError,
-    )
-
-    fake_delta = types.ModuleType("delta")
-    fake_tables = types.ModuleType("delta.tables")
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(s, path):
-            return True
-
-        @staticmethod
-        def forPath(s, path):
-            raise AssertionError("guard must fire before any DeltaTable call")
-
-    fake_tables.DeltaTable = FakeDeltaTable
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-    t = connectors.open_table(spark, str(tmp_path), "contract", "mrg",
-                              prefer="delta")
-    dup = _df(spark, [(1, "a"), (1, "b"), (2, "c")])
-    with pytest.raises(MergeSourceDuplicateError, match=r"duplicate source key"):
-        t.merge(dup, ["k"])
-
-
 def test_parquet_merge_rejects_duplicate_source_keys(spark, tmp_path):
-    """The parquet branch shares the contract: before r10 it silently
-    INSERTED both duplicate rows (violating key uniqueness); now the
-    same named error fires, with sample keys in the message."""
+    """MERGE refuses duplicate source keys: before r10 it silently
+    INSERTED both duplicate rows (violating key uniqueness); now a
+    named error fires, with sample keys in the message."""
     from football_lakehouse_spark.lakehouse.tables import (
-        LakehouseTable,
         MergeSourceDuplicateError,
     )
 
@@ -307,20 +93,6 @@ def test_parquet_merge_rejects_duplicate_source_keys(spark, tmp_path):
     assert _rows(t.read()) == [(1, "x"), (2, "z")]
 
 
-def test_open_table_prefer_validation(spark, tmp_path):
-    with pytest.raises(ValueError, match="unknown table format"):
-        connectors.open_table(spark, str(tmp_path), "contract", "bad",
-                              prefer="hudi")
-    if not connectors.delta_available():
-        with pytest.raises(ModuleNotFoundError, match="delta-spark"):
-            connectors.open_table(spark, str(tmp_path), "contract", "nodelta",
-                                  prefer="delta")
-    if not connectors.iceberg_available(spark):
-        with pytest.raises(ModuleNotFoundError, match="Iceberg"):
-            connectors.open_table(spark, str(tmp_path), "contract", "noiceberg",
-                                  prefer="iceberg")
-
-
 def test_c1_c2_history_shape(spark, make_table):
     t = make_table("hist")
     t.append(_df(spark, [(1, "a")]))
@@ -329,25 +101,14 @@ def test_c1_c2_history_shape(spark, make_table):
     t.compact()
     hist = t.describe_history()
     assert [h["version"] for h in hist] == [0, 1, 2, 3]
-    if getattr(t, "history_labels_exact", True):
-        assert [h["operation"] for h in hist] == [
-            "append", "overwrite", "merge", "optimize"
-        ]
-    else:
-        # the Iceberg binding's SQL MERGE has no snapshot-property hook,
-        # so its history row carries Iceberg's own 'overwrite' label
-        assert hist[0]["operation"] == "append"
-        assert hist[1]["operation"] == "overwrite"
-        assert hist[2]["operation"] in ("merge", "overwrite")
-        assert hist[3]["operation"] == "optimize"
+    assert [h["operation"] for h in hist] == [
+        "append", "overwrite", "merge", "optimize"
+    ]
     assert all(isinstance(h["ts"], float) for h in hist)
     # the commit log is incremental: every commit records add/remove
-    # actions (never the full table file list — Delta's log shape).
-    # Log-shape introspection is parquet-branch-specific; the native
-    # binding's log shape is Delta's own.
-    if hasattr(t, "_read_commit"):
-        assert all(t._read_commit(v)["add"] for v in range(4))
-        assert t._read_commit(1)["remove"]  # overwrite removes v0's files
+    # actions (never the full table file list — Delta's log shape)
+    assert all(t._read_commit(v)["add"] for v in range(4))
+    assert t._read_commit(1)["remove"]  # overwrite removes v0's files
     assert t.current_version() == 3
 
 
@@ -531,8 +292,6 @@ def test_c10_checkpointed_log_replay(spark, make_table):
     import os
 
     t = make_table("ckpt")
-    if not hasattr(t, "log_root"):
-        pytest.skip("manifest-log introspection is parquet-branch-specific")
     states = []
     for i in range(13):
         t.append(_df(spark, [(i, f"v{i}")]))
@@ -575,8 +334,6 @@ def test_c14_constraints_versioned_and_restored(spark, make_table):
     )
 
     t = make_table("cons_hist")
-    if not getattr(t, "supports_constraints", True):
-        pytest.skip("binding has no CHECK-constraint surface (Iceberg)")
     t.append(_df(spark, [(1, "a")]))           # v0
     v_clean = t.current_version()
     t.add_constraint("pos_k", "k > 0")         # v1 (set_properties commit)
@@ -602,9 +359,6 @@ def test_c15_vacuum_reclaims_deletion_vector_sidecars(spark, make_table):
     import os
 
     t = make_table("dv_vac")
-    if not hasattr(t, "_snapshot"):
-        pytest.skip("DV sidecar layout is parquet-branch-specific (native "
-                    "Delta stores DVs inside its own log)")
     t.append(_df(spark, [(i, f"v{i}") for i in range(10)]))
     t.delete(F.col("k") < 3, deletion_vectors=True)
     dv_root = os.path.join(t.base, "_dv")
@@ -632,9 +386,6 @@ def test_c16_concurrent_appends_both_commit(spark, make_table):
     writer B already took, the put-if-absent link refuses, and the
     public append() retry loop must absorb it."""
     t = make_table("conc_app")
-    if not hasattr(t, "_log_entries"):
-        pytest.skip("CAS-race injection hooks are parquet-branch-specific "
-                    "(native Delta resolves blind-append conflicts itself)")
     t.append(_df(spark, [(1, "base")]))
 
     real = t._log_entries
@@ -682,9 +433,6 @@ def test_c19_concurrent_merge_conflict_detected(spark, make_table):
     from football_lakehouse_spark.lakehouse.tables import ConcurrentWriteError
 
     t1 = make_table("conc_mrg")
-    if not hasattr(t1, "_stage"):
-        pytest.skip("staging injection hook is parquet-branch-specific "
-                    "(native formats detect this conflict themselves)")
     t1.append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]))
     t2 = make_table("conc_mrg")  # second handle = second writer
 
@@ -720,8 +468,6 @@ def test_c19_concurrent_delete_conflict_detected(spark, make_table):
     from pyspark.sql import functions as F
 
     t1 = make_table("conc_del")
-    if not hasattr(t1, "_stage"):
-        pytest.skip("staging injection hook is parquet-branch-specific")
     t1.append(_df(spark, [(1, "a"), (2, "b"), (3, "c")]))
     t2 = make_table("conc_del")
     raced = {"done": False}
@@ -751,8 +497,6 @@ def test_c19_concurrent_append_if_new_skips_duplicate(spark, make_table):
     the other, and the blind-append path rebased both in). The loser
     now conflicts, re-probes the new head, sees the hash, and skips."""
     t1 = make_table("conc_ain")
-    if not hasattr(t1, "_stage"):
-        pytest.skip("staging injection hook is parquet-branch-specific")
     t1.append(
         spark.createDataFrame([(1, "seed", "h0")], "k int, v string, h string")
     )
@@ -786,8 +530,6 @@ def test_c19_concurrent_constraint_add_not_lost(spark, make_table):
     from football_lakehouse_spark.lakehouse.tables import ConcurrentWriteError
 
     t1 = make_table("conc_prop")
-    if not hasattr(t1, "_enforce"):
-        pytest.skip("enforcement injection hook is parquet-branch-specific")
     t1.append(_df(spark, [(1, "a")]))
     t2 = make_table("conc_prop")
     raced = {"done": False}
@@ -815,8 +557,6 @@ def test_c17_concurrent_append_conflicts_on_property_change(spark, make_table):
     from football_lakehouse_spark.lakehouse.tables import ConcurrentWriteError
 
     t = make_table("conc_cons")
-    if not hasattr(t, "_props"):
-        pytest.skip("staging/props injection hooks are parquet-branch-specific")
     t.append(_df(spark, [(1, "a")]))
     props_before = t._props()
     a_df = t._align_schema(_df(spark, [(-2, "bad")]), False)
@@ -837,12 +577,6 @@ def test_c18_change_feed_logged_and_served(spark, make_table):
     from football_lakehouse_spark.lakehouse.cdc import change_feed
 
     t = make_table("cdf")
-    if not hasattr(t, "enable_change_feed"):
-        pytest.skip("binding has no change-feed surface")
-    if not getattr(t, "cdf_update_images", True):
-        pytest.skip("binding's changelog serves updates as delete+insert "
-                    "pairs (Iceberg without identifier columns); the "
-                    "derive-by-diff oracle expects pre/post images")
     t.enable_change_feed()
     base = spark.createDataFrame(
         [(i, "a", float(i)) for i in range(10)], "k bigint, g string, v double"
@@ -883,11 +617,6 @@ def test_c18_change_feed_hole_raises(spark, make_table):
     sidecar; serving it must raise, never silently skip — a hole in
     the feed corrupts every downstream incremental consumer."""
     t = make_table("cdf_hole")
-    if not hasattr(t, "enable_change_feed"):
-        pytest.skip("binding has no change-feed surface")
-    if not getattr(t, "cdf_requires_enablement", True):
-        pytest.skip("binding's changelog needs no enablement — there is "
-                    "no pre-enablement hole to assert (Iceberg)")
     base = spark.createDataFrame([(1, 1.0), (2, 2.0)], "k bigint, v double")
     t.append(base)
     t.delete(F.col("k") == 1)  # v1, no CDF yet
@@ -909,11 +638,6 @@ def test_c18_restore_hole_raises(spark, make_table):
     restore re-add the rows. A no-op restore (target == current live
     set) stays skippable metadata."""
     t = make_table("cdf_restore")
-    if not hasattr(t, "enable_change_feed") or not hasattr(t, "restore"):
-        pytest.skip("binding has no change-feed/restore surface")
-    if not getattr(t, "cdf_requires_enablement", True):
-        pytest.skip("binding replays every snapshot — a restore commit is "
-                    "served as data changes, never a hole (Iceberg)")
     t.enable_change_feed()
     t.append(spark.createDataFrame([(1, 1.0), (2, 2.0)], "k bigint, v double"))
     t.delete(F.col("k") == 1)  # v1, CDF logged
@@ -937,11 +661,6 @@ def test_c18_overwrite_hole_raises(spark, make_table):
     overwrite of an EMPTY table (nothing removed) is a pure insert and
     serves fine without a sidecar."""
     t = make_table("cdf_ow_hole")
-    if not hasattr(t, "enable_change_feed"):
-        pytest.skip("binding has no change-feed surface")
-    if not getattr(t, "cdf_requires_enablement", True):
-        pytest.skip("binding's changelog needs no enablement — there is "
-                    "no pre-enablement hole to assert (Iceberg)")
     t.overwrite(spark.createDataFrame([(1, 1.0)], "k bigint, v double"))  # v0: empty→rows
     t.overwrite(spark.createDataFrame([(2, 2.0)], "k bigint, v double"))  # v1: removes, no CDF
     t.enable_change_feed()
@@ -967,11 +686,6 @@ def test_c18_vacuum_reclaims_change_sidecars(spark, make_table):
     import os
 
     t = make_table("cdf_vacuum")
-    if not hasattr(t, "enable_change_feed"):
-        pytest.skip("binding has no change-feed surface")
-    if not hasattr(t, "_cdf_write"):
-        pytest.skip("_changes sidecar layout is parquet-branch-specific "
-                    "(native Delta retains CDF inside its own log)")
     t.enable_change_feed()
     t.append(spark.createDataFrame([(1, 1.0)], "k bigint, v double"))
     t.delete(F.col("k") == 1)                       # sidecar v1
@@ -986,259 +700,3 @@ def test_c18_vacuum_reclaims_change_sidecars(spark, make_table):
             t.table_changes(t.current_version() - 1).collect()} == {
         "update_preimage", "update_postimage"
     }
-
-
-# -- Iceberg version addressing: anchor-derived offset (ADVICE r12 /
-#    judge Next #6 — tested over faked snapshot metadata, no jar) ------
-
-
-def test_rel_data_path_uri_spellings():
-    """Hadoop renders local file paths as 'file:/x', 'file:///x', or
-    bare '/x' depending on the code path; all must relativise
-    identically against the table base (current_files parity)."""
-    base = "/wh/contract/t1"
-    for p in (
-        "file:/wh/contract/t1/data/a.parquet",
-        "file:///wh/contract/t1/data/a.parquet",
-        "/wh/contract/t1/data/a.parquet",
-    ):
-        assert connectors._rel_data_path(p, base) == "data/a.parquet"
-    # scheme'd base + scheme'd path (object store spelling)
-    assert (
-        connectors._rel_data_path(
-            "s3a://bucket/wh/t1/data/b.parquet", "s3a://bucket/wh/t1"
-        )
-        == "data/b.parquet"
-    )
-    # a path OUTSIDE the base stays absolute (normalised), never '../'
-    assert (
-        connectors._rel_data_path("file:///elsewhere/c.parquet", base)
-        == "/elsewhere/c.parquet"
-    )
-
-
-def _fake_iceberg_table(spark, tmp_path, monkeypatch, chain, props):
-    """IcebergBackedTable with snapshot metadata + table properties
-    faked at the instance boundary (_snapshots/_table_props/
-    _set_table_prop) — exercises the version-addressing logic the jar
-    gate otherwise leaves untested."""
-    monkeypatch.setattr(connectors, "iceberg_available", lambda s: True)
-    t = connectors.open_table(spark, str(tmp_path), "contract", "vaddr",
-                              prefer="iceberg")
-    t._snapshots = lambda: chain
-    t._table_props = lambda: dict(props)
-    t._set_table_prop = lambda k, v: props.__setitem__(k, v)
-    return t
-
-
-def _chain(*sids):
-    out = []
-    prev = None
-    for i, sid in enumerate(sids):
-        out.append({"snapshot_id": sid, "parent_id": prev, "ts": 1000.0 + i,
-                    "operation": "append", "summary": {}})
-        prev = sid
-    return out
-
-
-def test_iceberg_offset_anchor_partial_expiry(spark, tmp_path, monkeypatch):
-    """expire_snapshots may retain MORE than retain_last (branch/tag
-    refs, history.expire.min-snapshots-to-keep). The anchor derives the
-    offset from the anchor's observed position, so versions stay exact;
-    the old predicted max(0, n - retain_last) form would overcount and
-    silently re-index reads one version too old."""
-    props = {connectors._FLS_VERSION_ANCHOR: "30:2"}
-    # versions 0..2 were snapshots 10,20,30; vacuum(retain_last=1)
-    # anchored head 30:2 but Iceberg only expired snapshot 10
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                            _chain(20, 30), props)
-    assert t._version_offset() == 1          # NOT the predicted 2
-    assert t.current_version() == 2
-    assert t._snapshot_id_at(1) == 20
-    assert t._snapshot_id_at(2) == 30
-    with pytest.raises(ValueError, match="retention horizon"):
-        t._snapshot_id_at(0)
-
-
-def test_iceberg_offset_anchor_crash_before_expiry(spark, tmp_path, monkeypatch):
-    """Crash between anchor stamp and expiry: nothing expired, so the
-    anchor's position — and every version — is unchanged (the pre-r13
-    stamp-predicted-offset form instead left live versions refusing
-    reads)."""
-    props = {connectors._FLS_VERSION_ANCHOR: "30:2"}
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                            _chain(10, 20, 30), props)
-    assert t._version_offset() == 0
-    assert t.current_version() == 2
-    assert t._snapshot_id_at(0) == 10
-
-
-def test_iceberg_offset_anchor_expiry_then_appends(spark, tmp_path, monkeypatch):
-    """Appends after a fully-effective expiry extend the chain past the
-    anchor; offset stays at the anchored value."""
-    props = {connectors._FLS_VERSION_ANCHOR: "30:2"}
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                            _chain(30, 40), props)
-    assert t._version_offset() == 2
-    assert t.current_version() == 3
-    assert t._snapshot_id_at(3) == 40
-    with pytest.raises(ValueError, match="retention horizon"):
-        t._snapshot_id_at(1)
-
-
-def test_iceberg_offset_anchor_gone_fails_loud(spark, tmp_path, monkeypatch):
-    """An anchor pointing at a snapshot no longer in the chain (external
-    expiry or rollback by another tool) must fail LOUDLY — never guess
-    an offset and silently mis-address versions."""
-    props = {connectors._FLS_VERSION_ANCHOR: "30:2"}
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                            _chain(40, 50), props)
-    with pytest.raises(ValueError, match="version-anchor snapshot 30"):
-        t._version_offset()
-    with pytest.raises(ValueError, match="version-anchor snapshot 30"):
-        t.current_version()
-
-
-def test_iceberg_offset_legacy_and_empty_props(spark, tmp_path, monkeypatch):
-    """Pre-anchor tables fall back to the legacy expired-count property;
-    fresh tables default to offset 0."""
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                            _chain(10, 20), {})
-    assert t._version_offset() == 0
-    t2 = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                             _chain(20, 30),
-                             {connectors._FLS_VERSION_OFFSET: "1"})
-    assert t2._version_offset() == 1
-    assert t2.current_version() == 2
-
-
-def test_iceberg_vacuum_stamps_anchor_before_expiry(spark, tmp_path, monkeypatch):
-    """vacuum() anchors the current head (sid:version) BEFORE calling
-    expire_snapshots, and returns the reclaimed-file count from the
-    procedure's actual result — never a prediction."""
-    props = {}
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch,
-                            _chain(10, 20, 30), props)
-    calls = []
-
-    class _Row(dict):
-        def __getitem__(self, k):
-            return dict.__getitem__(self, k)
-
-    class _FakeSQL:
-        def sql(self, q):
-            calls.append(q)
-            class _R:
-                def head(self):
-                    return _Row({"deleted_data_files_count": 4})
-            return _R()
-
-    t.spark = _FakeSQL()
-    assert t.vacuum(retain_last=1) == 4
-    # anchor stamped with head sid 30 at engine version 2, before CALL
-    assert props[connectors._FLS_VERSION_ANCHOR] == "30:2"
-    assert any("expire_snapshots" in q for q in calls)
-    # a second vacuum after partial expiry re-anchors from observed state
-    t._snapshots = lambda: _chain(20, 30)     # only 10 actually expired
-    t.vacuum(retain_last=1)
-    assert props[connectors._FLS_VERSION_ANCHOR] == "30:2"  # still version 2
-
-
-def test_iceberg_snapshot_chain_broken_parent_fallback(spark, tmp_path, monkeypatch):
-    """_snapshots orders by the parent-id chain; a broken chain (two
-    roots — e.g. a rollback by another tool) falls back to
-    (committed_at, snapshot_id) ordering rather than raising."""
-    broken = [
-        {"snapshot_id": 50, "parent_id": 99, "ts": 1003.0,
-         "operation": "append", "summary": {}},
-        {"snapshot_id": 20, "parent_id": None, "ts": 1001.0,
-         "operation": "append", "summary": {}},
-        {"snapshot_id": 30, "parent_id": 20, "ts": 1002.0,
-         "operation": "append", "summary": {}},
-    ]
-    monkeypatch.setattr(connectors, "iceberg_available", lambda s: True)
-    t = connectors.open_table(spark, str(tmp_path), "contract", "vchain",
-                              prefer="iceberg")
-
-    class _Rows:
-        def __init__(self, rows):
-            self._rows = rows
-
-        def select(self, *cols):
-            return self
-
-        def limit(self, n):
-            # bounded_collect fetches through limit(n+1)
-            import copy
-
-            clone = copy.copy(self)
-            clone._rows = self._rows[:n]
-            return clone
-
-        def collect(self):
-            import datetime
-
-            out = []
-            for s in self._rows:
-                out.append({
-                    "snapshot_id": s["snapshot_id"],
-                    "parent_id": s["parent_id"],
-                    "committed_at": datetime.datetime.fromtimestamp(
-                        s["ts"], datetime.timezone.utc
-                    ),
-                    "operation": s["operation"],
-                    "summary": s["summary"],
-                })
-            return out
-
-    class _FakeSpark:
-        def table(self, name):
-            assert name.endswith(".snapshots")
-            return _Rows(broken)
-
-    t.spark = _FakeSpark()
-    got = [s["snapshot_id"] for s in t._snapshots()]
-    assert got == [20, 30, 50]
-
-
-def test_iceberg_offset_anchor_nonlinear_chain_fails_loud(spark, tmp_path, monkeypatch):
-    """r13 review: a tag/branch ref can keep an ORPHAN snapshot while
-    its ancestors are expired — the retained set is then non-contiguous
-    and a timestamp-fallback index is NOT a version distance. The
-    anchor derivation must refuse rather than silently mis-address
-    (offset from the fallback index would alias old data to newer
-    version numbers)."""
-    props = {connectors._FLS_VERSION_ANCHOR: "40:3"}
-    # orphan sid 10 (tag-retained; its children 20, 30 were expired)
-    # plus the head 40 whose parent 30 is gone: two roots
-    broken = [
-        {"snapshot_id": 10, "parent_id": None, "ts": 1000.0,
-         "operation": "append", "summary": {}},
-        {"snapshot_id": 40, "parent_id": 30, "ts": 1003.0,
-         "operation": "append", "summary": {}},
-    ]
-    t = _fake_iceberg_table(spark, tmp_path, monkeypatch, broken, props)
-    with pytest.raises(ValueError, match="single\\s+parent chain"):
-        t._version_offset()
-    # the legacy-offset path (no anchor) is not affected by this guard
-    t2 = _fake_iceberg_table(spark, tmp_path, monkeypatch, broken,
-                             {connectors._FLS_VERSION_OFFSET: "0"})
-    assert t2._version_offset() == 0
-
-
-def test_rel_data_path_foreign_authority_stays_absolute():
-    """r13 review: a file in a DIFFERENT bucket whose path component
-    coincides with the base's path must not be mis-relativised."""
-    assert (
-        connectors._rel_data_path(
-            "s3a://data-bucket/wh/t1/data/f.parquet", "s3a://meta-bucket/wh/t1"
-        )
-        == "s3a://data-bucket/wh/t1/data/f.parquet"
-    )
-    # and the local spellings still relativise (empty/localhost authority)
-    assert (
-        connectors._rel_data_path(
-            "file://localhost/wh/t1/data/f.parquet", "/wh/t1"
-        )
-        == "data/f.parquet"
-    )

@@ -1482,6 +1482,27 @@ def test_change_feed_shape_matches_table_changes(spark, tmp_path):
     )
 
 
+def test_cdf_merge_rejects_duplicate_target_key(spark, tmp_path):
+    """With the change feed on, merge checks the source and the touched
+    target slice in one aggregation: a key duplicated in the target (two
+    appends) that the merge touches still raises before anything is
+    staged or committed."""
+    from football_lakehouse_spark.lakehouse.tables import MergeSourceDuplicateError
+
+    schema = "k bigint, v double"
+    t = LakehouseTable(spark, str(tmp_path), "silver", "cdf_dup")
+    t.enable_change_feed()
+    t.append(spark.createDataFrame([(1, 1.0), (2, 2.0)], schema))
+    t.append(spark.createDataFrame([(1, 1.5)], schema))
+    head = t.current_version()
+    data_files = sorted(os.listdir(t.data_root))
+    with pytest.raises(MergeSourceDuplicateError, match=r"'target', \(1,\)"):
+        t.merge(spark.createDataFrame([(1, 9.0), (3, 3.0)], schema), ["k"])
+    assert t.current_version() == head
+    assert sorted(os.listdir(t.data_root)) == data_files
+    assert not os.path.exists(os.path.join(t.base, "_changes"))
+
+
 def test_change_feed_prices_every_version_once(spark):
     """k versions are key-validated in ONE eager aggregation: building
     a 4-version feed starts as many jobs as a 2-version one (a pairwise
