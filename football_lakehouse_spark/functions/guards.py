@@ -10,10 +10,14 @@ an actual runtime assertion: it fetches ``max_rows + 1`` through a
 claim, even when the input would be huge) and fails LOUDLY when the
 claim is exceeded.
 
-Every COLLECT_ALLOW entry either collects through this helper or is
-the helper itself; the lint treats direct ``bounded_collect(...)``
-call sites exactly like raw ``.collect()`` sites, so the allowlist
-stays a faithful audit of who materialises what.
+Every COLLECT_ALLOW entry either collects through this helper (or its
+Arrow twin :func:`bounded_arrow`) or is the helper itself; the lint
+treats direct ``bounded_collect(...)``/``bounded_arrow(...)`` call
+sites exactly like raw ``.collect()`` sites, so the allowlist stays a
+faithful audit of who materialises what.
+
+Size-driven plan choices read the optimizer's estimate through
+:func:`plan_bytes` (driver-side metadata, no job).
 
 The opposite direction — driver rows back into a DataFrame — goes
 through :func:`local_frame`, the package's only ``createDataFrame``
@@ -24,9 +28,13 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
 from datetime import datetime, timezone
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.types import StructType, TimestampType
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class CollectBoundExceeded(RuntimeError):
@@ -64,6 +72,40 @@ def bounded_collect(df: DataFrame, max_rows: int, site: str) -> list[Row]:
             "bound or re-audit the site"
         )
     return rows
+
+
+def bounded_arrow(df: DataFrame, max_rows: int, site: str) -> pa.Table:
+    """The Arrow twin of :func:`bounded_collect`: ``df`` as one
+    ``pyarrow.Table`` fetched through ``limit(max_rows + 1).toArrow()``,
+    raising :class:`CollectBoundExceeded` past ``max_rows``. For
+    driver-tier loops that want columns (numpy arrays, list offsets)
+    rather than ``Row`` objects; callers that can run distributed catch
+    the error and fall back."""
+    if max_rows < 0:
+        raise ValueError(f"{site}: max_rows must be >= 0, got {max_rows}")
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        raise CollectBoundExceeded(
+            f"{site}: driver materialisation returned more than its "
+            f"audited bound of {max_rows} rows"
+        )
+    return table
+
+
+def plan_bytes(df: DataFrame) -> int | None:
+    """The optimizer's ``sizeInBytes`` estimate of ``df``'s plan: no job
+    runs. ``None`` when the plan cannot be estimated — including a
+    Python-RDD or checkpointed source, which Spark sizes at
+    ``spark.sql.defaultSizeInBytes``. Without CBO statistics a filter
+    keeps its child's size, so the estimate errs large there; a parquet
+    scan reports on-disk (compressed) bytes, so it errs small against
+    the decoded rows."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        unknown = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    except Exception:
+        return None
+    return None if est >= unknown else est
 
 
 def local_frame(

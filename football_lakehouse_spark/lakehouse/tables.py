@@ -82,6 +82,7 @@ from football_lakehouse_spark.functions.guards import (
     PER_WRITE_PARTITION_BOUND,
     bounded_collect,
     local_frame,
+    plan_bytes,
 )
 from football_lakehouse_spark.operators.merge import merge_upsert
 
@@ -725,10 +726,10 @@ class LakehouseTable:
         the failure direction is keeping the rebalance, i.e. the
         correct 100 TB behaviour. Estimation is driver-side metadata
         only — no job runs."""
+        est = plan_bytes(df)
+        if est is None:
+            return True  # cannot estimate -> keep the at-scale default
         try:
-            est = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
             advisory = int(
                 self.spark._jvm.org.apache.spark.network.util.JavaUtils
                 .byteStringAsBytes(
@@ -739,7 +740,7 @@ class LakehouseTable:
                 )
             )
         except Exception:
-            return True  # cannot estimate -> keep the at-scale default
+            return True  # unreadable advisory size -> same default
         return est > advisory
 
     # ------------------------------------------------------------------ write

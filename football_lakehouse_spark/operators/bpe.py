@@ -1,45 +1,56 @@
-"""Distributed BPE tokenizer training (the first N merges).
+"""BPE tokenizer training (the first N merges).
 
 Byte-pair encoding (Sennrich et al. 2016) is how most LLM tokenizers
 are trained; each round finds the most frequent adjacent symbol pair in
-the corpus and merges it into a new symbol. This module runs the rounds
-on Spark with ZERO Python UDFs:
+the corpus and merges it into a new symbol. :func:`bpe_rounds` runs
+them in two tiers with ZERO Python UDFs:
 
-- The corpus collapses to its WORD VOCABULARY first (one shuffle:
-  word → count). Every later round operates on the vocab table weighted
-  by counts — vocabulary-sized work, never corpus-sized, exactly like
-  the classic fast-BPE implementations.
-- Pair counting is an explode over adjacent symbol positions plus one
-  aggregation (standard BPE counts overlapping adjacencies — ``aaa``
-  contributes (a,a) twice).
-- The winning pair (max weight, ties to the lexicographically smallest
-  (left, right)) broadcasts as a 1×3 table.
-- The merge APPLICATION is greedy left-to-right non-overlapping — a
-  sequential walk — expressed as an ``F.aggregate`` fold over the
-  symbol array: replace the accumulator's last element when (last,
-  current) equals the winning pair. No flag is needed to stop a fresh
-  merge from chaining: the merged symbol's text ``left||right`` can
-  never equal ``left`` (right is non-empty), so ``aaa`` folds to
-  ``[aa, a]`` by construction.
+- The corpus collapses to its WORD VOCABULARY first, on Spark (one
+  shuffle: word → count) — the only corpus-sized stage. Every round
+  works on the vocab weighted by counts, exactly like the classic
+  fast-BPE implementations.
+- Driver tier: vocabularies are bounded (natural-language vocabularies
+  grow ~Heaps' law), so the ``(word, cnt)`` vocab crosses to the
+  driver in ONE bounded Arrow collect (``CONTROL_PLANE_BOUND`` words)
+  and the rounds run in plain Python; the final vocab returns through
+  ``local_frame``. The collect runs only the collapse's jobs, where
+  each Spark round costs a winner collect plus a checkpoint.
+- Past the bound the same rounds run on Spark (:func:`_spark_rounds`),
+  each stage an array expression over the checkpointed vocab.
 
-Each round's outputs (winner, rewritten vocab) are tiny/vocab-sized and
-consumed by multiple later stages, so they are eagerly
-localCheckpoint-ed — the same O(rounds²)-lineage defence as the Lloyd
-quantiser and connected components.
+Both tiers share one round definition, and forced-bound tests hold them
+equal:
 
-At 100 TB the corpus→vocab collapse is the only corpus-scale stage;
-vocabularies are bounded (natural-language vocabularies grow ~Heaps'
-law), so the rounds run on a table that fits comfortably whatever the
-corpus size. The oracle unrolls the identical rounds in SQL with a
-``list_reduce`` fold (separator-encoded accumulator), making every
-winner AND every rewritten symbol sequence value-checked cross-engine.
+- Pair counting counts overlapping adjacencies (standard BPE — ``aaa``
+  contributes (a,a) twice), weighted by word count.
+- The winning pair has the max weight, ties to the smallest
+  ``(left, right)``: Spark's binary UTF-8 string order, which is
+  Python's code-point order.
+- The merge APPLICATION is greedy left-to-right non-overlapping: replace
+  the last output symbol when (last, current) equals the winning pair.
+  No flag is needed to stop a fresh merge from chaining: the merged
+  symbol ``left||right`` can never equal ``left`` (right is non-empty),
+  so ``aaa`` folds to ``[aa, a]`` by construction.
+- Training stops early when no adjacent pair remains.
+
+The oracle unrolls the identical rounds in SQL with a ``list_reduce``
+fold (separator-encoded accumulator), making every winner AND every
+rewritten symbol sequence value-checked cross-engine.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, functions as F
 
-from football_lakehouse_spark.functions.guards import local_frame
+from football_lakehouse_spark.functions.guards import (
+    CONTROL_PLANE_BOUND,
+    CollectBoundExceeded,
+    bounded_arrow,
+    bounded_collect,
+    local_frame,
+)
 from football_lakehouse_spark.functions.text import ws_tokens
 
 
@@ -52,12 +63,55 @@ def bpe_rounds(
     — control-plane scalars, one per round — and the final rewritten
     vocab ``(word, cnt, syms)``). Shared core of
     :func:`bpe_merges` (training log) and :func:`bpe_encode_tokens`
-    (applying the learned merges — the encode side)."""
+    (applying the learned merges — the encode side).
+
+    EAGER ACTION at plan-build time: one bounded collect of the vocab,
+    or past ``CONTROL_PLANE_BOUND`` words the Spark rounds' jobs."""
     words = (
         docs.select(F.explode(ws_tokens(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
+    try:
+        tbl = bounded_arrow(words, CONTROL_PLANE_BOUND, "bpe_rounds vocab")
+    except CollectBoundExceeded:
+        return _spark_rounds(words, n_merges)
+    vocab = [
+        (w, c, list(w))
+        for w, c in zip(tbl.column("word").to_pylist(), tbl.column("cnt").to_pylist())
+    ]
+    out: list[tuple] = []
+    for rnd in range(1, n_merges + 1):
+        weights: Counter = Counter()
+        for _w, c, syms in vocab:
+            for pair in zip(syms, syms[1:]):
+                weights[pair] += c
+        if not weights:
+            break
+        (l_val, r_val), w_val = min(weights.items(), key=lambda kv: (-kv[1], kv[0]))
+        out.append((rnd, l_val, r_val, l_val + r_val, w_val))
+        vocab = [(w, c, _fold(syms, l_val, r_val)) for w, c, syms in vocab]
+    return out, local_frame(
+        docs.sparkSession, vocab, "word string, cnt bigint, syms array<string>"
+    )
+
+
+def _fold(syms: list[str], l_val: str, r_val: str) -> list[str]:
+    """One greedy left-to-right merge pass of the pair ``(l, r)``."""
+    acc: list[str] = []
+    for cur in syms:
+        if acc and acc[-1] == l_val and cur == r_val:
+            acc[-1] = l_val + r_val
+        else:
+            acc.append(cur)
+    return acc
+
+
+def _spark_rounds(words: DataFrame, n_merges: int) -> tuple[list[tuple], DataFrame]:
+    """:func:`bpe_rounds` on Spark, for a vocab past the driver bound.
+    Each round's outputs (winner, rewritten vocab) are consumed by
+    several later stages, so the vocab is eagerly localCheckpoint-ed —
+    the same O(rounds²)-lineage defence as connected components."""
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)),
@@ -65,9 +119,6 @@ def bpe_rounds(
     vocab = words.select("word", "cnt", chars.alias("syms")).localCheckpoint(
         eager=True
     )
-
-    from football_lakehouse_spark.functions.guards import bounded_collect
-
     out: list[tuple] = []
     for rnd in range(1, n_merges + 1):
         # adjacent pairs (guard single-symbol words: sequence(1, 0) would
@@ -86,12 +137,8 @@ def bpe_rounds(
             "cnt", F.col("p.l").alias("l"), F.col("p.r").alias("r")
         )
         # the winner is CONTROL-PLANE (one row by construction): collect
-        # it instead of checkpoint + head-probe + 1-row crossJoin
-        # broadcast (r14 — one takeOrdered job per round instead of
-        # three, and the fold below binds the winner as literals, so the
-        # vocab rewrite is a NARROW pass with no broadcast build). The
-        # same single row crossed to the driver under the broadcast
-        # form anyway.
+        # it, and the fold below binds it as literals, so the vocab
+        # rewrite is a NARROW pass with no broadcast build
         win_rows = bounded_collect(
             pairs.groupBy("l", "r")
             .agg(F.sum("cnt").cast("bigint").alias("w"))
@@ -100,10 +147,8 @@ def bpe_rounds(
             1,
             "bpe_rounds per-round winner",
         )
-        # merges exhausted (every word is a single symbol): classic BPE
-        # stops early. Without this, an empty winner would silently wipe
-        # the whole vocab — total data loss for any corpus whose merge
-        # inventory is smaller than n_merges.
+        # merges exhausted (every word is a single symbol): stop. An
+        # empty winner would otherwise wipe the whole vocab.
         if not win_rows:
             break
         l_val, r_val, w_val = win_rows[0]["l"], win_rows[0]["r"], win_rows[0]["w"]
@@ -125,7 +170,6 @@ def bpe_rounds(
         vocab = vocab.select("word", "cnt", fold.alias("syms")).localCheckpoint(
             eager=True
         )
-
     return out, vocab
 
 

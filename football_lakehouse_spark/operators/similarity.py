@@ -11,9 +11,11 @@ One production form per operator, one copy of each shared stage:
   cross join). Hyperplanes are derived deterministically from sha256
   so results are reproducible run-to-run and engine-to-engine.
 - :func:`kmeans_cells` / :func:`assign_cells` — the deterministic
-  integer-space IVF quantiser. Every assignment pass runs the one
-  Arrow kernel (:func:`_assign_rows`) against driver-held centroids;
-  its pure-SQL spec is a test oracle (``tests/ivf_oracles.py``).
+  integer-space IVF quantiser. Its Lloyd rounds run on the driver from
+  one bounded Arrow collect (on Spark past the bound). Every assignment
+  pass runs the one Arrow kernel (:func:`_assign_rows`) against
+  driver-held centroids; its pure-SQL spec is a test oracle
+  (``tests/ivf_oracles.py``).
 - :func:`ivf_search` / :func:`ivf_search_budget` — serving over a
   prebuilt index; both share the probe-d² stage and the scoring join
   and differ only in how a query picks its cells.
@@ -32,15 +34,27 @@ summation), which makes even the floating-point cosine oracle-exact.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Sequence
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window, functions as F
 
 from football_lakehouse_spark.functions.guards import (
     CONTROL_PLANE_BOUND,
+    CollectBoundExceeded,
+    bounded_arrow,
     bounded_collect,
     local_frame,
+    plan_bytes,
 )
+
+# Python workers cannot `import football_lakehouse_spark` (the package is
+# not on their path when a driver harness runs from another cwd), so the
+# assignment kernel's module-level helpers ship BY VALUE inside its
+# mapInPandas closure — the worker-shipping contract of
+# operators/multimodal.py.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 DIM = 64
 
@@ -299,6 +313,48 @@ def _quantized_components(
     )
 
 
+def _vector_error(rid, length: int | None, dim: int) -> ValueError:
+    """The named data error of a NULL (``length`` None) or ragged
+    embedding, shared by the assignment kernel and the driver-tier
+    Lloyd rounds so both paths fail with one message."""
+    got = "NULL" if length is None else f"dim {length}"
+    return ValueError(
+        f"assign_cells: vector {rid!r} has {got}, centroids have dim "
+        f"{dim} — embeddings must be non-null fixed-width arrays"
+    )
+
+
+def _centroid_matrix(crows: Sequence[tuple]):
+    """``(cell_ids, cmat)`` from driver-held ``(cell, pos, cq)`` rows:
+    cells ascending, so a first-minimum argmin over the columns is the
+    lower-cell tie-break."""
+    import numpy as np
+
+    if not crows:
+        # an empty quantiser means the caller skipped training — a
+        # named error beats silently assigning nothing
+        raise ValueError("assign_cells: empty centroid table")
+    cells = sorted({c for c, _p, _q in crows})
+    dim = max(p for _c, p, _q in crows) + 1
+    cmat = np.zeros((len(cells), dim), dtype=np.int64)
+    cidx = {c: i for i, c in enumerate(cells)}
+    for c, p, q in crows:
+        cmat[cidx[c], p] = q
+    return np.array(cells, dtype=np.int64), cmat
+
+
+def _nearest(q, cmat, c2):
+    """Row index of each vector's nearest centroid and its d², in exact
+    int64: ``|q|² + |c|² − 2 q·c``; components ≤ 1e6, so every term is
+    ≤ dim·1e12, far under 2^63. ``argmin`` takes the first minimum,
+    i.e. the lower cell."""
+    import numpy as np
+
+    d2m = (q * q).sum(axis=1)[:, None] + c2[None, :] - 2 * (q @ cmat.T)
+    j = d2m.argmin(axis=1)
+    return j, d2m[np.arange(len(j)), j]
+
+
 def _assign_rows(
     vectors: DataFrame, crows: Sequence[tuple], *,
     id_col: str, vec_col: str, id_out: str, normalize: bool,
@@ -307,10 +363,8 @@ def _assign_rows(
     """The assignment kernel, over a DRIVER-HELD centroid list
     ``[(cell, pos, cq), ...]`` (control-plane: n_cells×dim tuples).
     Shared by :func:`assign_cells` (which collects its centroid table
-    first) and the :func:`kmeans_cells` Lloyd loop, which already holds
-    each round's centroids as rows (r15) — passing them straight in
-    removes the per-round localCheckpoint + re-collect job pair the r14
-    loop paid to hand a 1 KB table from one round to the next."""
+    first) and :func:`kmeans_cells`, which already holds its centroids
+    as rows."""
     import numpy as np
 
     # zero-norm guard (inside micro_qvec — a zero vector "normalizes"
@@ -324,17 +378,8 @@ def _assign_rows(
         micro_qvec(F.col(vec_col), normalize).alias("qvec"),
     )
     id_field = vectors.schema[id_col].dataType.simpleString()
-    if not crows:
-        # an empty quantiser means the caller skipped training — a
-        # named error beats silently assigning nothing
-        raise ValueError("assign_cells: empty centroid table")
-    cells = sorted({c for c, _p, _q in crows})
-    dim = max(p for _c, p, _q in crows) + 1
-    cmat = np.zeros((len(cells), dim), dtype=np.int64)
-    cidx = {c: i for i, c in enumerate(cells)}
-    for c, p, q in crows:
-        cmat[cidx[c], p] = q
-    cell_ids = np.array(cells, dtype=np.int64)
+    cell_ids, cmat = _centroid_matrix(crows)
+    dim = cmat.shape[1]
     c2 = (cmat * cmat).sum(axis=1)
 
     def _assign_batches(it):
@@ -348,29 +393,17 @@ def _assign_rows(
             # traceback instead of a named data error
             for rid, v in zip(pdf[id_out], pdf["qvec"]):
                 if v is None or len(v) != dim:
-                    got = "NULL" if v is None else f"dim {len(v)}"
-                    raise ValueError(
-                        f"assign_cells: vector {rid!r} has {got}, "
-                        f"centroids have dim {dim} — embeddings must "
-                        "be non-null fixed-width arrays"
-                    )
+                    raise _vector_error(rid, None if v is None else len(v), dim)
             q = np.stack(
                 [np.asarray(v, dtype=np.int64) for v in pdf["qvec"]]
             )
-            # exact int64: |q|² + |c|² − 2 q·c ; comps ≤ 1e6 →
-            # every term ≤ dim·1e12, far under 2^63
-            d2m = (
-                (q * q).sum(axis=1)[:, None]
-                + c2[None, :]
-                - 2 * (q @ cmat.T)
-            )
-            j = d2m.argmin(axis=1)  # first min → lowest cell id
+            j, d2 = _nearest(q, cmat, c2)
             out = {
                 id_out: pdf[id_out],
                 "cell": cell_ids[j].astype("int32"),
             }
             if with_d2:
-                out["d2"] = d2m[np.arange(len(j)), j]
+                out["d2"] = d2
             if keep_qvec:
                 out["qvec"] = pdf["qvec"]
             yield pd.DataFrame(out)
@@ -437,6 +470,93 @@ def assign_cells(
     )
 
 
+#: driver-tier bound of :func:`kmeans_cells`: the quantised training
+#: set it collects (rows × dim × 8 B of int64 components) to run the
+#: Lloyd rounds in numpy. Past it the rounds run on Spark. 256 MB is
+#: 128× the sf0.1 corpus (2000 × 64) and a small share of a driver heap.
+_LLOYD_DRIVER_MAX_BYTES = 256_000_000
+
+
+def _lloyd_on_driver(
+    qtrain: DataFrame, n_cells: int, iters: int, id_out: str
+) -> list[tuple] | None:
+    """:func:`kmeans_cells`' seeding and Lloyd rounds over ONE bounded
+    Arrow collect of the quantised training set ``(id_out, qvec)``;
+    the final centroid rows ``[(cell, pos, cq), ...]``, or ``None``
+    when the set is past ``_LLOYD_DRIVER_MAX_BYTES``. The arithmetic is
+    the Spark rounds', step for step: seeds are the ``n_cells`` lowest
+    ids, d² is exact int64 (:func:`_nearest`), ties go to the lower
+    cell, the update is ``floor(float(sum) / count)`` and a cell that
+    gets no members is dropped. The data errors are the Spark rounds'
+    too, raised here at build time."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    budget = _LLOYD_DRIVER_MAX_BYTES
+    # a parquet source estimates as its compressed bytes, where the
+    # collect holds int64 components: double it for float32 embeddings
+    # (a float64 corpus is over-counted, which errs toward Spark)
+    est = plan_bytes(qtrain)
+    if est is not None and 2 * est > budget:
+        return None
+    try:
+        tbl = bounded_arrow(
+            qtrain, min(CONTROL_PLANE_BOUND, budget // 8),
+            "kmeans_cells training set",
+        )
+    except CollectBoundExceeded:
+        return None
+    if tbl.nbytes > budget:
+        return None
+    tbl = tbl.sort_by([(id_out, "ascending")], null_placement="at_start")
+    n = tbl.num_rows
+    if n < n_cells:
+        raise ValueError(
+            f"kmeans_cells: training set has {n} vectors "
+            f"< n_cells={n_cells} — lower train_sample_mod"
+        )
+    ids = tbl.column(id_out).to_pylist()
+    qv = tbl.column("qvec").combine_chunks()
+    lens = pc.list_value_length(qv).fill_null(-1).to_numpy()
+    for i in range(n_cells):
+        if lens[i] < 0:
+            raise ValueError(
+                f"kmeans_cells: seed vector {ids[i]!r} has a NULL "
+                "embedding — init vectors must be non-null arrays"
+            )
+    seeds = qv.slice(0, n_cells).to_pylist()
+    cells, cmat = _centroid_matrix(
+        [(c, p, q) for c, v in enumerate(seeds) for p, q in enumerate(v)]
+    )
+    dim = cmat.shape[1]
+    bad = np.flatnonzero(lens != dim)
+    if len(bad):
+        i = int(bad[0])
+        raise _vector_error(ids[i], None if lens[i] < 0 else int(lens[i]), dim)
+    # zero-copy: a NULL component fails loudly here instead of riding
+    # into the int64 sums as garbage
+    q = qv.flatten().to_numpy().reshape(n, dim)
+    # row blocks bound the n × n_cells d² matrix
+    step = max(1, (1 << 22) // len(cells))
+    for _ in range(iters):
+        c2 = (cmat * cmat).sum(axis=1)
+        j = np.concatenate([
+            _nearest(q[r0:r0 + step], cmat, c2)[0] for r0 in range(0, n, step)
+        ])
+        order = np.argsort(j, kind="stable")
+        js = j[order]
+        starts = np.flatnonzero(np.r_[True, js[1:] != js[:-1]])
+        sums = np.add.reduceat(q[order], starts, axis=0)
+        counts = np.diff(np.r_[starts, n])
+        cmat = np.floor(sums / counts[:, None]).astype(np.int64)
+        cells = cells[js[starts]]
+    return [
+        (int(c), p, v)
+        for c, row in zip(cells, cmat.tolist())
+        for p, v in enumerate(row)
+    ]
+
+
 def kmeans_cells(
     corpus: DataFrame, n_cells: int = 16, iters: int = 2,
     id_col: str = "vec_id", vec_col: str = "embedding", id_out: str = "vec_id",
@@ -470,128 +590,121 @@ def kmeans_cells(
     None keeps exact full-corpus training — the oracle-matching form
     every registered query uses.
 
-    Scale contract (r14 form): cell assignment is one NARROW pass
-    against driver-held centroids (n_cells×dim — tiny at any corpus
-    scale); each Lloyd round's centroid update explodes the
-    ALREADY-ASSIGNED rows by component and partial-aggregates map-side,
-    so the only exchange per round carries ≈ n_cells×dim×n_tasks
-    partial rows — never the sample. (The pre-r14 rounds paid a
-    corpus-keyed groupBy inside the assignment plus an exploded
-    components-by-id join per update: ~3 sample-sized shuffles per
-    round, one of them dim× wide. Same integer arithmetic, same
-    assignments, bit-identical centroids.) Centroid sums stay exact
-    below 2^53 (qx ≤ 1e6 per component → safe past 1e9 members per
-    cell).
+    Scale contract: the rounds run on the DRIVER while the quantised
+    training set fits ``_LLOYD_DRIVER_MAX_BYTES`` (train rows × dim ×
+    8 B): one bounded Arrow collect, then seeding and every Lloyd
+    round in numpy with the Spark rounds' exact integer arithmetic —
+    one job where the Spark rounds cost one per round plus the seed
+    collect (:func:`_lloyd_on_driver`). The bound is checked against
+    the optimizer's size estimate before the collect and against the
+    collected table's bytes after it. Past it, the rounds run on
+    Spark over a persisted, repartitioned corpus: cell assignment is
+    one NARROW pass against driver-held centroids, and each round's
+    centroid update explodes the already-assigned rows by component
+    and partial-aggregates map-side, so the only exchange per round
+    carries ≈ n_cells×dim×n_tasks partial rows — never the sample.
+    Both paths give identical centroids (forced-bound tests). Centroid
+    sums stay exact below 2^53 (qx ≤ 1e6 per component → safe past 1e9
+    members per cell). Either way the returned assignment is the lazy
+    :func:`_assign_rows` pass: over the corpus as the caller partitioned
+    it on the driver path (no Spark round reads it twice, so nothing is
+    cached or reshuffled), over the persisted repartitioned corpus past
+    the bound.
+
+    EAGER ACTIONS at plan-build time. On the driver path a NULL seed,
+    a NULL or ragged training vector and a training set smaller than
+    ``n_cells`` raise their named ``ValueError`` at build time, even
+    with ``iters=0``; on the Spark path a bad non-seed vector raises
+    when the first round (or, with ``iters=0``, the returned plan)
+    runs.
     """
-    # embedding tables pack many rows per file split and every Lloyd
-    # stage is CPU-bound → spread the corpus across executors first
-    # (same rationale as brute_force_topk). The training set is the
-    # working set of EVERY Lloyd round (iters+1 assignment passes +
-    # iters centroid updates) — persist it once so each round reads the
-    # cached rows instead of re-scanning and re-decoding the source
-    # parquet; at 100 TB this is the difference between k passes over
-    # the cache tier and k passes over object storage.
-    par = corpus.sparkSession.sparkContext.defaultParallelism
-    corpus = corpus.repartition(par).persist()
-    train = corpus
-    if train_sample_mod is not None and train_sample_mod > 1:
-        train = corpus.where(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(train_sample_mod)) == 0
-        ).persist()
-    # quantised ARRAY form of the training vectors (the exact space the
-    # kernel's d² runs in) — a narrow projection over the cached train
-    # rows; the exploded per-component form only ever appears AFTER an
-    # assignment, where it partial-aggregates straight to centroids
-    qtrain = train.select(
-        F.col(id_col).alias(id_out),
-        micro_qvec(F.col(vec_col), normalize).alias("qvec"),
-    )
-
-    # init: the n_cells lowest-id TRAINING vectors, cell = 0..n_cells-1
-    # in id order. The id list is a control-plane scalar (n_cells rows,
-    # e.g. 16–64) — enumerate it on the driver instead of a global
-    # row_number window so no WindowExec-without-partition ever appears
-    # in a Lloyd plan (the window was bounded and harmless, but the
-    # single-partition warning is indistinguishable in logs from a real
-    # scale cliff).
-    # init seeds: collect the n_cells lowest-id QUANTISED vectors
-    # directly (control-plane: n_cells×dim ints — the same payload the
-    # Arrow kernel collects every round) and build centroid 0 as a
-    # local frame: no broadcast join, no posexplode pass, no eager
-    # init checkpoint job (r14; the id list alone was already a
-    # driver-side scalar before).
-    seed_rows = bounded_collect(
-        qtrain.orderBy(id_out).limit(n_cells),
-        n_cells,
-        "kmeans_cells init seeds",
-    )
-    if len(seed_rows) < n_cells:
-        raise ValueError(
-            f"kmeans_cells: training set has {len(seed_rows)} vectors "
-            f"< n_cells={n_cells} — lower train_sample_mod"
-        )
-    for r in seed_rows:
-        if r["qvec"] is None:
-            raise ValueError(
-                f"kmeans_cells: seed vector {r[id_out]!r} has a NULL "
-                "embedding — init vectors must be non-null arrays (the "
-                "pre-r14 exploded form silently DROPPED such a seed, "
-                "leaving a missing cell)"
-            )
-    crows = [
-        (c, p, int(q))
-        for c, r in enumerate(seed_rows)
-        for p, q in enumerate(r["qvec"])
-    ]
-
     spark = corpus.sparkSession
+
+    def training(df: DataFrame) -> DataFrame:
+        if train_sample_mod is not None and train_sample_mod > 1:
+            return df.where(
+                F.pmod(F.xxhash64(F.col(id_col)), F.lit(train_sample_mod)) == 0
+            )
+        return df
+
+    def quantised(df: DataFrame) -> DataFrame:
+        # the exact space the kernel's d² runs in
+        return df.select(
+            F.col(id_col).alias(id_out),
+            micro_qvec(F.col(vec_col), normalize).alias("qvec"),
+        )
 
     def assign(
         vectors: DataFrame, rows: list, keep_qvec: bool = False
     ) -> DataFrame:
-        # assignment kernel shared with the incremental append path;
-        # the rounds hold centroids as DRIVER rows (control-plane:
-        # n_cells×dim), so the kernel consumes them directly — no
-        # per-round table materialisation at all (r15)
         return _assign_rows(
             vectors, rows, id_col=id_col, vec_col=vec_col, id_out=id_out,
             normalize=normalize, keep_qvec=keep_qvec,
         )
 
-    # each round: ONE job — the map-side-combined centroid update is
-    # collected straight back to the driver (n_cells×dim rows, the
-    # same control-plane payload the assignment kernel needs anyway).
-    # The r14 loop localCheckpoint-ed the update (job 1) only for the
-    # next assignment to re-collect it (job 2): a 1 KB table took two
-    # cluster round-trips per round to cross from one round to the
-    # next. Same integer arithmetic, same assignments, bit-identical
-    # centroids.
-    for _ in range(iters):
-        # assignment carries qvec through (keep_qvec), so the centroid
-        # update explodes the assigned rows directly and map-side
-        # partial aggregation shrinks the round's only exchange to
-        # ≈ n_cells×dim partials per task (r14; previously: exploded
-        # components re-joined to the assignment by id — two
-        # sample-sized shuffle sides, one dim× wide)
-        assigned = assign(train, crows, keep_qvec=True)
-        upd = (
-            assigned.select("cell", F.posexplode("qvec").alias("pos", "cq"))
-            .groupBy("cell", "pos")
-            .agg(
-                F.floor(F.sum("cq") / F.count(F.lit(1))).cast("bigint").alias("cq")
-            )
+    crows = _lloyd_on_driver(quantised(training(corpus)), n_cells, iters, id_out)
+    if crows is None:
+        # past the driver bound: the rounds run on Spark. Embedding
+        # tables pack many rows per file split and every round is
+        # CPU-bound → spread the corpus across executors first (same
+        # rationale as brute_force_topk). The training set is the
+        # working set of EVERY round (iters+1 assignment passes + iters
+        # centroid updates) — persist it once so each round reads the
+        # cached rows instead of re-scanning and re-decoding the source
+        # parquet
+        par = spark.sparkContext.defaultParallelism
+        corpus = corpus.repartition(par).persist()
+        train = training(corpus)
+        if train is not corpus:
+            train = train.persist()
+        # init seeds: the n_cells lowest-id QUANTISED training vectors,
+        # cell = 0..n_cells-1 in id order (control-plane: n_cells×dim)
+        seed_rows = bounded_collect(
+            quantised(train).orderBy(id_out).limit(n_cells),
+            n_cells,
+            "kmeans_cells init seeds",
         )
-        crows = sorted(
-            (r["cell"], r["pos"], int(r["cq"]))
-            for r in bounded_collect(
-                upd, CONTROL_PLANE_BOUND, "kmeans_cells centroid update"
+        if len(seed_rows) < n_cells:
+            raise ValueError(
+                f"kmeans_cells: training set has {len(seed_rows)} vectors "
+                f"< n_cells={n_cells} — lower train_sample_mod"
             )
-        )
-    # the Lloyd loop is done: the sampled training cache is fully
-    # consumed and can be released NOW. The corpus cache stays: the
-    # returned lazy assignment still reads it.
-    if train is not corpus:
-        train.unpersist()
+        for r in seed_rows:
+            if r["qvec"] is None:
+                raise ValueError(
+                    f"kmeans_cells: seed vector {r[id_out]!r} has a NULL "
+                    "embedding — init vectors must be non-null arrays"
+                )
+        crows = [
+            (c, p, int(q))
+            for c, r in enumerate(seed_rows)
+            for p, q in enumerate(r["qvec"])
+        ]
+        # each round: ONE job — the assignment carries qvec through,
+        # the update explodes the assigned rows and partial-aggregates
+        # map-side (≈ n_cells×dim partials per task cross the round's
+        # only exchange), and the result is collected straight back to
+        # the driver for the next round's kernel
+        for _ in range(iters):
+            assigned = assign(train, crows, keep_qvec=True)
+            upd = (
+                assigned.select("cell", F.posexplode("qvec").alias("pos", "cq"))
+                .groupBy("cell", "pos")
+                .agg(
+                    F.floor(F.sum("cq") / F.count(F.lit(1)))
+                    .cast("bigint").alias("cq")
+                )
+            )
+            crows = sorted(
+                (r["cell"], r["pos"], int(r["cq"]))
+                for r in bounded_collect(
+                    upd, CONTROL_PLANE_BOUND, "kmeans_cells centroid update"
+                )
+            )
+        # the sampled training cache is fully consumed; the corpus
+        # cache stays, since the returned lazy assignment reads it
+        if train is not corpus:
+            train.unpersist()
     # the returned centroid TABLE is built once, from the final rows
     # (cell/pos-sorted for a deterministic frame). coalesce(1): the
     # local frame otherwise parallelizes into defaultParallelism slices
@@ -1189,13 +1302,7 @@ def semantic_dedup(
     # one-row probe of the biggest cell's row count over the
     # checkpointed (id, cell) map beside the dim of the driver-built
     # centroid table.
-    try:
-        est = int(
-            corpus._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes()
-        )
-    except Exception:
-        est = None
+    est = plan_bytes(corpus)
     fits_kernel = True
     if est is None or est > _PAIR_GUARD_MIN_BYTES:
         biggest, dim = bounded_collect(

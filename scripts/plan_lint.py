@@ -17,8 +17,8 @@ and greps the EXECUTED plan for the anti-patterns this engine bans:
   Allowed ONLY for EXPAND_ALLOW: genuine cube/rollup/grouping-sets
   semantics (where Expand IS the operator) — never as an accidental
   count-distinct plan (the q164 lesson: rewrite two-phase).
-- ``.collect()``/``.toPandas()`` in package source — a driver
-  materialisation is a scale cliff unless its size is bounded by
+- ``.collect()``/``.toPandas()``/``.toArrow()`` in package source — a
+  driver materialisation is a scale cliff unless its size is bounded by
   construction. Statically scanned (AST, whole package, Spark-free);
   every site must be an audited COLLECT_ALLOW entry naming its bound.
 - ``createDataFrame(...)`` in package source outside
@@ -72,21 +72,26 @@ EXPAND_ALLOW = {
 }
 
 
-#: audited driver-materialisation sites — every `.collect()`/`.toPandas()`
-#: AND every `bounded_collect(...)` call in the package must appear here
+#: audited driver-materialisation sites — every `.collect()`/`.toPandas()`/
+#: `.toArrow()` AND every `bounded_collect(...)`/`bounded_arrow(...)` call
+#: in the package must appear here
 #: as (module-relative path, enclosing qualname) with its BOUND named;
 #: anything else fails the static lint. The bound is what makes the site
-#: scale-safe: each collects a scalar, a fixed-domain table, or an
-#: ops-surface metadata list — never data. Since r13 the bounds are also
+#: scale-safe: each collects a scalar, a fixed-domain table, an
+#: ops-surface metadata list, or a driver-tier working set under a
+#: row/byte bound with a distributed fallback past it. Since r13 the bounds are also
 #: ENFORCED AT RUNTIME: each site routes through
-#: functions/guards.bounded_collect (limit(n+1) fetch + loud
-#: CollectBoundExceeded), so a drifting caller cannot materialise more
-#: than its audit claims.
+#: functions/guards.bounded_collect or its Arrow twin bounded_arrow
+#: (limit(n+1) fetch + loud CollectBoundExceeded), so a drifting caller
+#: cannot materialise more than its audit claims.
 COLLECT_ALLOW: dict[tuple[str, str], str] = {
     ("functions/guards.py", "bounded_collect"):
         "the shared runtime-bound primitive every audited site routes "
         "through (fetches max_rows+1 via limit, fails loudly past the "
         "audited bound)",
+    ("functions/guards.py", "bounded_arrow"):
+        "bounded_collect's Arrow twin: the same limit(max_rows+1) fetch "
+        "as one pyarrow Table",
     ("lakehouse/ddl.py", "smoke_roundtrip"):
         "DDL smoke probe: limit-bounded readback of the created table",
     ("lakehouse/tables.py", "LakehouseTable._enforce"):
@@ -100,6 +105,9 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
     ("operators/blocking.py", "assert_candidate_volume"):
         "1-row candidate-count aggregate",
     ("operators/bpe.py", "bpe_rounds"):
+        "(word, cnt) vocabulary for the driver-tier rounds "
+        "(CONTROL_PLANE_BOUND words; past it, the Spark rounds)",
+    ("operators/bpe.py", "_spark_rounds"):
         "1-row per-round merge winner (limit(1), n_merges-bounded)",
     ("operators/dedup.py", "neardup_clusters"):
         "verified pair-graph edge list for the driver union-find "
@@ -111,8 +119,13 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
     ("operators/similarity.py", "assign_cells"):
         "centroid table for the one assignment kernel (n_cells×dim "
         "rows, config-bounded)",
+    ("operators/similarity.py", "_lloyd_on_driver"):
+        "quantised (id, qvec) training set for the driver-tier Lloyd "
+        "rounds (_LLOYD_DRIVER_MAX_BYTES of int64 components, at most "
+        "CONTROL_PLANE_BOUND rows; past it, the Spark rounds)",
     ("operators/similarity.py", "kmeans_cells"):
-        "centroid table (n_cells rows, config-bounded)",
+        "Spark rounds past the driver bound: n_cells seed vectors and "
+        "each round's centroid table (n_cells×dim rows)",
     ("operators/similarity.py", "refine_hot_cells"):
         "per-cell counts + split centroids (bounded by n_cells)",
     ("operators/similarity.py", "semantic_dedup"):
@@ -132,13 +145,19 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
         "1-row min/max sizing probe",
 }
 
+#: driver-materialising DataFrame methods, and the guards helpers that
+#: wrap them under a runtime bound
+RAW_COLLECTS = ("collect", "toPandas", "toArrow")
+BOUNDED_COLLECTS = ("bounded_collect", "bounded_arrow")
+
 #: the one place the package may call ``createDataFrame``
 LOCAL_FRAME_SITE = ("functions/guards.py", "local_frame")
 
 
 def scan_collect_sites(pkg_root: str | None = None) -> list[str]:
-    """Static source lint: every ``.collect()``/``.toPandas()`` call in
-    the package must be an audited entry in COLLECT_ALLOW, and every
+    """Static source lint: every ``.collect()``/``.toPandas()``/
+    ``.toArrow()`` call in the package must be an audited entry in
+    COLLECT_ALLOW, and every
     ``createDataFrame`` call must be the one inside LOCAL_FRAME_SITE.
     Returns violation strings (empty = clean). Also flags STALE
     allowlist entries so a refactor can't leave a silent hole open.
@@ -174,28 +193,20 @@ def scan_collect_sites(pkg_root: str | None = None) -> list[str]:
                         (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
                     ):
                         nstack = stack + [child.name]
+                    fn = child.func if isinstance(child, ast.Call) else None
+                    called = getattr(fn, "attr", None) or getattr(fn, "id", None)
                     is_raw = (
-                        isinstance(child, ast.Call)
-                        and isinstance(child.func, ast.Attribute)
-                        and child.func.attr in ("collect", "toPandas")
+                        isinstance(fn, ast.Attribute) and called in RAW_COLLECTS
                     )
-                    # bounded_collect call sites are audited exactly like
-                    # raw collects — the helper enforces the bound at
-                    # runtime, the allowlist still names WHO collects
-                    is_bounded = (
-                        isinstance(child, ast.Call)
-                        and (
-                            (isinstance(child.func, ast.Name)
-                             and child.func.id == "bounded_collect")
-                            or (isinstance(child.func, ast.Attribute)
-                                and child.func.attr == "bounded_collect")
-                        )
-                    )
+                    # bounded_collect/bounded_arrow call sites are audited
+                    # exactly like raw collects — the helper enforces the
+                    # bound at runtime, the allowlist still names WHO
+                    # collects
+                    is_bounded = called in BOUNDED_COLLECTS
                     key = (rel, ".".join(stack) or "<module>")
                     if (
-                        isinstance(child, ast.Call)
-                        and isinstance(child.func, ast.Attribute)
-                        and child.func.attr == "createDataFrame"
+                        isinstance(fn, ast.Attribute)
+                        and called == "createDataFrame"
                         and key != LOCAL_FRAME_SITE
                     ):
                         errs.append(
@@ -205,10 +216,7 @@ def scan_collect_sites(pkg_root: str | None = None) -> list[str]:
                             "LocalTableScan, no Python RDD)"
                         )
                     if is_raw or is_bounded:
-                        kind = (
-                            f".{child.func.attr}()" if is_raw
-                            else "bounded_collect(...)"
-                        )
+                        kind = f".{called}()" if is_raw else f"{called}(...)"
                         seen.add(key)
                         if key not in COLLECT_ALLOW:
                             errs.append(

@@ -1024,6 +1024,191 @@ def test_kmeans_sampled_training_contract(spark, emb):
         kmeans_cells(corpus, n_cells=256, iters=1, train_sample_mod=1000)
 
 
+def _kmeans_both_paths(monkeypatch, corpus, **kw):
+    """``kmeans_cells`` on its driver tier, then with the driver bound
+    forced to 0 so the Spark rounds run: each path's sorted assignment
+    and centroid rows."""
+    from football_lakehouse_spark.operators import similarity
+
+    tiers = []
+    real = similarity._lloyd_on_driver
+
+    def spy(*a, **k):
+        out = real(*a, **k)
+        tiers.append("driver" if out is not None else "spark")
+        return out
+
+    def run():
+        a, c = similarity.kmeans_cells(corpus, **kw)
+        return sorted(map(tuple, a.collect())), sorted(map(tuple, c.collect()))
+
+    monkeypatch.setattr(similarity, "_lloyd_on_driver", spy)
+    driver = run()
+    with monkeypatch.context() as m:
+        m.setattr(similarity, "_LLOYD_DRIVER_MAX_BYTES", 0)
+        spark_rounds = run()
+    assert tiers == ["driver", "spark"], tiers
+    return driver, spark_rounds
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"normalize": False},
+        {"normalize": True},
+        {"normalize": False, "train_sample_mod": 3},
+    ],
+    ids=["raw", "normalized", "sampled"],
+)
+def test_kmeans_driver_rounds_equal_spark_rounds(spark, emb, monkeypatch, kw):
+    """The driver-tier Lloyd rounds and the Spark rounds past the bound
+    give identical centroids and assignments."""
+    driver, spark_rounds = _kmeans_both_paths(
+        monkeypatch, emb, n_cells=8, iters=2, **kw
+    )
+    assert driver == spark_rounds
+    assert len({c for c, _p, _q in driver[1]}) == 8
+
+
+def test_kmeans_both_paths_drop_empty_cell_and_floor_negative_sums(
+    spark, monkeypatch
+):
+    """Seeds 1 and 2 are the same vector, so cells 0 and 1 tie for every
+    vector and the lower cell wins: cell 1 gets no members and is
+    dropped, as the Spark update's groupBy drops it. Cell 2's update
+    divides a negative sum: floor(-3907 / 2) = -1954, not -1953."""
+    vecs = spark.createDataFrame(
+        [
+            (1, [0.5, 0.5]),
+            (2, [0.5, 0.5]),
+            (3, [-1 / 1024, -1 / 1024]),  # micro-units -977
+            (4, [-3 / 1024, -3 / 1024]),  # micro-units -2930
+            (5, [0.75, 0.5]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    driver, spark_rounds = _kmeans_both_paths(
+        monkeypatch, vecs, n_cells=3, iters=2
+    )
+    assert driver == spark_rounds
+    assignment, cent = driver
+    assert assignment == [(1, 0), (2, 0), (3, 2), (4, 2), (5, 0)]
+    assert cent == [
+        (0, 0, 583333), (0, 1, 500000), (2, 0, -1954), (2, 1, -1954),
+    ]
+
+
+@pytest.mark.parametrize(
+    "rows, n_cells, message",
+    [
+        ([(1, None), (2, [0.5, 0.5]), (3, [0.1, 0.2])], 2,
+         "seed vector 1 has a NULL embedding"),
+        ([(1, [0.5, 0.5]), (2, [0.1, 0.2]), (3, None)], 2,
+         "vector 3 has NULL, centroids have dim 2"),
+        ([(1, [0.5, 0.5]), (2, [0.1, 0.2]), (3, [0.5])], 2,
+         "vector 3 has dim 1, centroids have dim 2"),
+        ([(1, [0.5, 0.5]), (2, [0.1, 0.2])], 3,
+         "training set has 2 vectors < n_cells=3"),
+    ],
+    ids=["null-seed", "null-vector", "ragged-vector", "too-few"],
+)
+def test_kmeans_both_paths_raise_named_errors(
+    spark, monkeypatch, rows, n_cells, message
+):
+    """A NULL seed, a NULL or ragged non-seed and a training set smaller
+    than ``n_cells`` raise the same named error on both paths — on the
+    driver tier as a ``ValueError`` at build time; the Spark rounds
+    raise the kernel's error from the first round's job."""
+    from football_lakehouse_spark.operators import similarity
+
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=message):
+        similarity.kmeans_cells(vecs, n_cells=n_cells, iters=1)
+    monkeypatch.setattr(similarity, "_LLOYD_DRIVER_MAX_BYTES", 0)
+    with pytest.raises(Exception, match=message):
+        similarity.kmeans_cells(vecs, n_cells=n_cells, iters=1)
+
+
+def test_kmeans_and_bpe_driver_tiers_build_in_one_collect(spark, emb, docs):
+    """The driver tiers replace the round loops: kmeans_cells builds in
+    one job (the training-set collect) and bpe_rounds in at most two
+    (the corpus→vocab aggregation and its collect)."""
+    from football_lakehouse_spark.operators.bpe import bpe_rounds
+    from football_lakehouse_spark.operators.similarity import kmeans_cells
+
+    _, jobs = _jobs_in_group(
+        spark, "kmeans-driver-build", lambda: kmeans_cells(emb, n_cells=8)
+    )
+    assert len(jobs) == 1, jobs
+    _, jobs = _jobs_in_group(
+        spark, "bpe-driver-build", lambda: bpe_rounds(docs, n_merges=4)
+    )
+    assert len(jobs) <= 2, jobs
+
+
+def _bpe_both_paths(monkeypatch, docs, n_merges):
+    """``bpe_rounds`` on its driver tier, then with the vocab bound
+    forced to 0 so the Spark rounds run; asserts both give the same
+    winners and final vocab, and returns them."""
+    from football_lakehouse_spark.operators import bpe
+
+    def run():
+        wins, vocab = bpe.bpe_rounds(docs, n_merges)
+        return wins, sorted((r.word, r.cnt, tuple(r.syms)) for r in vocab.collect())
+
+    fallbacks = []
+    real = bpe._spark_rounds
+
+    def spy(*a, **k):
+        fallbacks.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(bpe, "_spark_rounds", spy)
+    driver = run()
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "CONTROL_PLANE_BOUND", 0)
+        spark_rounds = run()
+    assert fallbacks == [1], fallbacks
+    assert driver == spark_rounds
+    return driver
+
+
+def test_bpe_driver_rounds_equal_spark_rounds_overlapping_pairs(
+    spark, monkeypatch
+):
+    """``aaa`` counts (a,a) twice and folds greedily to ``[aa, a]``;
+    training stops once no adjacent pair remains, before n_merges."""
+    docs = spark.createDataFrame([("aaa aaa ab",)], "text string")
+    wins, vocab = _bpe_both_paths(monkeypatch, docs, 5)
+    assert wins == [
+        (1, "a", "a", "aa", 4),
+        (2, "aa", "a", "aaa", 2),
+        (3, "a", "b", "ab", 1),
+    ]
+    assert vocab == [("aaa", 2, ("aaa",)), ("ab", 1, ("ab",))]
+    wins, vocab = _bpe_both_paths(monkeypatch, docs, 0)
+    assert wins == []
+    assert vocab == [("aaa", 2, ("a", "a", "a")), ("ab", 1, ("a", "b"))]
+
+
+def test_bpe_driver_rounds_equal_spark_rounds_ties_and_non_ascii(
+    spark, monkeypatch
+):
+    """Equal weights go to the smallest ``(left, right)``, on symbols
+    whose code-point order differs from UTF-16 order: U+FF21 sorts
+    before U+1F600 in Python and in Spark's binary UTF-8 order (UTF-16
+    would put the surrogate pair first)."""
+    docs = spark.createDataFrame(
+        [("x\U0001F600 x\uFF21 \u00e9z ez ba ab",)], "text string"
+    )
+    wins, _ = _bpe_both_paths(monkeypatch, docs, 6)
+    assert [(l, r) for _rnd, l, r, _m, _w in wins] == [
+        ("a", "b"), ("b", "a"), ("e", "z"),
+        ("x", "\uFF21"), ("x", "\U0001F600"), ("\u00e9", "z"),
+    ]
+    assert {w for *_x, w in wins} == {1}
+
+
 def test_dsir_scores_hand_computed(spark):
     """dsir_scores on a 5-doc corpus with hand-computed discriminants:
     'alpha' is target-heavy (evidence +9 per occurrence), 'omega' is

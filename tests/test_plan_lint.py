@@ -63,6 +63,28 @@ def test_static_collect_lint_flags_new_site(tmp_path):
     assert any("stale COLLECT_ALLOW" in e for e in errs)
 
 
+def test_static_collect_lint_flags_arrow_sites(tmp_path):
+    """A raw ``.toArrow()`` is a driver materialisation like
+    ``.collect()``, and a ``bounded_arrow(...)`` call site is audited
+    like a ``bounded_collect(...)`` one: outside the allowlist, each is
+    flagged with its enclosing qualname."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    (pkg / "mod.py").write_text(
+        "def arrow_path(df):\n"
+        "    return df.toArrow()\n"
+        "\n"
+        "def bounded_path(df):\n"
+        "    return bounded_arrow(df, 10, 'site')\n"
+    )
+    errs = [e for e in plan_lint.scan_collect_sites(str(pkg)) if "stale" not in e]
+    assert len(errs) == 2, errs
+    assert "mod.py:2" in errs[0] and "arrow_path" in errs[0]
+    assert ".toArrow()" in errs[0]
+    assert "mod.py:5" in errs[1] and "bounded_path" in errs[1]
+    assert "bounded_arrow(...)" in errs[1]
+
+
 def test_static_lint_flags_create_dataframe(tmp_path):
     """A list-backed ``createDataFrame`` anywhere but inside
     ``functions/guards.local_frame`` is an error, with the enclosing
