@@ -193,35 +193,15 @@ def _escape_partition_value(v: object) -> str:
     )
 
 
-def _canon_partition_values(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Canonicalise partition VALUES to their on-disk identity: Spark
-    stores an empty-string partition value in
-    ``__HIVE_DEFAULT_PARTITION__`` and reads it back as NULL, so '' and
-    NULL are ONE partition key. A caller-supplied batch can carry '';
-    the table never does (read-back). Leaving '' un-canonicalised made
-    the rewrite probe ('' <=> NULL is false) and the removal rendering
-    (both map to the default dir) DISAGREE — a merge shipping a
-    ''-valued partition row removed the NULL partition's files without
-    rewriting their rows: silent data loss."""
-    out = df
-    for c, t in df.select(*cols).dtypes:
-        if t == "string":
-            out = out.withColumn(
-                c, F.when(F.col(c) == "", F.lit(None)).otherwise(F.col(c))
-            )
-    return out
-
-
-def _null_safe_semi(base: DataFrame, parts: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """left_semi join on partition tuples that also matches NULL values
-    (a plain equi-join drops NULL keys, so rows in the
-    __HIVE_DEFAULT_PARTITION__ partition would silently escape the
-    rewrite set and be lost when their files are removed)."""
+def _null_safe_semi(base: DataFrame, keys: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """left_semi join on key tuples that also matches NULL values (a
+    plain equi-join drops NULL keys, so a NULL-key row would escape the
+    match)."""
     cond = None
     for c in cols:
-        clause = base[c].eqNullSafe(parts[c])
+        clause = base[c].eqNullSafe(keys[c])
         cond = clause if cond is None else cond & clause
-    return base.join(F.broadcast(parts), cond, "left_semi")
+    return base.join(F.broadcast(keys), cond, "left_semi")
 
 
 @dataclass
@@ -852,12 +832,14 @@ class LakehouseTable:
 
     def _removed_in_partitions(self, parts: DataFrame, head: int) -> list[str]:
         """Live files under the partition dirs named by ``parts`` —
-        the rewrite "removed" list of :meth:`_rewrite` (three verbatim
-        copies before r11: a fix to the dir-name rendering must hit
-        every writer at once). ``head`` pins the file listing to the
-        snapshot the caller read (r12: a fresh listing here could
-        include files a racing writer just committed — removing files
-        the rewrite never read)."""
+        the rewrite "removed" list of :meth:`_rewrite`, and also the
+        files its touched slice is READ from, so ``parts`` is
+        evaluated exactly once per write (one bounded collect). A
+        partition value renders to its on-disk dir name, so '' and
+        NULL both name ``__HIVE_DEFAULT_PARTITION__``. ``head`` pins
+        the file listing to the snapshot the caller read (a fresh
+        listing here could include files a racing writer just
+        committed — removing files the rewrite never read)."""
         touched_dirs = [
             "/".join(
                 f"{c}={_escape_partition_value(r[c])}" for c in self.partition_by
@@ -870,6 +852,16 @@ class LakehouseTable:
             f for f in sorted(self._snapshot(head).live)
             if any(f.startswith(d + "/") for d in touched_dirs)
         ]
+
+    def _staged_rows(self, files: list[str]) -> int:
+        """Rows in just-staged files, summed from their parquet footers
+        — driver-side metadata like :meth:`_collect_stats`, no job."""
+        import pyarrow.parquet as pq
+
+        return sum(
+            pq.read_metadata(os.path.join(self.data_root, f)).num_rows
+            for f in files
+        )
 
     @staticmethod
     def _norm_stat_key(s):
@@ -1089,19 +1081,26 @@ class LakehouseTable:
 
     def append_if_new(self, df: DataFrame, hash_col: str) -> int | None:
         """Content-hash idempotent append (reference D2: skip the write
-        when the payload hash already exists). Existence is a limit-1
-        probe against only the hash column — column-pruned scan.
+        when the payload hash already exists). Returns the committed
+        version, or None when no row of ``df`` was new.
 
-        The novelty check is a DOUBLE probe rather than the natural
-        ``incoming ANTI existing``: Spark only broadcasts the RIGHT
-        side of a semi/anti join, so the natural form sort-merge-
-        shuffles the whole table's hash column on every append.
-        Probing ``existing ⋉ incoming`` first (batch hashes broadcast,
-        table hashes scanned map-side, never shuffled) and anti-joining
-        the batch against that small matched set is equivalent:
-        incoming − existing = incoming − (existing ∩ incoming). Same
-        rewrite, with the same measurement, as the incremental span
-        probe (SCALING round 9)."""
+        The batch is filtered to its novel rows and STAGED directly:
+        there is no separate novelty probe, so the input plan runs
+        once, inside the staged write. Whether anything was new is read
+        from the staged files' parquet footers afterwards (no job); a
+        replay stages zero rows — one empty file, or none at all for a
+        partitioned table — which is unstaged, and nothing commits.
+
+        The novelty filter is a DOUBLE join rather than the natural
+        ``batch ANTI existing``: Spark only broadcasts the RIGHT side
+        of a semi/anti join, so the natural form sort-merge-shuffles
+        the whole table's hash column on every append. Matching
+        ``existing ⋉ batch hashes`` first (table hashes scanned
+        map-side, column-pruned, never shuffled) and anti-joining the
+        batch against that small, broadcast matched set is equivalent:
+        batch − existing = batch − (existing ∩ batch). Same rewrite,
+        with the same measurement, as the incremental span probe
+        (SCALING round 9)."""
         for attempt in range(APPEND_REBASE_RETRIES + 1):
             head = self._head()  # RMW pin (r12): the novelty decision
             filtered = df       # depends on the snapshot's hashes
@@ -1123,19 +1122,11 @@ class LakehouseTable:
                         "left_semi",
                     )
                     .distinct()
-                    .withColumnRenamed("__h_ex", "__h_m")
                 )
-                novel = incoming.join(
-                    F.broadcast(matched),
-                    F.col("__h_in").eqNullSafe(F.col("__h_m")),
-                    "left_anti",
-                )
-                if novel.limit(1).isEmpty():
-                    return None
                 filtered = df.join(
-                    F.broadcast(novel),
-                    F.col(hash_col).eqNullSafe(F.col("__h_in")),
-                    "left_semi",
+                    F.broadcast(matched),
+                    F.col(hash_col).eqNullSafe(F.col("__h_ex")),
+                    "left_anti",
                 )
             # commit pinned to the PROBED snapshot — a blind append here
             # (the pre-r12 behaviour) let two concurrent replays of the
@@ -1144,6 +1135,9 @@ class LakehouseTable:
             # unstage, re-probe against the new head, retry.
             aligned = self._align_schema(filtered, False)
             files = self._stage(aligned)
+            if head >= 0 and not self._staged_rows(files):
+                self._unstage(files)
+                return None
             try:
                 return self._commit(
                     "append", files, [], rows=None,
@@ -1175,32 +1169,41 @@ class LakehouseTable:
 
     def _rewrite(
         self, operation: str, head: int, base: DataFrame,
-        parts: DataFrame | None,
+        removed: list[str] | None,
         rewrite: Callable[[DataFrame], DataFrame],
         feed: Callable[[DataFrame, DataFrame], DataFrame],
     ) -> int:
-        """The one copy-on-write tail of merge/delete/update. The
-        touched slice is ``base``'s rows in the partitions named by
-        ``parts`` (null-safe, so the NULL partition is rewritten too),
-        or the whole ``base`` when ``parts`` is None (unpartitioned).
-        It is restaged as ``rewrite(touched)`` — with
-        ``feed(touched, rewritten)`` logged as change data when the
-        feed is on — and committed at ``head`` replacing exactly the
-        files the slice was read from: the live files under those
-        partition dirs, or every live file."""
-        touched = (
-            base if parts is None
-            else _null_safe_semi(base, parts, self.partition_by)
-        )
+        """The one copy-on-write tail of merge/delete/update.
+        ``removed`` is the list of live files at ``head`` that the
+        commit replaces — those under the touched partition dirs, from
+        the caller's one :meth:`_removed_in_partitions` collect — or
+        None for every live file (unpartitioned; the slice is then the
+        whole ``base``). The touched slice is READ from exactly those
+        files (``_read`` applies the version's schema, column mapping
+        and deletion vectors), so the rows rewritten are by
+        construction the rows of the files removed, and the staged
+        write scans only them: the partition probe is not re-run and
+        no other live file is joined. It is restaged as
+        ``rewrite(touched)`` — with ``feed(touched, rewritten)`` logged
+        as change data when the feed is on, the rewrite persisted for
+        the two writes — and committed at ``head``."""
+        if removed is None:
+            touched, removed = base, sorted(self._snapshot(head).live)
+        elif removed:
+            touched = self._read(head, files=removed)
+        else:
+            touched = base.limit(0)
         rewritten = rewrite(touched)
         cdf = None
-        if self.change_feed_enabled():
-            cdf = self._cdf_write(feed(touched, rewritten), base.columns)
-        new_files = self._stage(rewritten)
-        removed = (
-            sorted(self._snapshot(head).live) if parts is None
-            else self._removed_in_partitions(parts, head)
-        )
+        if not self.change_feed_enabled():
+            new_files = self._stage(rewritten)
+        else:
+            rewritten = rewritten.persist()
+            try:
+                cdf = self._cdf_write(feed(touched, rewritten), base.columns)
+                new_files = self._stage(rewritten)
+            finally:
+                rewritten.unpersist()
         return self._commit(operation, new_files, removed, rows=None,
                             schema_json=self._staged_schema, cdf=cdf,
                             expect_head=head)
@@ -1231,15 +1234,17 @@ class LakehouseTable:
         old parquet-branch behaviour) violates key uniqueness.
         Pre-dedupe deterministically upstream — streaming callers use
         ``dedupe_updates`` (latest wins by explicit order columns).
-        NOTE eager action: one batch-sized aggregation prices the check
-        (same family as delete()'s predicate count); with the change
-        feed on, the same aggregation also checks the touched target
-        slice the feed diffs. The update batch
-        is PERSISTED for the duration of the merge: its lineage can be
-        arbitrarily expensive (scd_apply_type2 feeds a multi-window
-        plan) and merge evaluates it several times — validation, the
-        partition probes, and the staged write (the multiple uses
-        predate the check; the persist pays all of them once).
+
+        EAGER actions before anything is staged: one batch-sized
+        aggregation prices the key check (with the change feed on, the
+        same aggregation also checks the touched target slice the feed
+        diffs), and on a partitioned table one bounded collect names
+        the touched partitions — the files under them are both what
+        the commit removes and all the staged write reads of the
+        target. The update batch is PERSISTED for the duration of the
+        merge: its lineage can be arbitrarily expensive
+        (scd_apply_type2 feeds a multi-window plan), and the key check,
+        the partition collect and the staged write each read it.
         """
         from pyspark import StorageLevel
 
@@ -1261,7 +1266,7 @@ class LakehouseTable:
         # after ``head`` fails the commit, so one of the two checks runs
         if not self.change_feed_enabled():
             require_unique_keys({"source": updates}, keys, where)
-        parts = None
+        removed = None
         if self.partition_by:
             missing = set(self.partition_by) - set(updates.columns)
             if missing:
@@ -1271,12 +1276,8 @@ class LakehouseTable:
                     f"{updates.columns}); merged rows cannot be routed to "
                     f"partitions without them"
                 )
-            # (a) partitions the update rows land in — values
-            # canonicalised to their ON-DISK identity ('' == NULL) so
-            # the rewrite probe and the removal rendering agree
-            parts_new = _canon_partition_values(
-                updates.select(*self.partition_by), self.partition_by
-            ).distinct()
+            # (a) partitions the update rows land in
+            parts_new = updates.select(*self.partition_by).distinct()
             # (b) partitions where a matched key currently lives — a key
             # whose partition value changed must be rewritten out of its
             # old partition, or the stale copy survives as a duplicate.
@@ -1290,7 +1291,9 @@ class LakehouseTable:
                 _null_safe_semi(base, upd_keys, keys)
                 .select(*self.partition_by).distinct()
             )
-            parts = parts_new.unionByName(parts_old).distinct()
+            removed = self._removed_in_partitions(
+                parts_new.unionByName(parts_old).distinct(), head
+            )
         from football_lakehouse_spark.lakehouse.cdc import _diff
 
         def feed(touched: DataFrame, merged: DataFrame) -> DataFrame:
@@ -1302,10 +1305,22 @@ class LakehouseTable:
             return _diff(touched, merged, keys, 1)
 
         return self._rewrite(
-            "merge", head, base, parts,
+            "merge", head, base, removed,
             lambda touched: merge_upsert(touched, updates, keys),
             feed,
         )
+
+    def _matched_files(self, matches: DataFrame, head: int) -> list[str] | None:
+        """The ``removed`` list a delete/update of ``matches`` hands
+        :meth:`_rewrite`: on a partitioned table the live files under
+        the partitions holding a match, from the same one collect that
+        decides the no-op; None (the whole table) on an unpartitioned
+        one, after a limit-1 probe. ``[]`` means nothing matched."""
+        if self.partition_by:
+            return self._removed_in_partitions(
+                matches.select(*self.partition_by).distinct(), head
+            )
+        return [] if matches.limit(1).isEmpty() else None
 
     def delete(self, predicate: Column, deletion_vectors: bool = False) -> int:
         """Delta-style DELETE: copy-on-write removal of rows matching
@@ -1354,11 +1369,11 @@ class LakehouseTable:
                                 cdf=cdf, expect_head=head)
         base = self.read(version=head)
         matches = base.where(predicate)
-        if matches.limit(1).isEmpty():
+        removed = self._matched_files(matches, head)
+        if removed == []:
             return -1
-        parts = matches.select(*self.partition_by).distinct()
         return self._rewrite(
-            "delete", head, base, parts if self.partition_by else None,
+            "delete", head, base, removed,
             lambda touched: touched.where(~predicate.eqNullSafe(F.lit(True))),
             lambda _t, _r: matches.select(
                 F.lit("delete").alias("change_type"), "*"
@@ -1387,7 +1402,8 @@ class LakehouseTable:
         head = self._head()  # snapshot pin (see _commit expect_head)
         base = self.read(version=head)
         matches = base.where(predicate)
-        if matches.limit(1).isEmpty():
+        removed = self._matched_files(matches, head)
+        if removed == []:
             return -1
         hit = predicate.eqNullSafe(F.lit(True))
         for col in assignments:
@@ -1426,9 +1442,8 @@ class LakehouseTable:
                 post.select(F.lit("update_postimage").alias("change_type"), "*")
             )
 
-        parts = matches.select(*self.partition_by).distinct()
         return self._rewrite(
-            "update", head, base, parts if self.partition_by else None,
+            "update", head, base, removed,
             lambda touched: touched.select(*[set_col(c) for c in base.columns]),
             feed,
         )

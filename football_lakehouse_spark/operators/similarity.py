@@ -606,10 +606,9 @@ def kmeans_cells(
     Both paths give identical centroids (forced-bound tests). Centroid
     sums stay exact below 2^53 (qx ≤ 1e6 per component → safe past 1e9
     members per cell). Either way the returned assignment is the lazy
-    :func:`_assign_rows` pass: over the corpus as the caller partitioned
-    it on the driver path (no Spark round reads it twice, so nothing is
-    cached or reshuffled), over the persisted repartitioned corpus past
-    the bound.
+    :func:`_assign_rows` pass over the corpus as the caller partitioned
+    it: past the bound the repartitioned cache is unpersisted before
+    returning, so a training leaves no cache behind on either path.
 
     EAGER ACTIONS at plan-build time. On the driver path a NULL seed,
     a NULL or ragged training vector and a training set smaller than
@@ -648,63 +647,71 @@ def kmeans_cells(
         # tables pack many rows per file split and every round is
         # CPU-bound → spread the corpus across executors first (same
         # rationale as brute_force_topk). The training set is the
-        # working set of EVERY round (iters+1 assignment passes + iters
-        # centroid updates) — persist it once so each round reads the
-        # cached rows instead of re-scanning and re-decoding the source
-        # parquet
+        # working set of EVERY round (the seed collect, then one
+        # assignment pass + centroid update per round) — persist it
+        # once so each round reads the cached rows instead of
+        # re-scanning and re-decoding the source parquet
         par = spark.sparkContext.defaultParallelism
-        corpus = corpus.repartition(par).persist()
-        train = training(corpus)
-        if train is not corpus:
+        spread = corpus.repartition(par).persist()
+        train = training(spread)
+        if train is not spread:
             train = train.persist()
-        # init seeds: the n_cells lowest-id QUANTISED training vectors,
-        # cell = 0..n_cells-1 in id order (control-plane: n_cells×dim)
-        seed_rows = bounded_collect(
-            quantised(train).orderBy(id_out).limit(n_cells),
-            n_cells,
-            "kmeans_cells init seeds",
-        )
-        if len(seed_rows) < n_cells:
-            raise ValueError(
-                f"kmeans_cells: training set has {len(seed_rows)} vectors "
-                f"< n_cells={n_cells} — lower train_sample_mod"
+        try:
+            # init seeds: the n_cells lowest-id QUANTISED training
+            # vectors, cell = 0..n_cells-1 in id order (control-plane:
+            # n_cells×dim)
+            seed_rows = bounded_collect(
+                quantised(train).orderBy(id_out).limit(n_cells),
+                n_cells,
+                "kmeans_cells init seeds",
             )
-        for r in seed_rows:
-            if r["qvec"] is None:
+            if len(seed_rows) < n_cells:
                 raise ValueError(
-                    f"kmeans_cells: seed vector {r[id_out]!r} has a NULL "
-                    "embedding — init vectors must be non-null arrays"
+                    f"kmeans_cells: training set has {len(seed_rows)} vectors "
+                    f"< n_cells={n_cells} — lower train_sample_mod"
                 )
-        crows = [
-            (c, p, int(q))
-            for c, r in enumerate(seed_rows)
-            for p, q in enumerate(r["qvec"])
-        ]
-        # each round: ONE job — the assignment carries qvec through,
-        # the update explodes the assigned rows and partial-aggregates
-        # map-side (≈ n_cells×dim partials per task cross the round's
-        # only exchange), and the result is collected straight back to
-        # the driver for the next round's kernel
-        for _ in range(iters):
-            assigned = assign(train, crows, keep_qvec=True)
-            upd = (
-                assigned.select("cell", F.posexplode("qvec").alias("pos", "cq"))
-                .groupBy("cell", "pos")
-                .agg(
-                    F.floor(F.sum("cq") / F.count(F.lit(1)))
-                    .cast("bigint").alias("cq")
+            for r in seed_rows:
+                if r["qvec"] is None:
+                    raise ValueError(
+                        f"kmeans_cells: seed vector {r[id_out]!r} has a NULL "
+                        "embedding — init vectors must be non-null arrays"
+                    )
+            crows = [
+                (c, p, int(q))
+                for c, r in enumerate(seed_rows)
+                for p, q in enumerate(r["qvec"])
+            ]
+            # each round: ONE job — the assignment carries qvec
+            # through, the update explodes the assigned rows and
+            # partial-aggregates map-side (≈ n_cells×dim partials per
+            # task cross the round's only exchange), and the result is
+            # collected straight back to the driver for the next
+            # round's kernel
+            for _ in range(iters):
+                assigned = assign(train, crows, keep_qvec=True)
+                upd = (
+                    assigned.select(
+                        "cell", F.posexplode("qvec").alias("pos", "cq")
+                    )
+                    .groupBy("cell", "pos")
+                    .agg(
+                        F.floor(F.sum("cq") / F.count(F.lit(1)))
+                        .cast("bigint").alias("cq")
+                    )
                 )
-            )
-            crows = sorted(
-                (r["cell"], r["pos"], int(r["cq"]))
-                for r in bounded_collect(
-                    upd, CONTROL_PLANE_BOUND, "kmeans_cells centroid update"
+                crows = sorted(
+                    (r["cell"], r["pos"], int(r["cq"]))
+                    for r in bounded_collect(
+                        upd, CONTROL_PLANE_BOUND, "kmeans_cells centroid update"
+                    )
                 )
-            )
-        # the sampled training cache is fully consumed; the corpus
-        # cache stays, since the returned lazy assignment reads it
-        if train is not corpus:
-            train.unpersist()
+        finally:
+            # both caches are consumed by the rounds (or the rounds
+            # failed): the returned lazy assignment reads the caller's
+            # corpus, not the spread copy
+            if train is not spread:
+                train.unpersist()
+            spread.unpersist()
     # the returned centroid TABLE is built once, from the final rows
     # (cell/pos-sorted for a deterministic frame). coalesce(1): the
     # local frame otherwise parallelizes into defaultParallelism slices

@@ -97,7 +97,9 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
     ("lakehouse/tables.py", "LakehouseTable._enforce"):
         "limit(1) constraint-violation witness",
     ("lakehouse/tables.py", "LakehouseTable._removed_in_partitions"):
-        "distinct partition values of the TOUCHED batch (per-write bound)",
+        "distinct partition values of the TOUCHED batch (per-write "
+        "bound), collected once per write: they name both the files the "
+        "commit removes and the files the rewrite reads",
     ("lakehouse/tables.py", "require_unique_keys"):
         "limit-bounded duplicate-key sample for the error message; every "
         "labelled frame (MERGE source, change-feed versions) priced in "

@@ -1554,3 +1554,41 @@ def test_maintain_count_sum_equals_recompute(spark):
     assert sorted(map(tuple, by_p.collect())) == [
         (0, 2, 9_250_000), (1, 1, 1_500_000),
     ]
+
+
+def test_lakehouse_writes_evaluate_their_input_once(spark, events, tmp_path):
+    """Job-group pins on the Bronze → Silver write path: a 300-row
+    partitioned merge reads the touched partitions' files once (one
+    partition collect, no second probe inside the staged write) and a
+    novel ``append_if_new`` stages without a separate novelty probe."""
+    from football_lakehouse_spark.pipelines.medallion import ingest_bronze
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        try:
+            sc.setJobGroup(group, group)
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bronze = LakehouseTable(spark, str(tmp_path), "bronze", "ev",
+                            partition_by=["snapshot_date"])
+    assert ingest_bronze(spark, events.where("event_id % 2 = 0"), bronze) == 0
+    v, n = jobs("pin-ingest", lambda: ingest_bronze(spark, events, bronze))
+    assert v == 1 and n <= 5, n
+
+    typed = events.select(
+        "event_id", "user_id", "value", F.to_date("ts").alias("snapshot_date")
+    )
+    silver = LakehouseTable(spark, str(tmp_path), "silver", "ev",
+                            partition_by=["snapshot_date"])
+    silver.append(typed.where("event_id < 700"))
+    batch = typed.where("event_id >= 600 AND event_id < 900").withColumn(
+        "value", F.col("value") + 1.0
+    )
+    assert batch.count() == 300
+    v, n = jobs("pin-merge", lambda: silver.merge(batch, ["event_id"]))
+    assert v == 1 and n <= 12, n
+    assert silver.read().count() == 900

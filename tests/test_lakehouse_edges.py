@@ -3,6 +3,8 @@ retention horizon, empty tables, merge into never-written tables."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,7 +63,8 @@ def test_merge_key_moving_between_partitions(spark, tmp_path):
     """Delta MERGE semantics: an update that changes a key's partition
     value must delete the old copy from the partition it lived in —
     the old partition is rewritten too, not just the ones named by the
-    update batch (ADVICE round 1)."""
+    update batch, and a partition the merge does not touch keeps its
+    file (ADVICE round 1)."""
     t = LakehouseTable(spark, str(tmp_path), "s", "moving",
                        partition_by=["snapshot_date"])
     base = spark.createDataFrame(
@@ -69,6 +72,9 @@ def test_merge_key_moving_between_partitions(spark, tmp_path):
         "k int, snapshot_date string, v string",
     )
     t.merge(base, ["k"])
+    untouched = [
+        f for f in t.current_files() if f.startswith("snapshot_date=2024-01-02/")
+    ]
     # key 1 moves from 2024-01-01 to 2024-01-03
     upd = spark.createDataFrame(
         [(1, "2024-01-03", "a2")], "k int, snapshot_date string, v string"
@@ -80,6 +86,7 @@ def test_merge_key_moving_between_partitions(spark, tmp_path):
     assert rows[1] == ("2024-01-03", "a2")
     assert rows[2] == ("2024-01-01", "b")  # untouched sibling survives
     assert rows[3] == ("2024-01-02", "c")  # untouched partition survives
+    assert untouched and set(untouched) <= set(t.current_files())
 
 
 def test_merge_missing_partition_cols_raises_clearly(spark, tmp_path):
@@ -189,3 +196,83 @@ def test_local_frame_collect_starts_no_job(spark):
     assert list(tracker.getJobIdsForGroup("local-frame-probe")) == []
     # the probe is live: the Python-RDD frame's read does start a job
     assert list(tracker.getJobIdsForGroup("python-rdd-probe")) != []
+
+
+def _data_files(t):
+    return sorted(
+        os.path.relpath(os.path.join(dp, fn), t.data_root)
+        for dp, _d, fns in os.walk(t.data_root) for fn in fns
+    )
+
+
+def test_partitioned_merge_empty_string_and_null_partition(spark, tmp_path):
+    """'' and NULL are one on-disk partition: a merge that updates a
+    NULL-partition row through a ''-valued batch row, and one that
+    names NULL directly, lose and duplicate nothing."""
+    schema = "k bigint, src string, v double"
+    t = LakehouseTable(spark, str(tmp_path), "s", "nul", partition_by=["src"])
+    t.append(spark.createDataFrame(
+        [(1, None, 1.0), (2, None, 2.0), (3, "x", 3.0)], schema,
+    ))
+    t.merge(spark.createDataFrame([(1, "", 10.0), (4, "", 4.0)], schema), ["k"])
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, None, 10.0), (2, None, 2.0), (3, "x", 3.0), (4, None, 4.0),
+    ]
+    # key 3 moves from 'x' into the NULL partition
+    t.merge(spark.createDataFrame([(3, None, 30.0)], schema), ["k"])
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, None, 10.0), (2, None, 2.0), (3, None, 30.0), (4, None, 4.0),
+    ]
+
+
+def test_partitioned_merge_keeps_soft_deleted_rows_deleted(spark, tmp_path):
+    """The touched slice is read through the version's deletion vectors:
+    a row soft-deleted in a partition the merge rewrites stays deleted,
+    and so does one in a partition it leaves alone."""
+    schema = "k int, d string, v string"
+    t = LakehouseTable(spark, str(tmp_path), "s", "dv", partition_by=["d"])
+    t.append(spark.createDataFrame(
+        [(1, "a", "x"), (2, "a", "x"), (3, "b", "x"), (4, "b", "x")], schema,
+    ))
+    assert t.delete(F.col("k").isin(2, 4), deletion_vectors=True) == 1
+    t.merge(spark.createDataFrame([(1, "a", "y"), (5, "a", "y")], schema), ["k"])
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, "a", "y"), (3, "b", "x"), (5, "a", "y"),
+    ]
+
+
+def test_partitioned_cdf_merge_rejects_duplicate_target_key(spark, tmp_path):
+    """With the change feed on, a duplicate key in the touched target
+    slice still raises MergeSourceDuplicateError before anything is
+    staged: no version, no data file, no change sidecar."""
+    from football_lakehouse_spark.lakehouse.tables import MergeSourceDuplicateError
+
+    schema = "k bigint, d string, v double"
+    t = LakehouseTable(spark, str(tmp_path), "s", "cdfdup", partition_by=["d"])
+    t.enable_change_feed()
+    t.append(spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], schema))
+    t.append(spark.createDataFrame([(1, "a", 1.5)], schema))
+    head, files = t.current_version(), _data_files(t)
+    with pytest.raises(MergeSourceDuplicateError, match=r"'target', \(1,\)"):
+        t.merge(spark.createDataFrame([(1, "a", 9.0)], schema), ["k"])
+    assert t.current_version() == head
+    assert _data_files(t) == files
+    assert not os.path.exists(os.path.join(t.base, "_changes"))
+
+
+@pytest.mark.parametrize("partition_by", [(), ("d",)], ids=["flat", "partitioned"])
+def test_append_if_new_replay_commits_nothing(spark, tmp_path, partition_by):
+    """A replay stages zero rows — one empty file unpartitioned, none
+    partitioned — and is unstaged: None, no new file under data/ and no
+    new version."""
+    t = LakehouseTable(spark, str(tmp_path), "s", "replay",
+                       partition_by=partition_by)
+    batch = spark.createDataFrame(
+        [("h1", "a", 1), ("h2", "b", 2)], "h string, d string, x int"
+    )
+    assert t.append_if_new(batch, "h") == 0
+    files = _data_files(t)
+    assert t.append_if_new(batch, "h") is None
+    assert t.current_version() == 0
+    assert _data_files(t) == files
+    assert not [p for p in os.listdir(t.base) if p.startswith("_staging")]

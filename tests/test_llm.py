@@ -1129,6 +1129,22 @@ def test_kmeans_both_paths_raise_named_errors(
         similarity.kmeans_cells(vecs, n_cells=n_cells, iters=1)
 
 
+def test_kmeans_spark_rounds_leave_no_cache(spark, emb, monkeypatch):
+    """Past the driver bound the Spark rounds persist the repartitioned
+    corpus (and the sampled training set); kmeans_cells unpersists both
+    before it returns, so training twice on one corpus leaves the
+    session's persistent RDDs no more numerous than before."""
+    from football_lakehouse_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "_LLOYD_DRIVER_MAX_BYTES", 0)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persistent())
+    for kw in ({}, {"train_sample_mod": 3}):
+        assignment, _ = similarity.kmeans_cells(emb, n_cells=4, iters=1, **kw)
+        assert assignment.count() == emb.count()
+        assert len(persistent()) <= before
+
+
 def test_kmeans_and_bpe_driver_tiers_build_in_one_collect(spark, emb, docs):
     """The driver tiers replace the round loops: kmeans_cells builds in
     one job (the training-set collect) and bpe_rounds in at most two
