@@ -864,27 +864,6 @@ class LakehouseTable:
         )
 
     @staticmethod
-    def _norm_stat_key(s):
-        """Normalise a STORED stat key: aware ISO timestamp strings
-        (written before the tz normalisation, or by another writer)
-        convert to naive-UTC isoformat so they compare chronologically
-        with _stat_value's probe keys; everything else passes
-        through."""
-        if isinstance(s, str) and len(s) > 10 and s[:4].isdigit() and (
-            s.endswith("Z") or "+" in s[10:] or "-" in s[19:]
-        ):
-            import datetime as _dt
-
-            try:
-                d = _dt.datetime.fromisoformat(s.replace("Z", "+00:00"))
-            except ValueError:
-                return s
-            if d.tzinfo is not None:
-                d = d.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-            return d.isoformat()
-        return s
-
-    @staticmethod
     def _stat_value(v):
         """JSON-portable stat encoding: datetimes → ISO strings (which
         compare chronologically), numerics/strings pass through, other
@@ -964,11 +943,7 @@ class LakehouseTable:
                 rng = fstats.get(col)
                 if rng is None:
                     continue
-                # stored stats from commits written BEFORE the tz
-                # normalisation may carry aware isoformat strings
-                # ('...+00:00'); normalise them at load so old tables
-                # keep the never-a-filter contract against naive bounds
-                slo, shi = (self._norm_stat_key(x) for x in rng)
+                slo, shi = rng
                 c_lo = self._stat_value(lo) if lo is not None else None
                 c_hi = self._stat_value(hi) if hi is not None else None
                 if (c_hi is not None and slo > c_hi) or (
@@ -1891,23 +1866,3 @@ class LakehouseTable:
                             schema_json=self._staged_schema,
                             dv_remove=sorted(snap.dv),
                             expect_head=head)
-
-    def compact_to_size(self, target_file_bytes: int = 128 << 20,
-                        sort_by: Sequence[str] = ()) -> int:
-        """OPTIMIZE with a TARGET FILE SIZE (Delta's
-        ``optimize.targetFileSize`` UX) instead of a caller-guessed
-        partition count: the output file count is ceil(current live
-        bytes / target), floored at 1. The sizing scan is O(files)
-        driver-side metadata (the same stat calls the manifest already
-        makes); compressed-size ≈ output-size is the standard OPTIMIZE
-        assumption since compaction re-encodes the same rows with the
-        same codec."""
-        import math
-
-        total = sum(
-            os.path.getsize(f if os.path.isabs(f)
-                            else os.path.join(self.data_root, f))
-            for f in self.current_files()
-        )
-        n = max(1, math.ceil(total / target_file_bytes))
-        return self.compact(target_partitions=n, sort_by=sort_by)

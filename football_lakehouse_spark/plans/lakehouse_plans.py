@@ -1132,9 +1132,9 @@ def table_diff_merkle(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the direct table read, every row carries lineage, zero rescues "
     "on clean data). The reader hands Spark one InputPartition per "
     "landing file, so the parse distributes exactly like the native "
-    "JSON source — no driver-side data path. The streaming half of "
-    "the same source (file-granular offsets, checkpoint resume) is "
-    "exercised in tests/test_snapshot_source.py.",
+    "JSON source — no driver-side data path. The format is batch-only: "
+    "the landing zone's incremental reader is the native file-source "
+    "stream (streaming/ingest.py read_landing_stream).",
     tags=("lakehouse", "io"),
 )
 def python_datasource_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1437,9 +1437,9 @@ def incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(bytes) AS BIGINT) AS bin_bytes
     FROM placed GROUP BY 1, 2
     """,
-    doc="COMPACTION PLANNER as a declarative query (the planning step "
-    "of lakehouse/tables.py compact_to_size, emitted as data instead "
-    "of executed — the same 'planning as data' stance as q227's "
+    doc="COMPACTION PLANNER as a declarative query (a size-targeted "
+    "OPTIMIZE's planning step, emitted as data instead of executed — "
+    "the same 'planning as data' stance as q227's "
     "pre-flight skew audit): small objects are binned toward a target "
     "output size by CUMULATIVE FILL — within each table partition "
     "(source), order size-descending (first-fit-decreasing's sort) "

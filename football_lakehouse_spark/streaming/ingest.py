@@ -68,31 +68,20 @@ def land_json_files(events: DataFrame, landing_dir: str, files_per_day: int = 1)
         files_per_day,
     )
 
-    # STAGE-THEN-MOVE (ADVICE r12): write the batch into a private
-    # sibling staging dir, then move each file into the landing dir
-    # under its final arrival-stamped name. Each file has exactly ONE
-    # visibility transition — writing in place and renaming afterwards
-    # let a reader listing between write and rename consume the
-    # part-* name, after which the rename resurfaced the same data as
-    # a never-consumed t* name (duplicate ingestion into append-only
-    # bronze). The staging dir is keyed per call, so concurrent
-    # landers can no longer rename each other's in-flight files.
-    # Residual (documented in RUNBOOK §7): concurrent landers into the
-    # SAME partition dir can interleave a lower stamp after a reader
-    # consumed a higher one — the per-dir watermark lags the frontier
-    # by offsetTailKeep names precisely to absorb this; faster
-    # concurrent publish rates need one writer per dir (or a larger
-    # offsetTailKeep).
+    # STAGE-THEN-MOVE: write the batch into a private sibling staging
+    # dir, then move each file into the landing dir under its final
+    # name. Each file has exactly ONE visibility transition — writing in
+    # place and renaming afterwards let a stream listing between write
+    # and rename record the part-* name, after which the rename
+    # resurfaced the same data under a new, never-seen name (duplicate
+    # ingestion into append-only bronze). The staging dir is keyed per
+    # call, so concurrent landers never rename each other's in-flight
+    # files.
     #
-    # ARRIVAL-STAMPED monotone names (RUNBOOK §7 contract, enforced by
-    # the writer itself since r12): Spark's part-<uuid> names are
-    # random, so a LATE event landing in an old snapshot_date dir
-    # could sort below that dir's consumed-offset watermark and be
-    # silently skipped by the incremental readers. Stamping every file
-    # t<arrival-micros>-<seq>-<uuid> makes names within a dir monotone
-    # in arrival order — a late landing always sorts above the
-    # watermark. 't' > 'p' also keeps any crash-leftover part- file
-    # below all stamped names instead of interleaving.
+    # ARRIVAL-STAMPED names t<arrival-micros>-<seq>-<uuid>: a landed
+    # name is never reused, so the file-source stream's seen-files log
+    # (keyed on path) reads each landed file exactly once, however late
+    # its event date. Within a dir the names sort in arrival order.
     import shutil
 
     staging = f"{landing_dir.rstrip('/')}.staging-{uuid.uuid4().hex[:8]}"

@@ -1115,30 +1115,6 @@ def test_legacy_checkpoint_is_skipped(spark, tmp_path):
     )._snapshot(11)
 
 
-def test_compact_to_size_targets_file_bytes(spark, events, tmp_path):
-    """OPTIMIZE by target file size: output file count tracks
-    ceil(live bytes / target), rows unchanged, DVs purged like any
-    compaction."""
-    # sixteen small appends MANUFACTURE a 16-small-file version for
-    # compact_to_size to re-bin (the optimized write stages each small
-    # append as one file)
-    t = LakehouseTable(spark, str(tmp_path), "silver", "sized")
-    for i in range(16):
-        t.append(events.where(F.pmod(F.hash("event_id"), F.lit(16)) == i))
-    total = sum(
-        os.path.getsize(os.path.join(t.data_root, f)) for f in t.current_files()
-    )
-    n_before = t.read().count()
-    # target = ~half the data → expect 2 files (ceil)
-    t.compact_to_size(target_file_bytes=(total + 1) // 2)
-    assert len(t.current_files()) == 2
-    assert t.read().count() == n_before
-    # huge target → single file
-    t.compact_to_size(target_file_bytes=10 << 30)
-    assert len(t.current_files()) == 1
-    assert t.read().count() == n_before
-
-
 def test_scd2_apply_rejects_conflicting_same_key_ts_rows(spark, tmp_path):
     """Two DIFFERENT attr sets for one (key, ts) in a single batch have
     no deterministic winner — scd2_apply fails closed with the shared
@@ -1341,12 +1317,12 @@ def test_stat_value_normalizes_tz_aware(spark):
 
 
 def test_partition_type_fail_closed_and_stat_key_norm(spark, tmp_path):
-    """r11 sweep #3 follow-up: (a) float/timestamp partition columns are
+    """r11 sweep #3 follow-up: float/timestamp partition columns are
     rejected at stage time — their Python rendering cannot match
     Spark's on-disk dir names (Java '1.0E-7' vs Python '1e-07'), which
-    made rewrites resurrect deleted rows (confirmed repro); (b) stored
-    stats from pre-fix commits may carry tz-AWARE isoformat strings —
-    they normalise at load so skipping stays never-a-filter."""
+    made rewrites resurrect deleted rows (confirmed repro). Stored stat
+    keys need no load-time normalisation: ``_stat_value`` (tested
+    above) is the only writer and stores naive-UTC ISO strings."""
     t = LakehouseTable(spark, str(tmp_path), "s", "floaty", partition_by=["r"])
     df = spark.createDataFrame([(1, 1e-7, 10.0)], "id bigint, r double, v double")
     with pytest.raises(ValueError, match="partition column 'r' has type double"):
@@ -1357,14 +1333,6 @@ def test_partition_type_fail_closed_and_stat_key_norm(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="has type timestamp"):
         t2.append(df2)
-
-    norm = LakehouseTable._norm_stat_key
-    assert norm("2024-03-01T05:00:00+00:00") == "2024-03-01T05:00:00"
-    assert norm("2024-03-01T05:00:00+05:00") == "2024-03-01T00:00:00"
-    assert norm("2024-03-01T05:00:00Z") == "2024-03-01T05:00:00"
-    assert norm("2024-03-01T05:00:00") == "2024-03-01T05:00:00"  # naive: unchanged
-    assert norm("plain-string") == "plain-string"
-    assert norm(42) == 42
 
 
 def test_continuous_rollup_touches_only_batch_partitions(spark, events, tmp_path):

@@ -49,6 +49,30 @@ def test_available_now_exactly_once(spark, events, tmp_path):
     assert spark.read.parquet(bronze).count() == 300
     # lineage column present
     assert "source_file" in spark.read.parquet(bronze).columns
+    # late arrival: a file landing in the earliest already-consumed
+    # partition dir, under a name that sorts below every landed file,
+    # is read exactly once
+    first_dir = min(d for d in os.listdir(landing) if d.startswith("snapshot_date="))
+    day = first_dir.split("=", 1)[1]
+    with open(os.path.join(landing, first_dir, "a_late.json"), "w") as fh:
+        fh.write(json.dumps({
+            "event_id": 10**12, "ts": f"{day}T00:00:00", "user_id": 1,
+            "event_type": "click", "value": 1.0, "props": None,
+        }) + "\n")
+    assert all(
+        "a_late.json" < f
+        for _r, _d, fs in os.walk(landing)
+        for f in fs
+        if f.endswith(".json") and f != "a_late.json"
+    )
+    ingest_available_now(spark, landing, bronze, ckpt)
+    got = spark.read.parquet(bronze)
+    assert got.count() == 301
+    late = got.where(F.col("event_id") == 10**12).collect()
+    assert len(late) == 1 and late[0].source_file.endswith("a_late.json")
+    assert str(late[0].snapshot_date) == day
+    ingest_available_now(spark, landing, bronze, ckpt)
+    assert spark.read.parquet(bronze).count() == 301
 
 
 def test_foreach_batch_merge_late_duplicates(spark, events, tmp_path):
