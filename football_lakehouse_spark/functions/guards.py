@@ -17,7 +17,8 @@ sites exactly like raw ``.collect()`` sites, so the allowlist stays a
 faithful audit of who materialises what.
 
 Size-driven plan choices read the optimizer's estimate through
-:func:`plan_bytes` (driver-side metadata, no job).
+:func:`plan_bytes`, and parquet reads take their schema from
+:func:`parquet_schema`: both are driver-side metadata and start no job.
 
 The opposite direction — driver rows back into a DataFrame — goes
 through :func:`local_frame`, the package's only ``createDataFrame``
@@ -28,10 +29,12 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
 from datetime import datetime, timezone
+from functools import partial
 from typing import TYPE_CHECKING
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import StructType, TimestampType, _parse_datatype_json_string
 
 if TYPE_CHECKING:
     import pyarrow as pa
@@ -106,6 +109,45 @@ def plan_bytes(df: DataFrame) -> int | None:
     except Exception:
         return None
     return None if est >= unknown else est
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, from one footer
+    read on the driver with no job: a dir's first data file in sorted
+    order, skipping ``_``/``.`` names as Spark's listing does. Spark's
+    converter applies the session conf (``nanosAsLong``,
+    ``inferTimestampNTZ``, ``binaryAsString``) as inference does.
+    ``FileNotFoundError`` names a missing path or a dir with no data file."""
+    state = spark._jsparkSession.sessionState()
+    # classes by full name: a JVMView attribute chain costs one py4j
+    # round trip per package segment
+    jclass = partial(JavaClass, gateway_client=spark._jvm._gateway_client)
+    hadoop_path = jclass("org.apache.hadoop.fs.Path")
+    conf, file = state.newHadoopConf(), hadoop_path(path)
+    fs = file.getFileSystem(conf)
+    if not fs.exists(file):
+        raise FileNotFoundError(f"parquet_schema: no such path: {path}")
+    if fs.getFileStatus(file).isDirectory():
+        names = (s.getPath().getName() for s in fs.listStatus(file) if s.isFile())
+        data = sorted(n for n in names if not n.startswith(("_", ".")))
+        if not data:
+            raise FileNotFoundError(f"parquet_schema: no data file in {path}")
+        file = hadoop_path(file, data[0])
+    pq = "org.apache.parquet."
+    # read options from the session's hadoop conf: the one-argument
+    # open() builds a fresh Configuration, several ms per call
+    reader = jclass(pq + "hadoop.ParquetFileReader").open(
+        jclass(pq + "hadoop.util.HadoopInputFile").fromPath(file, conf),
+        jclass(pq + "HadoopReadOptions").builder(conf, file).build(),
+    )
+    try:
+        footer = jclass(pq + "hadoop.Footer")(file, reader.getFooter())
+    finally:
+        reader.close()
+    fmt = "org.apache.spark.sql.execution.datasources.parquet."
+    converter = jclass(fmt + "ParquetToSparkSchemaConverter")(state.conf())
+    schema = jclass(fmt + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+    return _parse_datatype_json_string(schema.asNullable().json())
 
 
 def local_frame(

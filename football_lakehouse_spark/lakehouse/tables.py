@@ -82,6 +82,7 @@ from football_lakehouse_spark.functions.guards import (
     PER_WRITE_PARTITION_BOUND,
     bounded_collect,
     local_frame,
+    parquet_schema,
     plan_bytes,
 )
 from football_lakehouse_spark.operators.merge import merge_upsert
@@ -1488,11 +1489,9 @@ class LakehouseTable:
                 )
             parts: list[DataFrame] = []
             if "cdf" in c:
-                parts.append(
-                    self.spark.read.parquet(
-                        os.path.join(self.base, "_changes", c["cdf"])
-                    )
-                )
+                sidecar = os.path.join(self.base, "_changes", c["cdf"])
+                schema = parquet_schema(self.spark, sidecar)
+                parts.append(self.spark.read.schema(schema).parquet(sidecar))
             if op in ("append", "overwrite") and c.get("add"):
                 # the version's deletion vectors still apply, though
                 # none can name a file this commit just added
@@ -1743,7 +1742,9 @@ class LakehouseTable:
             # merge-on-read: anti-join away soft-deleted (file, row)
             # pairs. The DV table is O(deleted rows); its partitioning
             # is left to AQE (broadcast when small, shuffle when not).
-            dv = self.spark.read.parquet(*dvs).select(
+            # every DV sidecar shares one (file, row_index) schema
+            dv_schema = parquet_schema(self.spark, dvs[0])
+            dv = self.spark.read.schema(dv_schema).parquet(*dvs).select(
                 F.col("file").alias("__file"), F.col("row_index").alias("__ri")
             )
             df = df.join(dv, ["__file", "__ri"], "left_anti")

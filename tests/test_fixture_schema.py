@@ -29,6 +29,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from football_lakehouse_spark.catalog import TABLES, load_table
+from football_lakehouse_spark.functions.guards import parquet_schema
 
 SF_DIRS = [
     d
@@ -203,20 +204,110 @@ def test_parquet_storage_schema(sf_dir, table):
     )
 
 
-@pytest.mark.parametrize("table", sorted(SPARK_SCHEMA))
-def test_spark_engine_schema(spark, table):
-    df = load_table(spark, SF_DIRS[0], table)
+#: every sf dir, ids bare for the first dir and ``<table>-<dir>`` after it
+ENGINE_CASES = [
+    pytest.param(sf_dir, table, id=table if i == 0 else f"{table}-{sf_dir}")
+    for i, sf_dir in enumerate(SF_DIRS)
+    for table in sorted(SPARK_SCHEMA)
+]
+
+
+@pytest.mark.parametrize("sf_dir,table", ENGINE_CASES)
+def test_spark_engine_schema(spark, sf_dir, table):
+    df = load_table(spark, sf_dir, table)
     assert df.dtypes == SPARK_SCHEMA[table], (
-        f"{table} engine-view schema drifted — catalog.load_table or "
-        f"session config changed what operators see; audit epoch helpers "
-        f"(functions/scalars.py) and re-pin"
+        f"{table} engine-view schema drifted in {sf_dir} — "
+        f"catalog.load_table or session config changed what operators "
+        f"see; audit epoch helpers (functions/scalars.py) and re-pin"
     )
 
 
+def test_parquet_schema_matches_spark_inference(spark, tmp_path):
+    """The footer read equals Spark's own inference: every fixture
+    table, a Spark-written multi-file dir (``_SUCCESS`` and ``.crc``
+    files beside its part files, a non-nullable column), and a
+    TIMESTAMP(NANOS) file under both ``nanosAsLong`` settings — where
+    ``false`` makes the type illegal, both sides raise the same error."""
+    import pyarrow as pa
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType
+
+    for sf_dir in SF_DIRS:
+        for table in TABLES:
+            p = f"{sf_dir}/{table}.parquet"
+            assert parquet_schema(spark, p) == spark.read.parquet(p).schema, p
+
+    multi = str(tmp_path / "multi")
+    spark.range(30).selectExpr("id", "cast(id AS string) AS s").repartition(
+        3
+    ).write.parquet(multi)
+    names = os.listdir(multi)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+    assert sum(n.startswith("part-") for n in names) == 3
+    assert parquet_schema(spark, multi) == spark.read.parquet(multi).schema
+
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table({"id": [1], "ts": pa.array([1_000_000_123], pa.timestamp("ns"))}),
+        nanos,
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        got = parquet_schema(spark, nanos)
+        assert got == spark.read.parquet(nanos).schema
+        assert got["ts"].dataType == LongType()
+        spark.conf.set(key, "false")
+        errors = []
+        for read in (lambda: parquet_schema(spark, nanos),
+                     lambda: spark.read.parquet(nanos).schema):
+            with pytest.raises(AnalysisException) as e:
+                read()
+            errors.append(e.value.getCondition())
+        assert errors == ["PARQUET_TYPE_ILLEGAL"] * 2
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_load_table_starts_no_job(spark, tmp_path):
+    """Loading the ten fixture tables from a path never loaded before
+    starts no Spark job: each schema is read from its parquet footer on
+    the driver, where inference ran one job per table."""
+    import shutil
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_DIRS[0], sf)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("load-table-probe", "load_table of ten fixture tables")
+        frames = [load_table(spark, sf, t) for t in TABLES]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(tracker.getJobIdsForGroup("load-table-probe")) == []
+    assert [f.dtypes for f in frames] == [SPARK_SCHEMA[t] for t in TABLES]
+
+
+def test_load_table_names_missing_path(spark, tmp_path):
+    """A missing fixture and a dataset dir holding no data file (only
+    ``_SUCCESS`` and its ``.crc``) raise ``FileNotFoundError`` naming
+    the path, not a Spark analysis error."""
+    sf = str(tmp_path)
+    with pytest.raises(FileNotFoundError, match="events.parquet"):
+        load_table(spark, sf, "events")
+    empty = tmp_path / "orders.parquet"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    (empty / "._SUCCESS.crc").write_bytes(b"")
+    with pytest.raises(FileNotFoundError, match="no data file in .*orders.parquet"):
+        load_table(spark, sf, "orders")
+
+
 def test_schema_cache_invalidated_on_in_place_regeneration(spark, tmp_path):
-    """r15 (ADVICE r14): the per-process schema cache keys on the file
-    mtime, so a fixture regenerated IN PLACE (contract violation, but
-    nothing enforces it) re-infers instead of serving a stale schema."""
+    """A fixture regenerated IN PLACE (a contract violation nothing
+    enforces) is read with its new schema: every load reads the
+    current footer, so there is no stored schema to go stale."""
     import os
     import time
 
@@ -235,10 +326,10 @@ def test_schema_cache_invalidated_on_in_place_regeneration(spark, tmp_path):
 
 
 def test_schema_cache_sees_part_file_overwritten_in_place(spark, tmp_path):
-    """A part file overwritten under its OLD name leaves the dataset
-    dir's mtime alone (no entry added, removed or renamed); the cache
-    key follows the newest part-file mtime, so the new schema is
-    inferred instead of the stale one being forced onto the file."""
+    """A part file overwritten under its OLD name, which leaves the
+    dataset dir's mtime alone (no entry added, removed or renamed), is
+    read with its new schema and values: the schema comes from the
+    file's current footer, not an old one forced onto the file."""
     import os
     import time
 

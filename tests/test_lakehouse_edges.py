@@ -198,6 +198,41 @@ def test_local_frame_collect_starts_no_job(spark):
     assert list(tracker.getJobIdsForGroup("python-rdd-probe")) != []
 
 
+def test_sidecar_reads_start_no_job(spark, tmp_path):
+    """Building ``table_changes`` over three merge sidecars and one
+    deletion-vector delete sidecar, and building a read through the
+    deletion vector, start no Spark job: each sidecar's schema comes
+    from its parquet footer, not from an inference job per sidecar."""
+    t = LakehouseTable(spark, str(tmp_path), "s", "cdf_dv")
+    ddl = "k int, v string"
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(6)], ddl))
+    t.enable_change_feed()
+    for r in range(3):
+        t.merge(spark.createDataFrame([(r, f"m{r}")], ddl), ["k"])
+    t.delete(F.col("k") == 5, deletion_vectors=True)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("table-changes-probe", "table_changes build")
+        feed = t.table_changes(0)
+        sc.setJobGroup("dv-read-probe", "read build")
+        live = t.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(tracker.getJobIdsForGroup("table-changes-probe")) == []
+    assert list(tracker.getJobIdsForGroup("dv-read-probe")) == []
+    assert sorted(tuple(r) for r in live.collect()) == [
+        (0, "m0"), (1, "m1"), (2, "m2"), (3, "v3"), (4, "v4"),
+    ]
+    got = sorted(tuple(r) for r in feed.collect())
+    assert got == [
+        (2, "update_postimage", 0, "m0"), (2, "update_preimage", 0, "v0"),
+        (3, "update_postimage", 1, "m1"), (3, "update_preimage", 1, "v1"),
+        (4, "update_postimage", 2, "m2"), (4, "update_preimage", 2, "v2"),
+        (5, "delete", 5, "v5"),
+    ]
+
+
 def _data_files(t):
     return sorted(
         os.path.relpath(os.path.join(dp, fn), t.data_root)
