@@ -19,6 +19,8 @@ faithful audit of who materialises what.
 Size-driven plan choices read the optimizer's estimate through
 :func:`plan_bytes`, and parquet reads take their schema from
 :func:`parquet_schema`: both are driver-side metadata and start no job.
+Only a partitioned dir is read by inference, which also discovers its
+partition columns (:func:`parquet_schema` reads top-level files).
 
 The opposite direction — driver rows back into a DataFrame — goes
 through :func:`local_frame`, the package's only ``createDataFrame``

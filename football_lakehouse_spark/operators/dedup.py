@@ -8,8 +8,10 @@ bounded by ``CONTROL_PLANE_BOUND`` edges.
 Portability: hash functions are sha256-prefix integers
 (functions.text.portable_hash) so every stage — minhash signatures,
 band buckets, candidate pairs, verified Jaccard — is reproducible in
-DuckDB for the correctness oracle. At 100 TB you'd swap the sha-based
-hash for xxhash64 (same topology, one line) — the plan shape is the
+DuckDB for the correctness oracle. ``hash_impl="xxhash64"`` on
+:func:`doc_profiles`, :func:`band_buckets` and
+:func:`minhash_lsh_neardups` swaps in the JVM-intrinsic hash (same
+topology, not DuckDB-reproducible; q71 uses it) — the plan shape is the
 scale-relevant part:
 
     docs → explode shingles                     (no shuffle)
@@ -311,7 +313,6 @@ def minhash_lsh_neardups(
     text_col: str = "text",
     hash_impl: str = "sha256",
     max_bucket_size: int | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → fused per-doc profile (minhash
     signature + distinct shingle set, ONE shuffle) → band → bucket join
@@ -319,33 +320,29 @@ def minhash_lsh_neardups(
     (doc_a, doc_b, n_common, jaccard).
 
     The profile table feeds three downstream consumers (banding + both
-    verify sides); without persistence Spark recomputes the
-    explode+hash+agg lineage per consumer — at corpus scale that's 2
-    extra full corpus scans. MEMORY_AND_DISK matches the checkpoint a
-    production pipeline would put here. ``persist=False`` skips both
-    caches: DataFrame persists live in the session's CacheManager until
-    explicitly unpersisted, so per-batch composers in a long-lived
-    session should opt out (or manage the cache themselves). Re-expresses the reference's
-    declared near-dup surface (docs/backlog.md:49-51 MERGE dedupe is
-    exact-key; this is the content-similarity extension)."""
+    verify sides) and the candidate pairs two, so both are persisted
+    MEMORY_AND_DISK — the checkpoint a production pipeline would put
+    here; without it Spark recomputes the explode+hash+agg lineage per
+    consumer, 2 extra full corpus scans. The caches live in the
+    session's CacheManager until the caller unpersists them.
+    ``hash_impl`` picks the shingle hash (:func:`doc_profiles`).
+    Re-expresses the reference's declared near-dup surface
+    (docs/backlog.md:49-51 MERGE dedupe is exact-key; this is the
+    content-similarity extension)."""
     from pyspark import StorageLevel
 
-    profiles = doc_profiles(docs, id_col, text_col, hash_impl)
-    if persist:
-        profiles = profiles.persist(StorageLevel.MEMORY_AND_DISK)
+    profiles = doc_profiles(docs, id_col, text_col, hash_impl).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     sigs = profiles.select(id_col, *[f"mh{k}" for k in range(N_MINHASH)])
-    # candidates feed two downstream probes — persist so each reads the
-    # cached rows instead of re-running the banding join
     cands = candidate_pairs(
         band_buckets(sigs, id_col, hash_impl), id_col, max_bucket_size
-    )
-    if persist:
-        cands = cands.persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     return verified_jaccard_profiles(cands, profiles, threshold, id_col)
 
 
 def neardup_clusters(
-    pairs: DataFrame, max_edges: int = CONTROL_PLANE_BOUND, lp_rounds: int = 3
+    pairs: DataFrame, max_edges: int = CONTROL_PLANE_BOUND
 ) -> DataFrame:
     """Connected components over near-dup pairs → cluster assignment
     (doc_id, cluster_id, is_canonical), cluster_id = min doc_id in the
@@ -360,16 +357,18 @@ def neardup_clusters(
     ``CONTROL_PLANE_BOUND``), a driver union-find with min-id roots,
     and the assignment returned through ``local_frame`` — one collect
     where each distributed round costs several jobs. Past ``max_edges``,
-    :func:`_distributed_clusters` computes them on the cluster
-    (``lp_rounds`` is its label-propagation prelude). Both paths are
-    property-tested equal to the plain label-propagation and
-    large-star/small-star test oracles."""
+    :func:`_star_clusters` runs alternating large-star/small-star
+    rounds on the cluster: O(log n) rounds on any graph shape, and at
+    or above 25,600 edges at least as fast as a label-propagation
+    prelude (SCALING.md, star vs label-propagation crossover). Both
+    paths are property-tested equal to the label-propagation and
+    union-find test oracles (``tests/cc_oracles.py``)."""
     try:
         edges = bounded_collect(
             pairs.select("doc_a", "doc_b"), max_edges, "neardup_clusters edge list"
         )
     except CollectBoundExceeded:
-        return _distributed_clusters(pairs, lp_rounds)
+        return _star_clusters(pairs)
     parent: dict = {}
 
     def find(x):
@@ -390,73 +389,6 @@ def neardup_clusters(
         pairs.sparkSession,
         [(n, r, n == r) for n, r in roots.items()],
         f"doc_id {id_type}, cluster_id {id_type}, is_canonical boolean",
-    )
-
-
-def _lp_rounds(
-    pairs: DataFrame, rounds: int
-) -> tuple[DataFrame, DataFrame, bool]:
-    """Min-label propagation — the prelude of :func:`_distributed_clusters`
-    and, run to convergence, the tests' oracle: symmetric-closure edges, identity labels, then up to ``rounds``
-    passes of every node adopting min(own, neighbour labels), each
-    round's state eagerly localCheckpoint-ed (a mere persist leaves the
-    full LSH lineage in every round's plan: 7–12 s/round vs 0.4 s
-    checkpointed at sf0.1). Returns ``(edges, labels, converged)``."""
-    half = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    edges = half.union(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for rnd in range(rounds):
-        if rnd == 0:
-            # round 1 shortcut (r14): labels are still the identity map
-            # (label(dst) = dst), so joining them onto edges is a
-            # no-op — min over the raw neighbour ids IS the first
-            # round's neighbour label. Saves one edge-sized shuffle
-            # join in the round every invocation pays.
-            nbr = edges.groupBy("src").agg(F.min("dst").alias("nbr_label"))
-        else:
-            nbr = (
-                edges.join(
-                    labels.select(F.col("node").alias("dst"), F.col("label").alias("dst_label")),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.min("dst_label").alias("nbr_label"))
-            )
-        stepped = (
-            labels.join(nbr.withColumnRenamed("src", "node"), "node", "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # convergence probe over the CHECKPOINTED rows: isEmpty stops at
-        # the first changed row instead of counting them all (r14; only
-        # the ==0 test was ever used)
-        no_change = stepped.where(F.col("label") < F.col("old_label")).isEmpty()
-        labels = stepped.select("node", "label")
-        if no_change:
-            converged = True
-            break
-    return edges, labels, converged
-
-
-def _cluster_output(labels: DataFrame) -> DataFrame:
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
     )
 
 
@@ -538,53 +470,20 @@ def _star_components(pairs: DataFrame, max_iters: int = 30) -> tuple[DataFrame, 
     raise RuntimeError(f"star components did not converge in {max_iters} rounds")
 
 
-def _distributed_clusters(pairs: DataFrame, lp_rounds: int) -> DataFrame:
-    """:func:`neardup_clusters` past its edge bound: a BOUNDED
-    min-label-propagation prelude — the measured winner on shallow pair
-    graphs (SCALING.md star-vs-LP crossover: LP 0.83 s vs star 1.54 s
-    on real LSH pairs; star 54× ahead on a 1000-chain) — escaping to
-    large-star/small-star on the label-CONTRACTED graph when the
-    prelude does not reach a fixed point. Shallow components pay LP's
-    price; adversarial chains pay ``lp_rounds`` cheap extra shuffles
-    and keep star's O(log n) ceiling.
-
-    Handoff correctness: after k LP rounds, ``label(n)`` is the minimum
-    doc id within graph distance k of n — always a node id inside n's
-    own component. Mapping each edge (u, v) to (label(u), label(v))
-    therefore contracts the graph without merging or splitting
-    components, and the component minimum m keeps ``label(m) = m``, so
-    star's min-root over the contracted graph IS the original
-    component minimum; composing node → label → star-root reproduces
-    the exact assignment.
-    """
-    edges, labels, converged = _lp_rounds(pairs, lp_rounds)
-    if converged:
-        return _cluster_output(labels)
-    # prelude hit its round budget → contract by current labels and
-    # finish with the O(log n) star rounds on the (much smaller) graph
-    contracted = (
-        edges.join(
-            labels.select(F.col("node").alias("src"), F.col("label").alias("a")),
-            "src",
-        )
-        .join(
-            labels.select(F.col("node").alias("dst"), F.col("label").alias("b")),
-            "dst",
-        )
-        .where(F.col("a") != F.col("b"))
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+def _star_clusters(pairs: DataFrame) -> DataFrame:
+    """:func:`neardup_clusters` past its edge bound: every node of the
+    pair graph, mapped to its component minimum by the star rounds
+    (a root has no star edge, so it maps to itself and is canonical)."""
+    star, _rounds = _star_components(pairs)
+    nodes = (
+        pairs.select(F.col("doc_a").alias("node"))
+        .union(pairs.select(F.col("doc_b").alias("node")))
+        .distinct()
     )
-    star, _rounds = _star_components(contracted)
-    root = star.select(F.col("src").alias("label"), F.col("dst").alias("root"))
-    return (
-        labels.join(root, "label", "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce(F.col("root"), F.col("label")).alias("cluster_id"),
-            (
-                F.col("node") == F.coalesce(F.col("root"), F.col("label"))
-            ).alias("is_canonical"),
-        )
+    return nodes.join(star.withColumnRenamed("src", "node"), "node", "left").select(
+        F.col("node").alias("doc_id"),
+        F.coalesce(F.col("dst"), F.col("node")).alias("cluster_id"),
+        F.col("dst").isNull().alias("is_canonical"),
     )
 
 
@@ -667,8 +566,6 @@ def incremental_neardups(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_impl: str = "sha256",
-    persist: bool = True,
 ) -> DataFrame:
     """Near-dups of an ARRIVING batch against an EXISTING corpus —
     the incremental form of :func:`minhash_lsh_neardups`. Returns
@@ -678,11 +575,11 @@ def incremental_neardups(
     even when a doc exists in both inputs; a doc arriving with changed
     text is verified against its BATCH profile (re-arrival = update).
 
-    ``persist=False`` skips the MEMORY_AND_DISK caching of the two
-    profile tables: DataFrame persists live in the session's
-    CacheManager until explicitly unpersisted, so a long-lived composer
-    calling this per batch should either pass False (recompute is one
-    scan) or manage the cache itself.
+    Both profile tables feed the banding and the verify sides, so they
+    are persisted MEMORY_AND_DISK, as in :func:`minhash_lsh_neardups`;
+    the caches live in the session's CacheManager until the caller
+    unpersists them. Shingles hash with sha256, the default of
+    :func:`doc_profiles`.
 
     Why it matters at 100 TB: when a batch lands you must not re-pair
     the corpus against itself (that work is already done); the only new
@@ -698,14 +595,15 @@ def incremental_neardups(
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    corpus_profiles = doc_profiles(corpus, id_col, text_col, hash_impl)
-    batch_profiles = doc_profiles(batch, id_col, text_col, hash_impl)
-    if persist:
-        corpus_profiles = corpus_profiles.persist(StorageLevel.MEMORY_AND_DISK)
-        batch_profiles = batch_profiles.persist(StorageLevel.MEMORY_AND_DISK)
+    corpus_profiles = doc_profiles(corpus, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    batch_profiles = doc_profiles(batch, id_col, text_col).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     mh_cols = [f"mh{k}" for k in range(N_MINHASH)]
-    cb = band_buckets(corpus_profiles.select(id_col, *mh_cols), id_col, hash_impl)
-    bb = band_buckets(batch_profiles.select(id_col, *mh_cols), id_col, hash_impl)
+    cb = band_buckets(corpus_profiles.select(id_col, *mh_cols), id_col)
+    bb = band_buckets(batch_profiles.select(id_col, *mh_cols), id_col)
     bb_b = bb.select("band_id", "band_key", F.col(id_col).alias("doc_b"))
     batch_ids = bb.select(F.col(id_col).alias("doc_a")).distinct()
     cands_cross = (

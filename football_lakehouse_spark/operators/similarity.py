@@ -513,7 +513,7 @@ def _lloyd_on_driver(
     if n < n_cells:
         raise ValueError(
             f"kmeans_cells: training set has {n} vectors "
-            f"< n_cells={n_cells} — lower train_sample_mod"
+            f"< n_cells={n_cells}"
         )
     ids = tbl.column(id_out).to_pylist()
     qv = tbl.column("qvec").combine_chunks()
@@ -560,7 +560,7 @@ def _lloyd_on_driver(
 def kmeans_cells(
     corpus: DataFrame, n_cells: int = 16, iters: int = 2,
     id_col: str = "vec_id", vec_col: str = "embedding", id_out: str = "vec_id",
-    normalize: bool = False, train_sample_mod: int | None = None,
+    normalize: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """DETERMINISTIC k-means coarse quantiser shared by IVF ANN (q51)
     and semantic dedup (q101): returns ``(assignments, centroids)``
@@ -576,20 +576,6 @@ def kmeans_cells(
     per-partition RNG streams and yields different centers under
     different input partitionings.
 
-    ``train_sample_mod``: when set, the Lloyd ROUNDS (init, per-round
-    assignment, centroid updates) run on the deterministic hash-gated
-    sample ``xxhash64(id) % mod == 0`` (~1/mod of the corpus) instead
-    of the whole corpus; the RETURNED assignment is still one full
-    pass of every vector against the sample-trained centroids. This is
-    how production indexes train (FAISS trains the coarse quantiser on
-    a bounded sample) and it is what bounds the BUILD cost: a flat
-    quantiser's per-round cost is rows×n_cells d² folds, which at the
-    fixed-cell-size operating point (n_cells ∝ corpus) makes
-    full-corpus training quadratic — measured 616 s for 200k vectors ×
-    1,600 cells in SCALING.md round 8, vs seconds sampled. Default
-    None keeps exact full-corpus training — the oracle-matching form
-    every registered query uses.
-
     Scale contract: the rounds run on the DRIVER while the quantised
     training set fits ``_LLOYD_DRIVER_MAX_BYTES`` (train rows × dim ×
     8 B): one bounded Arrow collect, then seeding and every Lloyd
@@ -602,7 +588,7 @@ def kmeans_cells(
     one NARROW pass against driver-held centroids, and each round's
     centroid update explodes the already-assigned rows by component
     and partial-aggregates map-side, so the only exchange per round
-    carries ≈ n_cells×dim×n_tasks partial rows — never the sample.
+    carries ≈ n_cells×dim×n_tasks partial rows — never the corpus.
     Both paths give identical centroids (forced-bound tests). Centroid
     sums stay exact below 2^53 (qx ≤ 1e6 per component → safe past 1e9
     members per cell). Either way the returned assignment is the lazy
@@ -619,13 +605,6 @@ def kmeans_cells(
     """
     spark = corpus.sparkSession
 
-    def training(df: DataFrame) -> DataFrame:
-        if train_sample_mod is not None and train_sample_mod > 1:
-            return df.where(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(train_sample_mod)) == 0
-            )
-        return df
-
     def quantised(df: DataFrame) -> DataFrame:
         # the exact space the kernel's d² runs in
         return df.select(
@@ -641,21 +620,18 @@ def kmeans_cells(
             normalize=normalize, keep_qvec=keep_qvec,
         )
 
-    crows = _lloyd_on_driver(quantised(training(corpus)), n_cells, iters, id_out)
+    crows = _lloyd_on_driver(quantised(corpus), n_cells, iters, id_out)
     if crows is None:
         # past the driver bound: the rounds run on Spark. Embedding
         # tables pack many rows per file split and every round is
         # CPU-bound → spread the corpus across executors first (same
-        # rationale as brute_force_topk). The training set is the
-        # working set of EVERY round (the seed collect, then one
-        # assignment pass + centroid update per round) — persist it
-        # once so each round reads the cached rows instead of
-        # re-scanning and re-decoding the source parquet
+        # rationale as brute_force_topk). The corpus is the working
+        # set of EVERY round (the seed collect, then one assignment
+        # pass + centroid update per round) — persist it once so each
+        # round reads the cached rows instead of re-scanning and
+        # re-decoding the source parquet
         par = spark.sparkContext.defaultParallelism
-        spread = corpus.repartition(par).persist()
-        train = training(spread)
-        if train is not spread:
-            train = train.persist()
+        train = corpus.repartition(par).persist()
         try:
             # init seeds: the n_cells lowest-id QUANTISED training
             # vectors, cell = 0..n_cells-1 in id order (control-plane:
@@ -668,7 +644,7 @@ def kmeans_cells(
             if len(seed_rows) < n_cells:
                 raise ValueError(
                     f"kmeans_cells: training set has {len(seed_rows)} vectors "
-                    f"< n_cells={n_cells} — lower train_sample_mod"
+                    f"< n_cells={n_cells}"
                 )
             for r in seed_rows:
                 if r["qvec"] is None:
@@ -706,12 +682,10 @@ def kmeans_cells(
                     )
                 )
         finally:
-            # both caches are consumed by the rounds (or the rounds
+            # the cache is consumed by the rounds (or the rounds
             # failed): the returned lazy assignment reads the caller's
             # corpus, not the spread copy
-            if train is not spread:
-                train.unpersist()
-            spread.unpersist()
+            train.unpersist()
     # the returned centroid TABLE is built once, from the final rows
     # (cell/pos-sorted for a deterministic frame). coalesce(1): the
     # local frame otherwise parallelizes into defaultParallelism slices

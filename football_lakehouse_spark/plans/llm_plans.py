@@ -8389,9 +8389,10 @@ _SQL_SPAN_TRIM_TAIL = """sp AS (SELECT doc_id,
     doc="STREAMING span dedup (r10): the span-index lifecycle wired "
     "into Structured Streaming — documents arrive in three waves "
     "(doc_id % 3, landed and drained as separate availableNow runs "
-    "over one checkpoint); each micro-batch probes the persisted "
-    "span_key_index, appends its TRIMMED rewrite to the corpus sink, "
-    "and folds its new keys into the index via append_span_keys, so "
+    "over one checkpoint); each micro-batch probes the span-key index "
+    "table, appends its TRIMMED rewrite to the corpus table and folds "
+    "its new keys into the index, both commits exactly-once "
+    "(append_txn per epoch, so a replayed micro-batch is skipped), so "
     "wave 2 sees wave 0's and wave 1's passages without a rebuild — "
     "boilerplate never accumulates in the stored corpus. The oracle "
     "replays the wave semantics relationally: a position is duplicated "
@@ -8402,6 +8403,7 @@ _SQL_SPAN_TRIM_TAIL = """sp AS (SELECT doc_id,
 def streaming_span_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
+    from football_lakehouse_spark.lakehouse.tables import LakehouseTable
     from football_lakehouse_spark.scratch import scratch_dir
     from football_lakehouse_spark.streaming.ingest import span_dedup_stream
 
@@ -8409,14 +8411,14 @@ def streaming_span_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir("q291_streaming_span_dedup")
     landing = os.path.join(root, "landing")
     ckpt = os.path.join(root, "ckpt")
-    trimmed = os.path.join(root, "trimmed")
-    idx = os.path.join(root, "idx")
+    trimmed = LakehouseTable(spark, root, "silver", "trimmed_docs")
+    idx = LakehouseTable(spark, root, "silver", "span_keys")
     for wave in range(3):
         docs.where(F.col("doc_id") % 3 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(landing)
         span_dedup_stream(spark, landing, ckpt, trimmed, idx, n=5)
-    return spark.read.parquet(trimmed)
+    return trimmed.read()
 
 
 @query(

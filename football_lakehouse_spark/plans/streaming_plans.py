@@ -11,7 +11,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from football_lakehouse_spark.functions.guards import local_frame
+from football_lakehouse_spark.functions.guards import local_frame, parquet_schema
 from football_lakehouse_spark.functions.scalars import money_sum
 
 from football_lakehouse_spark.catalog import load_table
@@ -265,7 +265,11 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
-    return spark.read.parquet(out).select("purchase_id", "click_id", "gap_s")
+    return (
+        spark.read.schema(parquet_schema(spark, out))
+        .parquet(out)
+        .select("purchase_id", "click_id", "gap_s")
+    )
 
 
 @query(
@@ -350,7 +354,8 @@ def stateful_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final state per user = the row with the highest running count
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
-        spark.read.parquet(out)
+        spark.read.schema(parquet_schema(spark, out))
+        .parquet(out)
         .withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") == 1)
         .select(
@@ -409,7 +414,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
         .awaitTermination()
     )
-    return spark.read.parquet(out).select(
+    return spark.read.schema(parquet_schema(spark, out)).parquet(out).select(
         "event_id",
         "user_id",
         "event_type",
@@ -546,7 +551,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim.update(F.col("user_id") % 3 == 0, {"tier": F.lit("silver")})
     land_json_files(ev.where(F.col("event_id") % 2 == 1), landing)
     _drain()
-    return spark.read.parquet(out)
+    return spark.read.schema(parquet_schema(spark, out)).parquet(out)
 
 
 @query(
@@ -639,7 +644,7 @@ def rate_limited_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in os.listdir(os.path.join(ckpt, "commits"))
         if not f.startswith(".")
     ]
-    n_rows = spark.read.parquet(out).count()
+    n_rows = spark.read.schema(parquet_schema(spark, out)).parquet(out).count()
     return local_frame(
         spark, [(len(commits), n_rows)], "n_batches bigint, n_rows bigint"
     )

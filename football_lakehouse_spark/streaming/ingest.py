@@ -354,30 +354,32 @@ def append_stream_exactly_once(
     )
 
 
+# landed documents of :func:`span_dedup_stream`
+SPAN_DOC_SCHEMA = "doc_id BIGINT, text STRING"
+
+
 def span_dedup_stream(
     spark: SparkSession,
     landing_dir: str,
     checkpoint_dir: str,
-    trimmed_dir: str,
-    index_dir: str,
+    trimmed: LakehouseTable,
+    index: LakehouseTable,
     n: int = 5,
-    doc_schema: str = "doc_id BIGINT, text STRING",
-    trimmed_table: LakehouseTable | None = None,
-    index_table: LakehouseTable | None = None,
     app_id: str = "span-dedup-stream",
     keep_canonical: bool = False,
 ) -> None:
     """Streaming passage-level dedup — the span-index lifecycle
     (q283/q285/q289) wired into Structured Streaming: each micro-batch
-    of arriving documents (1) probes the persisted ``span_key_index``
+    of arriving documents (``SPAN_DOC_SCHEMA`` parquet under
+    ``landing_dir``) (1) probes the ``index`` table of shingle keys
     for spans duplicated against EVERYTHING already ingested (or
     within the batch itself — the batch can duplicate itself), (2)
-    appends the TRIMMED rewrite of the batch to the corpus sink, and
-    (3) folds the batch's genuinely-new shingle keys into the index
-    via ``append_span_keys`` — so later batches see this batch's
-    passages without ever rebuilding the index. This is the curation
-    topology at ingest time: boilerplate never ACCUMULATES in the
-    stored corpus, instead of being swept by periodic full-corpus
+    appends the TRIMMED rewrite of the batch to the ``trimmed`` table,
+    and (3) folds the batch's genuinely-new shingle keys into
+    ``index`` via ``append_span_keys`` — so later batches see this
+    batch's passages without ever rebuilding the index. This is the
+    curation topology at ingest time: boilerplate never ACCUMULATES in
+    the stored corpus, instead of being swept by periodic full-corpus
     span jobs.
 
     Per-batch cost is O(batch) plus one map-side SCAN of the key
@@ -385,23 +387,13 @@ def span_dedup_stream(
     growth soak in SCALING r10 shows flat per-batch cost across ten
     appends).
 
-    Delivery semantics, two shapes:
-
-    * plain-dir form (``trimmed_dir``/``index_dir``, the default) —
-      ``foreachBatch`` is at-least-once, so a batch replayed after a
-      sink failure re-appends its trimmed rows and index keys.
-      Duplicate index keys are semantically harmless (the probe is a
-      left-semi); duplicate trimmed rows are the price of the simple
-      form. Fine for the registry query, which drains each landing
-      wave exactly once under ``availableNow``.
-    * EXACTLY-ONCE form — pass ``trimmed_table`` and ``index_table``
-      (:class:`LakehouseTable`): both sinks commit via ``append_txn``
-      with (``app_id``, epoch), so a replayed micro-batch is detected
-      table-side and SKIPPED — no duplicate trimmed rows AND no
-      duplicate index keys, the production shape
-      (:func:`append_stream_exactly_once` is the generic primitive).
-      Pass both or neither: a half-transactional pair would desync the
-      corpus from its index on replay.
+    Exactly-once: both sinks commit via ``append_txn`` with
+    (``app_id``, epoch) — the index as ``<app_id>-index`` — so a
+    micro-batch replayed after a sink failure (``foreachBatch`` is
+    at-least-once) is detected table-side and SKIPPED: no duplicate
+    trimmed rows AND no duplicate index keys, and an epoch that
+    committed only its trimmed rows commits its index keys on replay
+    (:func:`append_stream_exactly_once` is the generic primitive).
 
     Trim semantics at the batch boundary (r10 review): with the
     default ``keep_canonical=False`` (Lee et al. remove-all), a
@@ -429,30 +421,16 @@ def span_dedup_stream(
         trim_duplicate_spans,
     )
 
-    if (trimmed_table is None) != (index_table is None):
-        raise ValueError(
-            "span_dedup_stream: pass BOTH trimmed_table and index_table "
-            "(exactly-once form) or NEITHER (plain-dir form) — a "
-            "half-transactional pair desyncs the corpus from its index "
-            "on micro-batch replay"
-        )
-    stream = spark.readStream.schema(doc_schema).parquet(landing_dir)
+    stream = spark.readStream.schema(SPAN_DOC_SCHEMA).parquet(landing_dir)
 
     def _sink(batch: DataFrame, epoch: int) -> None:
         s = batch.sparkSession
         batch.persist()
         release = None
         try:
-            if index_table is not None:
-                stored = (
-                    index_table.read()
-                    if index_table.exists()
-                    else local_frame(s, [], "k BIGINT")
-                )
-            elif os.path.isdir(index_dir):
-                stored = s.read.parquet(index_dir)
-            else:
-                stored = local_frame(s, [], "k BIGINT")
+            stored = (
+                index.read() if index.exists() else local_frame(s, [], "k BIGINT")
+            )
             spans, new_keys, release = span_probe_and_new_keys(
                 batch, stored, n=n, flag_corpus_overlap=keep_canonical
             )
@@ -471,21 +449,13 @@ def span_dedup_stream(
                         "text",
                     )
                 )
-                trimmed = trim_duplicate_spans(batch, trim_set)
+                out = trim_duplicate_spans(batch, trim_set)
             else:
-                trimmed = trim_duplicate_spans(batch, spans)
-            if trimmed_table is not None and index_table is not None:
-                trimmed_table.append_txn(
-                    trimmed, app_id=app_id, txn_version=int(epoch)
-                )
-                index_table.append_txn(
-                    new_keys,
-                    app_id=f"{app_id}-index",
-                    txn_version=int(epoch),
-                )
-            else:
-                trimmed.write.mode("append").parquet(trimmed_dir)
-                new_keys.write.mode("append").parquet(index_dir)
+                out = trim_duplicate_spans(batch, spans)
+            trimmed.append_txn(out, app_id=app_id, txn_version=int(epoch))
+            index.append_txn(
+                new_keys, app_id=f"{app_id}-index", txn_version=int(epoch)
+            )
         finally:
             if release is not None:
                 release()

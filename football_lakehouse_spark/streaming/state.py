@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from football_lakehouse_spark.functions.guards import parquet_schema
 from football_lakehouse_spark.functions.scalars import money_sum
 
 from football_lakehouse_spark.streaming.ingest import (
@@ -112,7 +113,9 @@ def read_windowed_counts(spark: SparkSession, out_dir: str) -> DataFrame:
     """Batch-read a windowed-counts sink, stripping flush-sentinel
     rows — the companion reader for
     :func:`run_windowed_counts_available_now` with ``flush_all=True``."""
-    return strip_flush_rows(spark.read.parquet(out_dir))
+    return strip_flush_rows(
+        spark.read.schema(parquet_schema(spark, out_dir)).parquet(out_dir)
+    )
 
 
 def land_flush_sentinel(

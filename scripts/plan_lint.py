@@ -113,7 +113,7 @@ COLLECT_ALLOW: dict[tuple[str, str], str] = {
         "1-row per-round merge winner (limit(1), n_merges-bounded)",
     ("operators/dedup.py", "neardup_clusters"):
         "verified pair-graph edge list for the driver union-find "
-        "(CONTROL_PLANE_BOUND edges; past it, the distributed fallback)",
+        "(CONTROL_PLANE_BOUND edges; past it, the star rounds)",
     ("operators/dedup.py", "_star_components"):
         "1-row per-round convergence fingerprint (count + hash sum)",
     ("operators/quality.py", "append_with_expectations"):

@@ -1,16 +1,14 @@
 """Connected-components reference forms, kept as test oracles for
 ``operators/dedup.neardup_clusters`` (a driver union-find under an edge
-bound, a distributed LP-prelude/star fallback past it).
+bound, large-star/small-star rounds past it).
 
 - :func:`label_propagation` — plain min-label propagation run to
-  convergence: rounds = component diameter.
-- :func:`star_clusters` — alternating large-star/small-star (Kiveris
-  et al., "Connected Components in MapReduce and Beyond"): O(log n)
-  rounds on any shape.
+  convergence: rounds = component diameter, so it is no production
+  fallback (SCALING.md, star vs label-propagation crossover).
 - :func:`union_find` — the min-id components of an edge list in pure
   Python, the ground truth the Spark forms are checked against.
 
-All three return the ``(doc_id, cluster_id, is_canonical)`` contract,
+Both return the ``(doc_id, cluster_id, is_canonical)`` contract,
 cluster_id = min doc id in the component.
 """
 
@@ -18,32 +16,51 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from football_lakehouse_spark.operators.dedup import (
-    _cluster_output,
-    _lp_rounds,
-    _star_components,
-)
-
 
 def label_propagation(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
-    _edges, labels, converged = _lp_rounds(pairs, max_iters)
-    if not converged:
-        raise RuntimeError(f"label propagation did not converge in {max_iters} rounds")
-    return _cluster_output(labels)
-
-
-def star_clusters(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
-    star, _rounds = _star_components(pairs, max_iters)
-    nodes = (
-        pairs.select(F.col("doc_a").alias("node"))
-        .union(pairs.select(F.col("doc_b").alias("node")))
+    """Symmetric-closure edges, identity labels, then passes of every
+    node adopting min(own, neighbour labels) until no label changes.
+    Each round's state is localCheckpoint-ed, so no round's plan carries
+    the previous rounds' lineage."""
+    half = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    edges = half.union(
+        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).localCheckpoint(eager=True)
+    labels = (
+        edges.select(F.col("src").alias("node"))
         .distinct()
+        .withColumn("label", F.col("node"))
+        .localCheckpoint(eager=True)
     )
-    return nodes.join(star.withColumnRenamed("src", "node"), "node", "left").select(
-        F.col("node").alias("doc_id"),
-        F.coalesce(F.col("dst"), F.col("node")).alias("cluster_id"),
-        F.col("dst").isNull().alias("is_canonical"),
-    )
+    for _ in range(max_iters):
+        nbr = (
+            edges.join(
+                labels.select(F.col("node").alias("dst"), F.col("label").alias("dst_label")),
+                "dst",
+            )
+            .groupBy("src")
+            .agg(F.min("dst_label").alias("nbr_label"))
+        )
+        stepped = (
+            labels.join(nbr.withColumnRenamed("src", "node"), "node", "left")
+            .select(
+                "node",
+                F.col("label").alias("old_label"),
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+                ).alias("label"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        no_change = stepped.where(F.col("label") < F.col("old_label")).isEmpty()
+        labels = stepped.select("node", "label")
+        if no_change:
+            return labels.select(
+                F.col("node").alias("doc_id"),
+                F.col("label").alias("cluster_id"),
+                (F.col("node") == F.col("label")).alias("is_canonical"),
+            )
+    raise RuntimeError(f"label propagation did not converge in {max_iters} rounds")
 
 
 def union_find(edges: list[tuple[int, int]]) -> list[tuple[int, int, bool]]:

@@ -348,29 +348,28 @@ def test_minhash_hash_impl_equivalent_topology(spark, docs):
 
 
 def test_star_components_equiv_label_propagation(spark, docs):
-    """The two distributed oracles — large-star/small-star and plain
-    label propagation — and the union-find entry point produce exactly
-    the same clustering on the fixture near-dup pairs."""
+    """The large-star/small-star fallback (forced with ``max_edges=1``),
+    the plain label-propagation oracle and the union-find entry point
+    produce exactly the same clustering on the fixture near-dup pairs."""
     from football_lakehouse_spark.operators.dedup import (
         minhash_lsh_neardups,
         neardup_clusters,
     )
-    from tests.cc_oracles import label_propagation, star_clusters
+    from tests.cc_oracles import label_propagation
 
     pairs = minhash_lsh_neardups(docs, 0.5).select("doc_a", "doc_b")
     lp = sorted(tuple(r) for r in label_propagation(pairs).collect())
-    star = sorted(tuple(r) for r in star_clusters(pairs).collect())
+    star = sorted(tuple(r) for r in neardup_clusters(pairs, max_edges=1).collect())
     assert lp == star
     assert lp == sorted(tuple(r) for r in neardup_clusters(pairs).collect())
     assert lp
 
 
 def test_hybrid_components_equiv_both_variants(spark, docs):
-    """Past its edge bound neardup_clusters falls back to the
-    LP-prelude/star-escape hybrid. On the shallow fixture graph the
-    fallback converges inside the prelude; with a one-round prelude it
-    must take the contraction/star path. Both must equal the driver
-    union-find and the label-propagation oracle."""
+    """Past its edge bound neardup_clusters falls back to the star
+    rounds. On the multi-hop clone clusters of the fixture graph the
+    fallback must equal the driver union-find and the
+    label-propagation oracle."""
     from football_lakehouse_spark.operators.dedup import (
         minhash_lsh_neardups,
         neardup_clusters,
@@ -383,22 +382,14 @@ def test_hybrid_components_equiv_both_variants(spark, docs):
     fallback = sorted(
         tuple(r) for r in neardup_clusters(pairs, max_edges=1).collect()
     )
-    # 1 prelude round cannot converge a graph that needs >1 (the fixture
-    # has multi-hop clone clusters); the contracted-star finish must
-    # reproduce the same assignment
-    forced = sorted(
-        tuple(r)
-        for r in neardup_clusters(pairs, max_edges=1, lp_rounds=1).collect()
-    )
-    assert lp == driver == fallback == forced
+    assert lp == driver == fallback
     assert lp
 
 
 def test_hybrid_components_chain_escapes_to_star(spark):
     """An adversarial 256-node chain must come out exact both on the
-    driver and through the fallback's contraction handoff: 3 LP rounds
-    shrink labels by ≤3 hops, the star finish resolves the rest — total
-    rounds stay O(log n), never O(diameter)."""
+    driver and through the star fallback, whose rounds stay O(log n),
+    never O(diameter)."""
     from football_lakehouse_spark.operators.dedup import neardup_clusters
 
     n = 256
@@ -416,10 +407,10 @@ def test_hybrid_components_chain_escapes_to_star(spark):
 
 def test_hybrid_components_disjoint_shapes(spark):
     """Mixed shapes through the driver path and the forced fallback:
-    component minima and canonical flags must match the star oracle
-    exactly."""
+    component minima and canonical flags must match the
+    label-propagation oracle exactly."""
     from football_lakehouse_spark.operators.dedup import neardup_clusters
-    from tests.cc_oracles import star_clusters
+    from tests.cc_oracles import label_propagation
 
     edges = (
         [(10, 11), (11, 12), (10, 12)]
@@ -429,20 +420,21 @@ def test_hybrid_components_disjoint_shapes(spark):
         + [(50, 51), (51, 52), (52, 53), (53, 54), (54, 55)]  # chain
     )
     df = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
-    star = sorted(tuple(r) for r in star_clusters(df).collect())
+    lp = sorted(tuple(r) for r in label_propagation(df).collect())
     driver = sorted(tuple(r) for r in neardup_clusters(df).collect())
     fallback = sorted(
-        tuple(r)
-        for r in neardup_clusters(df, max_edges=1, lp_rounds=1).collect()
+        tuple(r) for r in neardup_clusters(df, max_edges=1).collect()
     )
-    assert star == driver == fallback
+    assert lp == driver == fallback
 
 
 def test_star_components_log_rounds_on_chain(spark):
     """An adversarial 256-node chain (diameter 255) must converge in
     O(log n) star rounds — label propagation would need ~255."""
-    from football_lakehouse_spark.operators.dedup import _star_components
-    from tests.cc_oracles import star_clusters
+    from football_lakehouse_spark.operators.dedup import (
+        _star_components,
+        neardup_clusters,
+    )
 
     n = 256
     chain = spark.createDataFrame(
@@ -450,7 +442,7 @@ def test_star_components_log_rounds_on_chain(spark):
     )
     _, rounds = _star_components(chain)
     assert rounds <= 12, f"chain took {rounds} rounds (expected O(log n))"
-    out = star_clusters(chain).collect()
+    out = neardup_clusters(chain, max_edges=1).collect()
     assert len(out) == n
     assert all(r["cluster_id"] == 0 for r in out)
     assert sum(r["is_canonical"] for r in out) == 1
@@ -458,8 +450,9 @@ def test_star_components_log_rounds_on_chain(spark):
 
 def test_star_components_disjoint_shapes(spark):
     """Mixed shapes: two triangles, a star, an isolated pair — every
-    component gets its own min-id cluster with one canonical doc."""
-    from tests.cc_oracles import star_clusters
+    component gets its own min-id cluster with one canonical doc, on
+    the star fallback."""
+    from football_lakehouse_spark.operators.dedup import neardup_clusters
 
     edges = (
         [(10, 11), (11, 12), (10, 12)]          # triangle
@@ -469,7 +462,7 @@ def test_star_components_disjoint_shapes(spark):
     )
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
     got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
-           for r in star_clusters(pairs).collect()}
+           for r in neardup_clusters(pairs, max_edges=1).collect()}
     expect = {10: 10, 11: 10, 12: 10, 20: 20, 21: 20, 22: 20,
               30: 30, 31: 30, 32: 30, 33: 30, 40: 40, 41: 40}
     assert {k: v[0] for k, v in got.items()} == expect
@@ -988,42 +981,6 @@ def test_assign_cells_arrow_edge_errors(spark, emb):
             assign_cells(bad, cent).collect()
 
 
-def test_kmeans_sampled_training_contract(spark, emb):
-    """train_sample_mod (r8): Lloyd rounds train on the deterministic
-    hash-gated sample, but the RETURNED assignment still covers every
-    corpus vector; mod<=1 / None is bit-identical to exact training;
-    and an over-aggressive mod (sample < n_cells) fails loudly."""
-    import pytest as _pytest
-
-    from football_lakehouse_spark.operators.similarity import kmeans_cells
-
-    corpus = emb.where(F.col("vec_id") < 400)
-    n = corpus.count()
-
-    exact_a, exact_c = kmeans_cells(corpus, n_cells=8, iters=2)
-    same_a, same_c = kmeans_cells(corpus, n_cells=8, iters=2, train_sample_mod=1)
-    assert {(r.vec_id, r.cell) for r in exact_a.collect()} == {
-        (r.vec_id, r.cell) for r in same_a.collect()
-    }
-    assert sorted(map(tuple, exact_c.collect())) == sorted(
-        map(tuple, same_c.collect())
-    )
-
-    samp_a, samp_c = kmeans_cells(corpus, n_cells=8, iters=2, train_sample_mod=3)
-    rows = samp_a.collect()
-    assert len(rows) == n  # full-corpus assignment despite sampled training
-    assert len({r.vec_id for r in rows}) == n
-    assert {r.cell for r in rows} <= set(range(8))
-    # deterministic: a re-run reproduces the assignment exactly
-    samp_a2, _ = kmeans_cells(corpus, n_cells=8, iters=2, train_sample_mod=3)
-    assert {(r.vec_id, r.cell) for r in rows} == {
-        (r.vec_id, r.cell) for r in samp_a2.collect()
-    }
-
-    with _pytest.raises(ValueError, match="train_sample_mod"):
-        kmeans_cells(corpus, n_cells=256, iters=1, train_sample_mod=1000)
-
-
 def _kmeans_both_paths(monkeypatch, corpus, **kw):
     """``kmeans_cells`` on its driver tier, then with the driver bound
     forced to 0 so the Spark rounds run: each path's sorted assignment
@@ -1056,9 +1013,8 @@ def _kmeans_both_paths(monkeypatch, corpus, **kw):
     [
         {"normalize": False},
         {"normalize": True},
-        {"normalize": False, "train_sample_mod": 3},
     ],
-    ids=["raw", "normalized", "sampled"],
+    ids=["raw", "normalized"],
 )
 def test_kmeans_driver_rounds_equal_spark_rounds(spark, emb, monkeypatch, kw):
     """The driver-tier Lloyd rounds and the Spark rounds past the bound
@@ -1131,16 +1087,16 @@ def test_kmeans_both_paths_raise_named_errors(
 
 def test_kmeans_spark_rounds_leave_no_cache(spark, emb, monkeypatch):
     """Past the driver bound the Spark rounds persist the repartitioned
-    corpus (and the sampled training set); kmeans_cells unpersists both
-    before it returns, so training twice on one corpus leaves the
-    session's persistent RDDs no more numerous than before."""
+    corpus; kmeans_cells unpersists it before it returns, so training
+    twice on one corpus leaves the session's persistent RDDs no more
+    numerous than before."""
     from football_lakehouse_spark.operators import similarity
 
     monkeypatch.setattr(similarity, "_LLOYD_DRIVER_MAX_BYTES", 0)
     persistent = spark.sparkContext._jsc.getPersistentRDDs
     before = len(persistent())
-    for kw in ({}, {"train_sample_mod": 3}):
-        assignment, _ = similarity.kmeans_cells(emb, n_cells=4, iters=1, **kw)
+    for _ in range(2):
+        assignment, _ = similarity.kmeans_cells(emb, n_cells=4, iters=1)
         assert assignment.count() == emb.count()
         assert len(persistent()) <= before
 

@@ -524,12 +524,13 @@ def test_span_dedup_stream_waves_and_rerun(spark, tmp_path):
     rows, no index growth)."""
     import os
 
+    from football_lakehouse_spark.lakehouse.tables import LakehouseTable
     from football_lakehouse_spark.streaming.ingest import span_dedup_stream
 
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
-    trimmed = str(tmp_path / "trimmed")
-    idx = str(tmp_path / "idx")
+    trimmed = LakehouseTable(spark, str(tmp_path / "lake"), "silver", "trimmed")
+    idx = LakehouseTable(spark, str(tmp_path / "lake"), "silver", "idx")
 
     boiler = "b1 b2 b3 b4 b5"
     waves = [
@@ -547,19 +548,19 @@ def test_span_dedup_stream_waves_and_rerun(spark, tmp_path):
         span_dedup_stream(spark, landing, ckpt, trimmed, idx, n=5)
 
     got = {r.doc_id: (r.text, r.n_tokens_removed)
-           for r in spark.read.parquet(trimmed).collect()}
+           for r in trimmed.read().collect()}
     assert got == {
         1: (boiler + " u1 u2", 0),  # first occurrence: nothing to probe
         2: ("v1", 5),
         3: ("w1 w2 w3 w4 w5 w6", 0),
         4: ("x1", 5),
     }
-    n_idx = spark.read.parquet(idx).count()
+    n_idx = idx.read().count()
 
     # rerun with nothing new landed: checkpoint makes it a no-op
     span_dedup_stream(spark, landing, ckpt, trimmed, idx, n=5)
-    assert spark.read.parquet(trimmed).count() == 4
-    assert spark.read.parquet(idx).count() == n_idx
+    assert trimmed.read().count() == 4
+    assert idx.read().count() == n_idx
     assert os.path.isdir(ckpt)
 
 
@@ -567,10 +568,7 @@ def test_span_dedup_stream_exactly_once_tables(spark, tmp_path):
     """The exactly-once form: trimmed corpus and index commit via
     append_txn, so a REPLAYED micro-batch (same epoch, fresh
     checkpoint over the same landing) is skipped table-side — no
-    duplicate trimmed rows AND no duplicate index keys. Also pins the
-    pass-both-or-neither validation."""
-    import pytest
-
+    duplicate trimmed rows AND no duplicate index keys."""
     from football_lakehouse_spark.lakehouse.tables import LakehouseTable
     from football_lakehouse_spark.streaming.ingest import span_dedup_stream
 
@@ -579,20 +577,13 @@ def test_span_dedup_stream_exactly_once_tables(spark, tmp_path):
     trimmed_t = LakehouseTable(spark, root, "silver", "trimmed_docs")
     index_t = LakehouseTable(spark, root, "silver", "span_keys")
 
-    with pytest.raises(ValueError, match="BOTH trimmed_table and index_table"):
-        span_dedup_stream(
-            spark, landing, str(tmp_path / "ck0"), "", "",
-            trimmed_table=trimmed_t,
-        )
-
     boiler = "b1 b2 b3 b4 b5"
     spark.createDataFrame(
         [(1, boiler + " u1"), (2, "v1 " + boiler)],
         "doc_id long, text string",
     ).coalesce(1).write.mode("append").parquet(landing)
     span_dedup_stream(
-        spark, landing, str(tmp_path / "ck1"), "", "",
-        trimmed_table=trimmed_t, index_table=index_t,
+        spark, landing, str(tmp_path / "ck1"), trimmed_t, index_t
     )
     got = {r.doc_id: (r.text, r.n_tokens_removed)
            for r in trimmed_t.read().collect()}
@@ -604,8 +595,7 @@ def test_span_dedup_stream_exactly_once_tables(spark, tmp_path):
     # simulate a replay: a FRESH checkpoint re-reads the same landing
     # and re-runs epoch 0 — append_txn must skip both sinks
     span_dedup_stream(
-        spark, landing, str(tmp_path / "ck2"), "", "",
-        trimmed_table=trimmed_t, index_table=index_t,
+        spark, landing, str(tmp_path / "ck2"), trimmed_t, index_t
     )
     assert trimmed_t.read().count() == 2
     assert index_t.read().count() == n_keys
@@ -643,8 +633,7 @@ def test_span_dedup_stream_crash_between_sink_commits(spark, tmp_path):
     index_t.append_txn = crashing_append_txn  # instance attribute shadows
     with pytest.raises(Exception, match="injected crash"):
         span_dedup_stream(
-            spark, landing, ckpt, "", "",
-            trimmed_table=trimmed_t, index_table=index_t,
+            spark, landing, ckpt, trimmed_t, index_t
         )
     del index_t.append_txn  # restore the real bound method
     # half-committed epoch: trimmed landed, index did not
@@ -655,8 +644,7 @@ def test_span_dedup_stream_crash_between_sink_commits(spark, tmp_path):
     # restart on the SAME checkpoint: the epoch replays — trimmed
     # skips (txn already committed), index commits
     span_dedup_stream(
-        spark, landing, ckpt, "", "",
-        trimmed_table=trimmed_t, index_table=index_t,
+        spark, landing, ckpt, trimmed_t, index_t
     )
     got = {r.doc_id: (r.text, r.n_tokens_removed)
            for r in trimmed_t.read().collect()}
@@ -669,8 +657,7 @@ def test_span_dedup_stream_crash_between_sink_commits(spark, tmp_path):
         [(3, boiler + " z1")], "doc_id long, text string"
     ).coalesce(1).write.mode("append").parquet(landing)
     span_dedup_stream(
-        spark, landing, ckpt, "", "",
-        trimmed_table=trimmed_t, index_table=index_t,
+        spark, landing, ckpt, trimmed_t, index_t
     )
     got = {r.doc_id: (r.text, r.n_tokens_removed)
            for r in trimmed_t.read().collect()}
@@ -688,6 +675,7 @@ def test_span_dedup_stream_keep_canonical_boundary_invariant(spark, tmp_path):
     the lowest (doc_id, span_start) occurrence, matching the
     cross-batch first-arrival-survives rule. The default remove-all
     form is batch-boundary DEPENDENT by design (documented)."""
+    from football_lakehouse_spark.lakehouse.tables import LakehouseTable
     from football_lakehouse_spark.streaming.ingest import span_dedup_stream
 
     boiler = "b1 b2 b3 b4 b5"
@@ -695,8 +683,9 @@ def test_span_dedup_stream_keep_canonical_boundary_invariant(spark, tmp_path):
 
     def run(tag, waves):
         landing = str(tmp_path / f"landing_{tag}")
-        trimmed = str(tmp_path / f"trimmed_{tag}")
-        idx = str(tmp_path / f"idx_{tag}")
+        lake = str(tmp_path / f"lake_{tag}")
+        trimmed = LakehouseTable(spark, lake, "silver", "trimmed")
+        idx = LakehouseTable(spark, lake, "silver", "idx")
         ckpt = str(tmp_path / f"ck_{tag}")
         for wave in waves:
             spark.createDataFrame(
@@ -707,7 +696,7 @@ def test_span_dedup_stream_keep_canonical_boundary_invariant(spark, tmp_path):
                 keep_canonical=True,
             )
         return {r.doc_id: (r.text, r.n_tokens_removed)
-                for r in spark.read.parquet(trimmed).collect()}
+                for r in trimmed.read().collect()}
 
     together = run("one", [rows])
     split = run("two", [[rows[0]], [rows[1]]])
@@ -724,6 +713,7 @@ def test_span_dedup_stream_keep_canonical_adjacent_content(spark, tmp_path):
     loss — its keys still fold into the index). With the split, B trims
     everywhere, N keeps exactly one canonical — and the one-batch vs
     two-batch corpora are identical."""
+    from football_lakehouse_spark.lakehouse.tables import LakehouseTable
     from football_lakehouse_spark.streaming.ingest import span_dedup_stream
 
     b = "b1 b2 b3 b4 b5 b6"
@@ -733,8 +723,9 @@ def test_span_dedup_stream_keep_canonical_adjacent_content(spark, tmp_path):
 
     def run(tag, waves):
         landing = str(tmp_path / f"landing_{tag}")
-        trimmed = str(tmp_path / f"trimmed_{tag}")
-        idx = str(tmp_path / f"idx_{tag}")
+        lake = str(tmp_path / f"lake_{tag}")
+        trimmed = LakehouseTable(spark, lake, "silver", "trimmed")
+        idx = LakehouseTable(spark, lake, "silver", "idx")
         ckpt = str(tmp_path / f"ck_{tag}")
         for wave in waves:
             spark.createDataFrame(
@@ -745,7 +736,7 @@ def test_span_dedup_stream_keep_canonical_adjacent_content(spark, tmp_path):
                 keep_canonical=True,
             )
         return {r.doc_id: (r.text, r.n_tokens_removed)
-                for r in spark.read.parquet(trimmed).collect()}
+                for r in trimmed.read().collect()}
 
     expect = {
         100: (b, 0),     # the corpus doc itself arrives first, untouched
